@@ -908,15 +908,34 @@ object Dedup {
     clustersFromPairs(corpus, minhashBandedCandidates(corpus), iters)
 
   /** Min-label propagation over an (a_id, b_id) pair list (shared by the
-    * exact-Jaccard and banded-candidate cluster operators). */
+    * exact-Jaccard and banded-candidate cluster operators).
+    *
+    * Driver finish: the pair count comes from the one job that
+    * materializes the pair checkpoint, and a list of at most
+    * `driverMaxEdges` pairs (default [[starBroadcastMaxEdges]]) is
+    * collected once and labelled by [[driverComponents]] — near-dup pair
+    * lists are that small at bench scale, where the rounds below were
+    * mostly scheduling. Label propagation never shrinks the edge set, so
+    * past the bound every round runs distributed. A negative
+    * `driverMaxEdges` pins the distributed loop (spec seam). */
   private[graft] def clustersFromPairs(corpus: DataFrame, pairSrc: DataFrame,
-                                iters: Int): DataFrame = {
-    // localCheckpoint (eager), not persist: each round self-joins the
+                                iters: Int,
+                                driverMaxEdges: Long = starBroadcastMaxEdges): DataFrame = {
+    // localCheckpoint, not persist: each round self-joins the
     // previous labels, and cache lookup misses on the deduplicated
     // self-join subtrees — lineage then doubles per round (measured
     // 0.7s → 36s by round 6). Physical truncation keeps every round O(1).
     // pairs first, so the two union branches don't each recompute them.
-    val pairs = pairSrc.select(col("a_id"), col("b_id")).localCheckpoint()
+    // The count is the one job an eager checkpoint would run anyway (an
+    // RDD count: no aggregate exchange); it also sizes the driver-finish
+    // guard.
+    val pairs = pairSrc.select(col("a_id"), col("b_id")).localCheckpoint(eager = false)
+    val nPairs = pairs.queryExecution.toRdd.count()
+    if (nPairs <= driverMaxEdges) driverComponents(corpus, pairs, nPairs)
+    else minLabelRounds(corpus, pairs, iters)
+  }
+
+  private def minLabelRounds(corpus: DataFrame, pairs: DataFrame, iters: Int): DataFrame = {
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
     // only docs that appear in a candidate pair can change label — the
@@ -960,10 +979,7 @@ object Dedup {
     }
     require(converged,
       s"label propagation did not converge within $iters rounds — component diameter exceeds the bound")
-    val isolated = corpus.select(col("doc_id")).distinct()
-      .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .withColumn("cluster", col("doc_id"))
-    labels.unionByName(isolated).orderBy("doc_id")
+    withIsolated(corpus, labels)
   }
 
   /** Web-scale connected components: alternating large-star / small-star
@@ -982,9 +998,18 @@ object Dedup {
     * The fixpoint is a star forest — every non-root points directly at
     * its component's min id — detected as an unchanged edge set, counted
     * in the same action that materializes the round's lazy checkpoint
-    * (the [[clustersFromPairs]] single-action-per-round discipline). */
+    * (the [[clustersFromPairs]] single-action-per-round discipline).
+    *
+    * Driver finish: rounds run only while the edge count, which every
+    * fingerprint already carries, is above `driverMaxEdges` (default
+    * [[starBroadcastMaxEdges]]). Once it is at or under the bound — at
+    * bench scale before the first round, at scale after the data-sized
+    * rounds have contracted dense components — the edge set is
+    * collected once and [[driverComponents]] finishes the labelling. A
+    * negative `driverMaxEdges` pins the distributed loop (spec seam). */
   private[graft] def clustersFromPairsLargeSmallStar(
-      corpus: DataFrame, pairSrc: DataFrame, iters: Int = 30): DataFrame = {
+      corpus: DataFrame, pairSrc: DataFrame, iters: Int = 30,
+      driverMaxEdges: Long = starBroadcastMaxEdges): DataFrame = {
     // convergence fingerprint: (count, sum of xxhash64(u,v)) computed in
     // ONE aggregate job. Equal fingerprints across a round ⇒ the edge
     // SET is unchanged for this domain: edges are distinct, so the only
@@ -1016,7 +1041,7 @@ object Dedup {
     var edgeFp = fingerprint(edges)
     var converged = false
     var round = 0
-    while (!converged && round < iters) {
+    while (!converged && edgeFp._1 > driverMaxEdges && round < iters) {
       val nbrs = edges.select(col("u").as("ctr"), col("v").as("nbr"))
         .unionByName(edges.select(col("v").as("ctr"), col("u").as("nbr")))
       // r13: the two per-round min frames are NODE-bounded (one row per
@@ -1035,7 +1060,9 @@ object Dedup {
       // hint on the round's edge count, which the convergence
       // fingerprint already computed (zero extra jobs): nodes ≤
       // 2·edges, so ≤1e6 edges bounds both min frames well under the
-      // broadcast cap; larger graphs leave the strategy to AQE.
+      // broadcast cap; larger graphs leave the strategy to AQE. Under
+      // the default driver-finish bound (the same 1e6) rounds only run
+      // past the gate, so the hint fires only in a pinned loop.
       val next = starRound(nbrs, hintMins = edgeFp._1 <= starBroadcastMaxEdges)
         .localCheckpoint(eager = false)
       // unchanged edge set ⇒ star forest reached; detected by fingerprint
@@ -1047,15 +1074,21 @@ object Dedup {
       edgeFp = nextFp
       round += 1
     }
-    require(converged,
-      s"large/small-star did not converge within $iters rounds")
-    // star forest: u = non-root member, v = component root
-    starForestLabels(corpus, edges)
+    if (converged) starForestLabels(corpus, edges)
+    else {
+      require(edgeFp._1 <= driverMaxEdges,
+        s"large/small-star did not converge within $iters rounds")
+      driverComponents(corpus, edges, edgeFp._1)
+    }
   }
 
-  /** Edge-count bound under which [[starRound]]'s min frames get a
-    * broadcast hint: nodes ≤ 2·edges, so 1e6 edges bounds both frames
-    * by ~2e6 16-byte rows — comfortably under the broadcast cap. */
+  /** Edge-count bound with two roles, both read from a count the loop
+    * already holds: under it [[starRound]]'s min frames get a broadcast
+    * hint (nodes ≤ 2·edges, so 1e6 edges bounds both frames by ~2e6
+    * 16-byte rows — comfortably under the broadcast cap), and at or
+    * under it both connected-components loops collect their edge set
+    * and finish on the driver ([[driverComponents]]: at the bound, 1e6
+    * collected rows and up to 2e6 label rows). */
   private[graft] val starBroadcastMaxEdges = 1000000L
 
   /** One large-star/small-star round over the doubled neighbor view.
@@ -1086,9 +1119,45 @@ object Dedup {
       .distinct()
   }
 
-  private def starForestLabels(corpus: DataFrame, edges: DataFrame): DataFrame = {
-    val labels = edges.select(col("u").as("doc_id"), col("v").as("cluster"))
-      .unionByName(edges.select(col("v").as("doc_id"), col("v").as("cluster")).distinct())
+  /** Star forest (u = non-root member, v = component root) to labels. */
+  private def starForestLabels(corpus: DataFrame, edges: DataFrame): DataFrame =
+    withIsolated(corpus, edges.select(col("u").as("doc_id"), col("v").as("cluster"))
+      .unionByName(edges.select(col("v").as("doc_id"), col("v").as("cluster")).distinct()))
+
+  /** Driver finish shared by both connected-components loops: collect
+    * the `n`-row edge list (two bigint columns, either orientation,
+    * duplicates allowed) and label it with one iterative union-find.
+    * The caller guards the collect with the count it already holds —
+    * `n` ≤ [[starBroadcastMaxEdges]] — instead of a `limit(n).collect()`,
+    * whose incremental take can run several jobs. Ids map to dense
+    * indices in ascending order, and a union always hangs the larger
+    * root under the smaller, so every root is its component's minimum
+    * id: the same min-id fixpoint the distributed rounds reach. */
+  private def driverComponents(corpus: DataFrame, edges: DataFrame, n: Long): DataFrame = {
+    require(n <= starBroadcastMaxEdges,
+      s"driver finish takes at most $starBroadcastMaxEdges edges; got $n")
+    val rows = edges.collect()
+    val ids = rows.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
+      .toArray.distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i0: Int): Int = { // path halving: no recursion, near-flat trees
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    rows.foreach { r =>
+      val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+      val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    withIsolated(corpus,
+      ids.indices.map(i => (ids(i), ids(find(i)))).toDF("doc_id", "cluster"))
+  }
+
+  /** Append every corpus doc without a label as its own cluster. */
+  private def withIsolated(corpus: DataFrame, labels: DataFrame): DataFrame = {
     val isolated = corpus.select(col("doc_id")).distinct()
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .withColumn("cluster", col("doc_id"))

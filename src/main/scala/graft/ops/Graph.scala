@@ -905,14 +905,23 @@ object Graph {
     * parameter), collect it, and solve SCC driver-side with iterative
     * Tarjan. Returns (nodes ascending, self-loop-free distinct edges,
     * node → scc_id map) where scc_id is the component's minimum node —
-    * exactly [[scc]]'s `least(v, min{u : v ⇄ u})`. */
+    * exactly [[scc]]'s `least(v, min{u : v ⇄ u})`.
+    *
+    * The nNodes² ceiling holds only for non-negative doc ids (a negative
+    * id's `%` residue is negative, widening the ring), so the collect
+    * takes at most one row past it and fails naming both numbers. */
   private[graft] def sccBoundedModel(documents: DataFrame, nNodes: Int, sparsity: Int)
       : (Array[Long], Array[(Long, Long)], scala.collection.Map[Long, Long]) = {
+    val ceiling = nNodes.toLong * nNodes
     val collected = documents.filter(col("doc_id") % sparsity === 0)
       .select((col("doc_id") % nNodes).as("src"),
         ((col("doc_id") * 31 + expr("doc_id div 7")) % nNodes).as("dst"))
       .distinct()
+      .limit(math.min(ceiling + 1, Int.MaxValue.toLong).toInt)
       .collect()
+    require(collected.length <= ceiling,
+      s"SCC bounded model: more than nNodes² = $ceiling distinct edges at nNodes=$nNodes " +
+        "(negative doc_id?) — refusing to collect them to the driver")
     val edges = collected.iterator
       .map(r => (r.getLong(0), r.getLong(1))).filter(e => e._1 != e._2).toArray
     val nodes = collected.iterator

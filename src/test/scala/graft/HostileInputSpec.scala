@@ -334,6 +334,19 @@ class HostileInputSpec extends SparkSpec {
     assert(sc.forall(_._3 == 1L), s"single edge fabricated a cycle: $sc")
   }
 
+  test("scc bounded model: edges past the nNodes² ceiling fail before the collect") {
+    // negative doc ids give negative residues, so nNodes = 2 yields up to
+    // 7 distinct edges over {-1, 0, 1} — past the 4-edge ceiling
+    val docs = (-20L to 20L).map(i => (i, "x")).toDF("doc_id", "text")
+    val err = intercept[IllegalArgumentException](
+      ops.Graph.sccColoring(docs, nNodes = 2, sparsity = 1))
+    assert(err.getMessage.contains("nNodes=2") && err.getMessage.contains("nNodes² = 4"),
+      err.getMessage)
+    // the same ids inside the ring stay under the ceiling and solve
+    val ok = (0L to 40L).map(i => (i, "x")).toDF("doc_id", "text")
+    assert(ops.Graph.sccColoring(ok, nNodes = 2, sparsity = 1).collect().length === 2)
+  }
+
   test("sequence detect: null ts orders deterministically, null event_type never matches") {
     import java.sql.Timestamp
     def t(s: String) = Timestamp.valueOf(s)

@@ -736,6 +736,40 @@ class LlmOpsSpec extends SparkSpec {
       "video features must be mean lumas in [0,1]")
   }
 
+  // The public calls finish small edge sets on the driver; `pinned` is the
+  // private[graft] seam (driverMaxEdges < 0) that keeps every round
+  // distributed, so the specs below still exercise the loops themselves.
+  private val pinned = -1L
+
+  /** Driver actions (Dataset head/count/collect) run by `f`, by funcName,
+    * in order — not raw Spark jobs: lazy-localCheckpoint catch-up work
+    * spawns internal jobs that are not actions, and a LAZY
+    * localCheckpoint reports as funcName="checkpoint" without running
+    * any job. A child session isolates the listener. */
+  private def actionsDuring(f: org.apache.spark.sql.SparkSession => Unit): Seq[String] = {
+    val s2 = spark.newSession()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        if (funcName == "head" || funcName == "count" || funcName == "collect") {
+          actions.add(funcName)
+        }
+        ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    s2.listenerManager.register(listener)
+    // the listener bus is async — drain it deterministically before
+    // reading the queue (a stability-poll heuristic flaked under load)
+    try {
+      f(s2)
+      org.apache.spark.GraftTestBus.drain(s2.sparkContext, 30000)
+      scala.jdk.CollectionConverters.IterableHasAsScala(actions).asScala.toSeq
+    } finally s2.listenerManager.unregister(listener)
+  }
+
   test("large/small-star clusters a chain whose diameter exceeds min-label rounds") {
     import spark.implicits._
     // a 400-long chain: component diameter 400, far beyond min-label's
@@ -744,11 +778,42 @@ class LlmOpsSpec extends SparkSpec {
     val n = 400L
     val corpus = (0L until n).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Dedup.clustersFromPairsLargeSmallStar(corpus, pairs)
+    val labels = Dedup.clustersFromPairsLargeSmallStar(corpus, pairs, driverMaxEdges = pinned)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.length === n.toInt)
     assert(labels.map(_._1).toSet === (0L until n).toSet)
     assert(labels.forall(_._2 == 0L), "chain must collapse to root 0")
+  }
+
+  test("large/small-star hands a 400-node chain to the driver once its edge count is under the bound") {
+    // A connected component of n nodes keeps at least n-1 edges in every
+    // round, so a chain given once per link never shrinks (399 edges
+    // each round). Given in BOTH orientations it starts at 798 edge
+    // rows, and the first round's canonical (big → small) output is 399:
+    // with the bound between the two, exactly one round runs distributed
+    // and the driver finishes the rest.
+    val n = 400L
+    val links = (0L until n - 1).map(i => (i, i + 1))
+    val both = links ++ links.map(_.swap)
+    def run(bound: Long)(s: org.apache.spark.sql.SparkSession): Array[(Long, Long)] = {
+      import s.implicits._
+      Dedup.clustersFromPairsLargeSmallStar((0L until n).toDF("doc_id"),
+          both.toDF("a_id", "b_id"), driverMaxEdges = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    val expected = (0L until n).map(_ -> 0L)
+    var handOff = Array.empty[(Long, Long)]
+    // actions: initial fingerprint, one round's fingerprint, the guarded
+    // edge collect, then the test's own collect of the result
+    assert(actionsDuring(s => handOff = run(600L)(s)) ===
+      Seq("head", "head", "collect", "collect"))
+    assert(handOff.toSeq === expected)
+    // the same answer from the pinned loop, which never collects edges
+    var distributed = Array.empty[(Long, Long)]
+    val pinnedActions = actionsDuring(s => distributed = run(pinned)(s))
+    assert(pinnedActions.count(_ == "head") > 2 && pinnedActions.count(_ == "collect") === 1,
+      pinnedActions)
+    assert(distributed.toSeq === expected)
   }
 
   test("property: large/small-star == min-label connected components on random graphs") {
@@ -767,69 +832,88 @@ class LlmOpsSpec extends SparkSpec {
     val nodes = (0L until 40L).toDF("doc_id")
     val res = SCTest.check(params, Prop.forAll(genEdges) { edges =>
       val pairs = edges.distinct.toDF("a_id", "b_id")
-      val viaStars = Dedup.clustersFromPairsLargeSmallStar(nodes, pairs)
+      val viaStars = Dedup.clustersFromPairsLargeSmallStar(nodes, pairs, driverMaxEdges = pinned)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val viaMinLabel = Dedup.clustersFromPairs(nodes, pairs, iters = 50)
+      val viaMinLabel = Dedup.clustersFromPairs(nodes, pairs, iters = 50, driverMaxEdges = pinned)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       viaStars == viaMinLabel
     })
     assert(res.passed, s"component-equivalence property failed: $res")
   }
 
+  test("property: the driver finish labels random graphs exactly as both distributed loops") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import spark.implicits._
+    // graphs of 1-40 nodes; pairs are drawn with replacement (duplicate
+    // pairs) and usually miss some nodes (isolated nodes). The public
+    // calls finish on the driver at this size; the reference is each
+    // pinned loop, compared in output row order (doc_id ascending).
+    val genGraph: Gen[(Long, List[(Long, Long)])] = for {
+      n <- Gen.chooseNum(1L, 40L)
+      pairs <- Gen.listOf(for {
+        a <- Gen.chooseNum(0L, n - 1)
+        b <- Gen.chooseNum(0L, n - 1) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+    } yield (n, pairs)
+    val params = SCTest.Parameters.default
+      .withMinSuccessfulTests(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L))
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val res = SCTest.check(params, Prop.forAll(genGraph) { case (n, edges) =>
+      val nodes = (0L until n).toDF("doc_id")
+      val pairs = edges.toDF("a_id", "b_id")
+      val starDriver = labels(Dedup.clustersFromPairsLargeSmallStar(nodes, pairs))
+      val minLabelDriver = labels(Dedup.clustersFromPairs(nodes, pairs, iters = 50))
+      val starLoop = labels(
+        Dedup.clustersFromPairsLargeSmallStar(nodes, pairs, driverMaxEdges = pinned))
+      val minLabelLoop = labels(
+        Dedup.clustersFromPairs(nodes, pairs, iters = 50, driverMaxEdges = pinned))
+      starDriver == starLoop && minLabelDriver == minLabelLoop && starDriver == minLabelDriver
+    })
+    assert(res.passed, s"driver-finish equivalence property failed: $res")
+  }
+
   test("large/small-star convergence runs ONE driver action per round") {
-    // count DRIVER ACTIONS (Dataset head/count/collect), not raw Spark
-    // jobs: lazy-localCheckpoint catch-up work spawns internal jobs that
-    // are not actions. A child session isolates the listener.
-    val s2 = spark.newSession()
-    import s2.implicits._
-    val actions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-        // a LAZY localCheckpoint also reports as funcName="checkpoint"
-        // without running any job — only count the materializing actions
-        if (funcName == "head" || funcName == "count" || funcName == "collect") {
-          actions.incrementAndGet()
-        }
+    // bound None = the public call's default bound
+    def actionsFor(pairs: Seq[(Long, Long)], bound: Option[Long]): Seq[String] =
+      actionsDuring { s2 =>
+        import s2.implicits._
+        val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toDF("doc_id")
+        val edges = pairs.toDF("a_id", "b_id")
+        bound.fold(Dedup.clustersFromPairsLargeSmallStar(nodes, edges))(b =>
+          Dedup.clustersFromPairsLargeSmallStar(nodes, edges, driverMaxEdges = b))
         ()
       }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-    }
-    s2.listenerManager.register(listener)
-    // the listener bus is async — drain it deterministically before
-    // reading the counter (a stability-poll heuristic flaked under load)
-    def settled(): Int = {
-      org.apache.spark.GraftTestBus.drain(s2.sparkContext, 30000)
-      actions.get()
-    }
-    def actionsFor(pairs: Seq[(Long, Long)]): Int = {
-      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toDF("doc_id")
-      val before = settled()
-      Dedup.clustersFromPairsLargeSmallStar(nodes, pairs.toDF("a_id", "b_id"))
-      settled() - before
-    }
-    try {
-      // star {1-2, 1-3}: already a star forest -> fixpoint after 1 round.
-      // expected actions = 1 (initial fingerprint, which also materializes
-      // the lazy edge checkpoint) + 1 round = 2. The round-4
-      // implementation (exceptAll.count + count per round) cost 2 actions
-      // per round and would fail these exact counts.
-      assert(actionsFor(Seq((1L, 2L), (1L, 3L))) === 2)
-      // chain {1-2, 2-3}: one restructuring round plus the fixpoint round
-      // -> 1 + 2 = 3 actions
-      assert(actionsFor(Seq((1L, 2L), (2L, 3L))) === 3)
-    } finally s2.listenerManager.unregister(listener)
+    val star = Seq((1L, 2L), (1L, 3L))
+    val chain = Seq((1L, 2L), (2L, 3L))
+    // pinned loop. star {1-2, 1-3}: already a star forest -> fixpoint
+    // after 1 round. expected actions = 1 (initial fingerprint, which
+    // also materializes the lazy edge checkpoint) + 1 round = 2. The
+    // round-4 implementation (exceptAll.count + count per round) cost 2
+    // actions per round and would fail these exact counts.
+    assert(actionsFor(star, Some(pinned)).size === 2)
+    // chain {1-2, 2-3}: one restructuring round plus the fixpoint round
+    // -> 1 + 2 = 3 actions
+    assert(actionsFor(chain, Some(pinned)).size === 3)
+    // the public call: the initial fingerprint, then the guarded edge
+    // collect of the driver finish — no round runs
+    assert(actionsFor(star, None) === Seq("head", "collect"))
+    assert(actionsFor(chain, None) === Seq("head", "collect"))
   }
 
   test("large/small-star matches min-label propagation on banded candidates") {
     val corpus = Corpus.docCorpus(documents)
-    val viaMinLabel = Dedup.nearDupClustersBanded(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaMinLabel = Dedup.clustersFromPairs(
+        corpus, Dedup.minhashBandedCandidates(corpus), iters = 50, driverMaxEdges = pinned)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaStars = Dedup.clustersFromPairsLargeSmallStar(
-        corpus, Dedup.minhashBandedCandidates(corpus)).collect()
+        corpus, Dedup.minhashBandedCandidates(corpus), driverMaxEdges = pinned).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaStars === viaMinLabel)
+    // and the public call's driver finish agrees with both
+    assert(Dedup.nearDupClustersBanded(corpus).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === viaMinLabel)
   }
 
   test("embedding delta dedup: drop same-bucket near-dups, keep bucket escapes and far vectors") {
