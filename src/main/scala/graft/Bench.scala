@@ -41,44 +41,8 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // Warmup: touch each table once (codegen + parquet footers + page
-    // cache) so the first timed query doesn't absorb session startup.
-    // A failed step is printed to stderr and named under "warmup_failed"
-    // in both JSON records, never swallowed: a missing epoch artifact
-    // would make its *_persisted key time training instead of the probe.
-    val warmupFailed = scala.collection.mutable.ArrayBuffer.empty[String]
-    def warm(step: String)(f: => Any): Unit =
-      try { f; () } catch {
-        case e: Throwable =>
-          warmupFailed += step
-          System.err.println(s"[bench] warm-up step $step failed: $e")
-      }
-    Tables.names.foreach(t => warm(t)(Tables.load(spark, sfDir, t).count()))
-    warm("events_normalized")(Tables.events(spark, sfDir).count())
-    // bucketed-table ingest is a write-time cost by design — do it here so
-    // join_bucketed times the co-located JOIN, not the one-time bucketing
-    warm("bucketed")(ops.ScaleJoins.ensureBucketed(spark,
-      Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)))
-    // same write-time/probe-time split for the dedup index artifacts:
-    // dedup_delta_index / dedup_bloom_prefilter time the delta PROBE,
-    // not the once-per-epoch index build
-    lazy val idx = llm.Corpus.docCorpus(Tables.documents(spark, sfDir))
-      .filter(org.apache.spark.sql.functions.col("doc_id") < 100000)
-    warm("band_index")(llm.Dedup.ensureBandIndex(spark, idx))
-    warm("bloom_index")(llm.Dedup.ensureBloomIndex(spark, idx))
-    // sim_ivf_persisted / sim_pq_persisted time the PROBE; training is
-    // a once-per-epoch write-time cost like the band/bloom artifacts
-    warm("ivf_index")(llm.Similarity.ensureIvfIndex(spark, Tables.embeddings(spark, sfDir)))
-    warm("pq_index")(llm.Similarity.ensurePqIndex(spark, Tables.embeddings(spark, sfDir)))
-    // text_bpe_encode_persisted times the ENCODE pass; merge-model
-    // training is a once-per-tokenizer-release write-time cost
-    warm("bpe_model")(llm.Bpe.ensureBpeModel(spark, Tables.documents(spark, sfDir)))
-    // dq_drift_ks_persisted times the stored-histogram MONITOR; the
-    // two epoch histograms are once-per-epoch write-time artifacts
-    warm("quantile_hist")(ops.Aggregates.ensureQuantileHist(spark,
-      Tables.orders(spark, sfDir), epoch = 8201L))
-    warm("quantile_hist_perturbed")(ops.Aggregates.ensureQuantileHist(spark,
-      sync.Snapshots.perturbedOrders(Tables.orders(spark, sfDir)), epoch = 8202L))
+    // failed steps are named under "warmup_failed" in both JSON records
+    val warmupFailed = prewarm(spark, sfDir)
     // SPARK_GRAFT_ONLY=q1,q2 — run a subset (local profiling; driver unsets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
@@ -197,5 +161,49 @@ object Bench {
     // something FAILED. Anything per-query belongs in bench_full.json.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"calib_1t":${r2d(calib1)},"queries":$qs,"sf":"$sfDir"$errJson$warmupJson}""")
     Console.flush()
+  }
+
+  /** The one prewarm, shared by Bench and PlanCensus: touch each table
+    * once (codegen + parquet footers + page cache) so the first timed
+    * query doesn't absorb session startup, and build the epoch artifacts
+    * the `*_persisted` keys serve. Returns the names of the failed steps;
+    * each failure is also printed to stderr, never swallowed: a missing
+    * epoch artifact would make its key time (or census) training
+    * instead of the probe. */
+  def prewarm(spark: SparkSession, sfDir: String): Seq[String] = {
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def warm(step: String)(f: => Any): Unit =
+      try { f; () } catch {
+        case e: Throwable =>
+          failed += step
+          System.err.println(s"[prewarm] step $step failed: $e")
+      }
+    Tables.names.foreach(t => warm(t)(Tables.load(spark, sfDir, t).count()))
+    warm("events_normalized")(Tables.events(spark, sfDir).count())
+    // bucketed-table ingest is a write-time cost by design — do it here so
+    // join_bucketed times the co-located JOIN, not the one-time bucketing
+    warm("bucketed")(ops.ScaleJoins.ensureBucketed(spark,
+      Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)))
+    // same write-time/probe-time split for the dedup index artifacts:
+    // dedup_delta_index / dedup_bloom_prefilter time the delta PROBE,
+    // not the once-per-epoch index build
+    lazy val idx = llm.Corpus.docCorpus(Tables.documents(spark, sfDir))
+      .filter(org.apache.spark.sql.functions.col("doc_id") < 100000)
+    warm("band_index")(llm.Dedup.ensureBandIndex(spark, idx))
+    warm("bloom_index")(llm.Dedup.ensureBloomIndex(spark, idx))
+    // sim_ivf_persisted / sim_pq_persisted time the PROBE; training is
+    // a once-per-epoch write-time cost like the band/bloom artifacts
+    warm("ivf_index")(llm.Similarity.ensureIvfIndex(spark, Tables.embeddings(spark, sfDir)))
+    warm("pq_index")(llm.Similarity.ensurePqIndex(spark, Tables.embeddings(spark, sfDir)))
+    // text_bpe_encode_persisted times the ENCODE pass; merge-model
+    // training is a once-per-tokenizer-release write-time cost
+    warm("bpe_model")(llm.Bpe.ensureBpeModel(spark, Tables.documents(spark, sfDir)))
+    // dq_drift_ks_persisted times the stored-histogram MONITOR; the
+    // two epoch histograms are once-per-epoch write-time artifacts
+    warm("quantile_hist")(ops.Aggregates.ensureQuantileHist(spark,
+      Tables.orders(spark, sfDir), epoch = 8201L))
+    warm("quantile_hist_perturbed")(ops.Aggregates.ensureQuantileHist(spark,
+      sync.Snapshots.perturbedOrders(Tables.orders(spark, sfDir)), epoch = 8202L))
+    failed.toSeq
   }
 }

@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The one bench/verify/profile session builder: identical settings in
-  * every entrypoint the driver invokes (master `local[$SPARK_GRAFT_CPUS]`,
+/** The one session builder of every harness and tool (Bench, Verify,
+  * RunOne, PlanCensus, ScaleProbe, the perfbench harness): identical
+  * settings everywhere (master `local[$SPARK_GRAFT_CPUS]`,
   * shuffle partitions = cpus, UTC, no UI, suite-sized codegen cache), so
   * a number measured in one harness is comparable in the others and a
   * settings fix cannot drift between copy-pasted builders (r13 advice).

@@ -571,7 +571,7 @@ object SparkEntry {
     // dominant lang / mean quality in one pass + digest-distinct rollup
     "pipeline_dataset_card" -> ((s, d) => TrainingPrep.datasetCard(Tables.documents(s, d))),
     // the production ORDERING shipped as one operator: exact dedup, then
-    // prefix-containment over the survivors (ARCHITECTURE "Containment wall")
+    // prefix-containment over the survivors (ARCHITECTURE "Cross-tier rules")
     "pipeline_dedup_ordered" -> ((s, d) => Dedup.orderedDedup(Corpus.docCorpus(Tables.documents(s, d)))),
     // seeded deterministic global shuffle + 16-way sharding (the
     // trainer-ingestion ordering pass)

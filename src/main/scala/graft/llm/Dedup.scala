@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * NOTE: operators that reuse a materialized intermediate across plan
   * branches (`ngramJaccard*`, `minhashCandidates`, the clustering loops)
   * run Spark jobs at CONSTRUCTION time via eager `localCheckpoint` —
-  * they are not fully lazy plans (see ARCHITECTURE.md Round-5 findings).
+  * they are not fully lazy plans (see ARCHITECTURE.md "Cross-tier rules").
   *
   * Scale notes (100 TB): exact dedup is one hash shuffle on the dedup key;
   * MinHash banding turns O(n²) candidate generation into an equi-join on
@@ -188,10 +188,10 @@ object Dedup {
     * blowup (every doc pair sharing ANY shingle) with buckets of the
     * RAREST ~20% of shingles per doc; dfCap becomes unnecessary.
     *
-    * Production ordering (30× smoke, ARCHITECTURE.md "Containment
-    * wall"): NO exact pairwise measure survives duplicate-HEAVY data —
-    * identical copies make the output itself Σ|group|² and every
-    * "rare" shingle popular. Run [[exact]] dedup first (one digest
+    * Production ordering (30× replica measurement, ARCHITECTURE.md
+    * "Cross-tier rules"): NO exact pairwise measure survives
+    * duplicate-HEAVY data — identical copies make the output itself
+    * Σ|group|² and every "rare" shingle popular. Run [[exact]] dedup first (one digest
     * shuffle collapses identical docs), then containment on the
     * mostly-unique survivors, where the prefix filter's candidate
     * reduction is the win (1.8× already at the pessimistic 10×). */
@@ -326,8 +326,8 @@ object Dedup {
   }
 
   /** The PRODUCTION dedup ordering as one operator (ARCHITECTURE.md
-    * "Containment wall" conclusion, shipped): exact dedup FIRST — one
-    * digest-keyed shuffle collapses every identical-copy group to its
+    * "Cross-tier rules", shipped): exact dedup FIRST — one digest-keyed
+    * shuffle collapses every identical-copy group to its
     * min-doc_id survivor — then prefix-filtered containment over the
     * mostly-unique survivors, where the rarest-shingle prefix filter
     * actually bites (on the raw duplicate-heavy corpus every "rare"
@@ -344,10 +344,10 @@ object Dedup {
     * Scale: stage 1 is the [[exact]] one-shuffle aggregate; stage 2 is
     * [[ngramContainmentPrefix]] over a survivor set the duplication
     * factor already shrank; the mutual-pair resolution self-joins the
-    * pair table (pair-cardinality, tiny) — never the corpus. Measured
-    * in ScaleSmoke `orderedOnly`: the ordering beats raw containment on
-    * the duplicate-heavy replicated corpus precisely because stage 2's
-    * input no longer contains the replica groups. */
+    * pair table (pair-cardinality, tiny) — never the corpus. On a
+    * duplicate-heavy replicated corpus the ordering beats raw
+    * containment precisely because stage 2's input no longer contains
+    * the replica groups. */
   def orderedDedup(corpus: DataFrame, threshold: Double = 0.8): DataFrame = {
     val keep = exact(corpus).select(col("doc_id"))
     // left_semi keyed on doc_id: re-attach text for the shingle stage
@@ -912,7 +912,7 @@ object Dedup {
     *
     * Driver finish: the pair count comes from the one job that
     * materializes the pair checkpoint, and a list of at most
-    * `driverMaxEdges` pairs (default [[starBroadcastMaxEdges]]) is
+    * `driverMaxEdges` pairs (default [[driverFinishMaxEdges]]) is
     * collected once and labelled by [[driverComponents]] — near-dup pair
     * lists are that small at bench scale, where the rounds below were
     * mostly scheduling. Label propagation never shrinks the edge set, so
@@ -920,7 +920,7 @@ object Dedup {
     * `driverMaxEdges` pins the distributed loop (spec seam). */
   private[graft] def clustersFromPairs(corpus: DataFrame, pairSrc: DataFrame,
                                 iters: Int,
-                                driverMaxEdges: Long = starBroadcastMaxEdges): DataFrame = {
+                                driverMaxEdges: Long = driverFinishMaxEdges): DataFrame = {
     // localCheckpoint, not persist: each round self-joins the
     // previous labels, and cache lookup misses on the deduplicated
     // self-join subtrees — lineage then doubles per round (measured
@@ -1002,14 +1002,14 @@ object Dedup {
     *
     * Driver finish: rounds run only while the edge count, which every
     * fingerprint already carries, is above `driverMaxEdges` (default
-    * [[starBroadcastMaxEdges]]). Once it is at or under the bound — at
+    * [[driverFinishMaxEdges]]). Once it is at or under the bound — at
     * bench scale before the first round, at scale after the data-sized
     * rounds have contracted dense components — the edge set is
     * collected once and [[driverComponents]] finishes the labelling. A
     * negative `driverMaxEdges` pins the distributed loop (spec seam). */
   private[graft] def clustersFromPairsLargeSmallStar(
       corpus: DataFrame, pairSrc: DataFrame, iters: Int = 30,
-      driverMaxEdges: Long = starBroadcastMaxEdges): DataFrame = {
+      driverMaxEdges: Long = driverFinishMaxEdges): DataFrame = {
     // convergence fingerprint: (count, sum of xxhash64(u,v)) computed in
     // ONE aggregate job. Equal fingerprints across a round ⇒ the edge
     // SET is unchanged for this domain: edges are distinct, so the only
@@ -1044,27 +1044,14 @@ object Dedup {
     while (!converged && edgeFp._1 > driverMaxEdges && round < iters) {
       val nbrs = edges.select(col("u").as("ctr"), col("v").as("nbr"))
         .unionByName(edges.select(col("v").as("ctr"), col("u").as("nbr")))
-      // r13: the two per-round min frames are NODE-bounded (one row per
-      // center) — broadcast them onto the edge-sized sides (the graph
-      // membership-broadcast doctrine: edges never shuffle for a join),
-      // so each round's only edge-sized exchanges are the two partial
-      // aggregates (map-side combined, node-sized output) and the final
-      // distinct. The intermediate `large.distinct()` is gone: duplicate
-      // (u,m) rows change neither min_v(large) nor the final edge SET
-      // (`next` ends in distinct) — it only cost a full exchange.
-      //
-      // r14 (r13 advice): node-bounded is DATA-dependent here, not
-      // parameter-bounded — the node set is the near-dup candidate
-      // population, so at the 100 TB design point a forced broadcast
-      // would OOM where AQE would have shuffled 16-byte rows. Gate the
-      // hint on the round's edge count, which the convergence
-      // fingerprint already computed (zero extra jobs): nodes ≤
-      // 2·edges, so ≤1e6 edges bounds both min frames well under the
-      // broadcast cap; larger graphs leave the strategy to AQE. Under
-      // the default driver-finish bound (the same 1e6) rounds only run
-      // past the gate, so the hint fires only in a pinned loop.
-      val next = starRound(nbrs, hintMins = edgeFp._1 <= starBroadcastMaxEdges)
-        .localCheckpoint(eager = false)
+      // each round's only edge-sized exchanges are the two partial
+      // aggregates (map-side combined, node-sized output), the two min
+      // joins (strategy left to AQE: the min frames are node-sized, and
+      // at scale the node set is the near-dup candidate population) and
+      // the final distinct. An intermediate `large.distinct()` would only
+      // cost a full exchange: duplicate (u,m) rows change neither
+      // min_v(large) nor the final edge SET.
+      val next = starRound(nbrs).localCheckpoint(eager = false)
       // unchanged edge set ⇒ star forest reached; detected by fingerprint
       // equality in the single job that also materializes the lazy
       // checkpoint (see fingerprint above)
@@ -1082,35 +1069,22 @@ object Dedup {
     }
   }
 
-  /** Edge-count bound with two roles, both read from a count the loop
-    * already holds: under it [[starRound]]'s min frames get a broadcast
-    * hint (nodes ≤ 2·edges, so 1e6 edges bounds both frames by ~2e6
-    * 16-byte rows — comfortably under the broadcast cap), and at or
-    * under it both connected-components loops collect their edge set
-    * and finish on the driver ([[driverComponents]]: at the bound, 1e6
-    * collected rows and up to 2e6 label rows). */
-  private[graft] val starBroadcastMaxEdges = 1000000L
+  /** Driver-finish bound: at or under this many edges, both
+    * connected-components loops collect their edge set and finish on
+    * the driver ([[driverComponents]]: at the bound, 1e6 collected rows
+    * and up to 2e6 label rows). */
+  private[graft] val driverFinishMaxEdges = 1000000L
 
-  /** One large-star/small-star round over the doubled neighbor view.
-    * `hintMins` pins the two node-bounded min frames to broadcast joins
-    * when the caller KNOWS they are small (gated on the round's edge
-    * count, which the convergence fingerprint already computed — zero
-    * extra jobs); past the gate the strategy is left to AQE, because at
-    * the 100 TB design point the node set is the near-dup candidate
-    * population — data-sized, where a forced broadcast would OOM and a
-    * shuffle of 16-byte rows is the right plan (r13 advice). Extracted
-    * so the spec can pin hint-iff-gated on the analyzed plan. */
-  private[graft] def starRound(nbrs: DataFrame, hintMins: Boolean): DataFrame = {
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (hintMins) broadcast(df) else df
+  /** One large-star/small-star round over the doubled neighbor view. */
+  private def starRound(nbrs: DataFrame): DataFrame = {
     val mins = nbrs.groupBy("ctr").agg(min(col("nbr")).as("mn"))
       .select(col("ctr"), least(col("mn"), col("ctr")).as("m"))
     // m ≤ ctr < nbr, so every emitted edge already points downward
-    val large = nbrs.join(maybeBroadcast(mins), "ctr")
+    val large = nbrs.join(mins, "ctr")
       .filter(col("nbr") > col("ctr"))
       .select(col("nbr").as("u"), col("m").as("v"))
     val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
-    large.join(maybeBroadcast(mins2), "u")
+    large.join(mins2, "u")
       .select(col("v").as("a"), col("m").as("b"))
       .unionByName(mins2.select(col("u").as("a"), col("m").as("b")))
       .filter(col("a") =!= col("b"))
@@ -1128,14 +1102,14 @@ object Dedup {
     * the `n`-row edge list (two bigint columns, either orientation,
     * duplicates allowed) and label it with one iterative union-find.
     * The caller guards the collect with the count it already holds —
-    * `n` ≤ [[starBroadcastMaxEdges]] — instead of a `limit(n).collect()`,
+    * `n` ≤ [[driverFinishMaxEdges]] — instead of a `limit(n).collect()`,
     * whose incremental take can run several jobs. Ids map to dense
     * indices in ascending order, and a union always hangs the larger
     * root under the smaller, so every root is its component's minimum
     * id: the same min-id fixpoint the distributed rounds reach. */
   private def driverComponents(corpus: DataFrame, edges: DataFrame, n: Long): DataFrame = {
-    require(n <= starBroadcastMaxEdges,
-      s"driver finish takes at most $starBroadcastMaxEdges edges; got $n")
+    require(n <= driverFinishMaxEdges,
+      s"driver finish takes at most $driverFinishMaxEdges edges; got $n")
     val rows = edges.collect()
     val ids = rows.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
       .toArray.distinct.sorted

@@ -163,7 +163,7 @@ object TextAnalysis {
     // driver-side count() action). NOTE the operator is no longer fully
     // lazy: the tf localCheckpoint below materializes the term counts at
     // CONSTRUCTION time (the price of eviction-proof reuse across the two
-    // consumers — see Round-5 findings in ARCHITECTURE.md).
+    // consumers — see "Cross-tier rules" in ARCHITECTURE.md).
     val nDf = documents.agg(count(lit(1)).cast("double").as("n_docs"))
     // materialize tf once: both the df derivation and the join consume it —
     // without it the explode+groupBy runs twice. localCheckpoint, not

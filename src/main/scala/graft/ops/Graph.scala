@@ -282,9 +282,8 @@ object Graph {
   }
 
   /** The degree-ordered triangle core over an arbitrary directed edge
-    * set — exposed so ScaleSmoke can measure the m^{3/2} contract on a
-    * SKEWED graph the saturating host synthesis can't produce. */
-  private[graft] def trianglesFromEdges(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    * set (shared by [[triangles]] and the clustering coefficient). */
+  private def trianglesFromEdges(edges: DataFrame, nodes: DataFrame): DataFrame = {
     val und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -292,8 +291,8 @@ object Graph {
       .localCheckpoint(eager = false) // scanned by deg + orientation
     // undirected degree per endpoint; ok = the (degree, id) total order
     // key as a STRUCT (lexicographic) — an arithmetic deg*K + id key
-    // silently collides once ids reach K, and this core is exposed to
-    // arbitrary-id graphs via ScaleSmoke
+    // silently collides once ids reach K, and the edge set's ids are
+    // arbitrary
     val ord = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
       .select(col("node"), struct(col("deg"), col("node").as("id")).as("ok"))
@@ -340,8 +339,8 @@ object Graph {
     * possible wedge) emit 0.0 by definition rather than NULL, because a
     * quality filter thresholds cc and an isolated host is "not clique-y",
     * not "unknown". Everything is node- or wedge-bounded; the triangle
-    * core's m^{3/2} contract is the binding cost (measured on the
-    * graphOnly ladder). */
+    * core's m^{3/2} contract is the binding cost (measured on a past
+    * scale ladder). */
   def clusteringCoeff(documents: DataFrame, nNodes: Int = 200): DataFrame = {
     val (edges, nodes) = linkGraph(documents, nNodes)
     val und = edges.filter(col("src") =!= col("dst"))
@@ -829,7 +828,7 @@ object Graph {
     * NODE-LINEAR-STATE scale twin of [[scc]]'s iterated-squaring
     * closure (the FW-BW/coloring family: Orzan's coloring step, the
     * distributed-SCC shape of Hong et al. / Slota et al.). The closure
-    * form is provably-bounded but node²-HEAVY — the r9 `sccOnly`
+    * form is provably-bounded but node²-HEAVY — the r9 scale
     * ladder measured it exactly quadratic in the residue space (wall
     * ×3.9 and exchange records ×4.00 per node-space doubling, already
     * 277 s at n=2500 locally) — so past a few thousand hosts THIS is
@@ -864,8 +863,8 @@ object Graph {
     * MEASURED-CASCADE contracts ([[kcore]] class) with LOUD exhaustion:
     * a graph that needs more rounds fails the require instead of
     * returning a wrong answer. Budgets passed as 0 (the default) are
-    * DERIVED from nNodes (the ScaleSmoke ladder's own formula —
-    * 12+4·(n/250) peels, 24·(n/250) propagation steps), so a wider
+    * DERIVED from nNodes (12+4·(n/250) peels, 24·(n/250) propagation
+    * steps, measured on a past scale ladder), so a wider
     * graph gets a wider budget without the caller re-deriving it; an
     * explicit positive value still pins the budget exactly (r11 ADVICE).
     *
@@ -931,8 +930,8 @@ object Graph {
 
   /** Iterative Tarjan over the bounded model: scc_id(v) = min node id
     * of v's component. Explicit work stack (no recursion — a chain of
-    * nNodes=10000 at the ScaleSmoke ladder's top rung would overflow
-    * the JVM stack), one pass, O(nodes + edges). */
+    * nNodes=10000 would overflow the JVM stack), one pass,
+    * O(nodes + edges). */
   private def tarjanMinIds(nodes: Array[Long],
       edges: Array[(Long, Long)]): scala.collection.Map[Long, Long] = {
     val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
@@ -995,7 +994,7 @@ object Graph {
     * ids, so the oracle stays the shared SCC SQL (the diff_reconciled
     * discipline — the composition changes the plan, never the answer),
     * but the quotient now inherits the NODE-LINEAR state of the
-    * coloring loop instead of the closure's n² frames — the sccOnly
+    * coloring loop instead of the closure's n² frames — the r9 scale
     * ladder measured the closure 277 s at n=2500 where coloring reads
     * ~10 s flat, so past a few thousand hosts only this composition
     * can run at all (the r10 condensation ladder leg holds a n=5000

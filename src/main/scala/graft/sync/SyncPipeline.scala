@@ -89,6 +89,9 @@ object SyncPipeline {
     val source = argOrEnv(args, 1, "GRAFT_SOURCE", sys.env)
     val target = argOrEnv(args, 2, "GRAFT_TARGET", sys.env)
     val key = args.lift(3).orElse(sys.env.get("GRAFT_KEY")).getOrElse("slno")
+    // its own builder, not Session.build: this is the user CLI, and
+    // SPARK_MASTER is a deployment setting that Session.build's pinned
+    // local[$SPARK_GRAFT_CPUS] master would override
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,18 +1,16 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import graft.{PlanWalk, SparkEntry, Tables}
+import graft.{Bench, PlanWalk, Session, SparkEntry}
 
 /** Machine-readable PLAN CENSUS over every registered query key: counts
   * of the physical-plan node classes that govern scale behavior
   * (shuffle/broadcast exchanges, scans, join strategies, sorts, windows,
   * aggregates, cartesian products). The committed `plan_census.json` is
   * the plan-shape BASELINE for the whole surface — the per-key answer to
-  * "is there a shuffle here that becomes the bottleneck at 100 TB" that
-  * PLANS.md gives in prose for a headline subset — and `--check` turns
-  * it into a regression gate: regenerate, diff against the committed
-  * file, list every key whose plan shape moved.
+  * "is there a shuffle here that becomes the bottleneck at 100 TB" — and
+  * `--check` turns it into a regression gate: regenerate, diff against
+  * the committed file, list every key whose plan shape moved.
   *
   * Counting happens on the UNEXECUTED `queryExecution.executedPlan` —
   * after `EnsureRequirements` has inserted the exchanges (sparkPlan
@@ -20,58 +18,52 @@ import graft.{PlanWalk, SparkEntry, Tables}
   * the initial adaptive tree: the deterministic artifact of the code +
   * fixed testdata stats alone. AQE's runtime decisions (coalesced
   * partitions, demoted broadcasts) vary with execution and belong to
-  * Bench/ScaleSmoke evidence, not a committed baseline. Keys whose operators run side-effect probes or training at
-  * plan-construction time (collapse probe, IVF/PQ/BPE ensure) execute
-  * those jobs here too — the same write-time/plan-time split Bench uses,
-  * with the persisted-epoch artifacts prewarmed so their query paths
-  * census the PROBE plan, not training.
+  * Bench/ScaleProbe evidence, not a committed baseline. Keys whose
+  * operators run side-effect probes or training at plan-construction
+  * time (collapse probe, IVF/PQ/BPE ensure) execute those jobs here too
+  * — the same write-time/plan-time split Bench uses, through the same
+  * [[graft.Bench.prewarm]], so the persisted-epoch keys census the PROBE
+  * plan, not training. A failed prewarm step exits 1 naming the step.
+  *
+  * `--dump` writes the same prewarmed `queryExecution`'s formatted plan
+  * (`explainString(FormattedMode)`) per key to `<dir>/<key>.txt` instead
+  * of censusing; it never reads or writes `plan_census.json`.
   *
   * Usage:
   *   sbt "runMain graft.tools.PlanCensus"             — regenerate plan_census.json
   *   sbt "runMain graft.tools.PlanCensus --check"     — diff against the committed file, exit 1 on drift
+  *   sbt "runMain graft.tools.PlanCensus --dump <dir> [k1,k2,…]" — formatted plans (all keys if none listed)
   * Optional first non-flag arg = sf dir (default /root/testdata/sf0.01).
   */
 object PlanCensus {
   def main(args: Array[String]): Unit = {
-    val checkMode = args.contains("--check")
-    val sfDir = args.filterNot(_.startsWith("--")).headOption
+    // `--dump <dir> [k1,k2,…]` comes last and takes the rest of the args
+    val (censusArgs, dumpArgs) = args.span(_ != "--dump")
+    val dump = dumpArgs.drop(1)
+    require(dumpArgs.isEmpty || dump.nonEmpty, "usage: PlanCensus [sfDir] --dump <dir> [k1,k2,...]")
+    val checkMode = censusArgs.contains("--check")
+    val sfDir = censusArgs.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
     val outPath = "plan_census.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build(cpusDefault = "4")
     spark.sparkContext.setLogLevel("ERROR")
 
-    // the Bench prewarm: persisted-epoch keys must census their probe
-    // plan; without the artifacts they would census (and pay) training
-    try {
-      val corpus = graft.llm.Corpus.docCorpus(Tables.documents(spark, sfDir))
-      val idx = corpus.filter(org.apache.spark.sql.functions.col("doc_id") < 100000)
-      graft.llm.Dedup.ensureBandIndex(spark, idx)
-      graft.llm.Dedup.ensureBloomIndex(spark, idx)
-      graft.llm.Similarity.ensureIvfIndex(spark, Tables.embeddings(spark, sfDir))
-      graft.llm.Similarity.ensurePqIndex(spark, Tables.embeddings(spark, sfDir))
-      graft.llm.Bpe.ensureBpeModel(spark, Tables.documents(spark, sfDir))
-      graft.ops.ScaleJoins.ensureBucketed(spark,
-        Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
-      val ord = Tables.orders(spark, sfDir)
-      graft.ops.Aggregates.ensureQuantileHist(spark, ord, epoch = 8201L)
-      graft.ops.Aggregates.ensureQuantileHist(spark,
-        graft.sync.Snapshots.perturbedOrders(ord), epoch = 8202L)
-      ()
-    } catch { case _: Throwable => () }
+    val warmupFailed = Bench.prewarm(spark, sfDir)
+    if (warmupFailed.nonEmpty) {
+      System.err.println(s"[census] prewarm failed: ${warmupFailed.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
+
+    def plan(name: String) = SparkEntry.queries(name)(spark, sfDir).queryExecution
 
     def censusLine(name: String): String = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
       // executedPlan WITHOUT collecting: prepareForExecution has run
       // (EnsureRequirements has inserted the exchanges — sparkPlan
       // carries none) but nothing has executed, so under AQE this is
       // the INITIAL adaptive tree: the deterministic artifact of code +
       // fixed testdata stats, before any runtime re-planning
-      val nodes = PlanWalk.allNodes(df.queryExecution.executedPlan)
+      val nodes = PlanWalk.allNodes(plan(name).executedPlan)
       def n(pred: org.apache.spark.sql.execution.SparkPlan => Boolean): Int =
         nodes.count(pred)
       val counts = Seq(
@@ -93,16 +85,26 @@ object PlanCensus {
     }
 
     val keys = SparkEntry.queries.keys.toSeq.sorted
-    val lines = keys.map { name =>
+    lazy val lines = keys.map { name =>
       try censusLine(name)
       catch { case e: Throwable =>
         System.err.println(s"[census] $name failed: ${e.getMessage}")
         "\"" + name + "\":{\"error\":1}"
       }
     }
-    val json = lines.mkString("{\n", ",\n", "\n}\n")
 
-    if (checkMode) {
+    if (dump.nonEmpty) {
+      val listed = dump.lift(1).fold(keys)(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      val unknown = listed.filterNot(keys.contains)
+      require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
+      Files.createDirectories(Paths.get(dump(0)))
+      listed.foreach { name =>
+        Files.writeString(Paths.get(dump(0), s"$name.txt"),
+          plan(name).explainString(org.apache.spark.sql.execution.FormattedMode))
+      }
+      println(s"[census] dumped ${listed.size} plans to ${dump(0)}")
+      spark.stop()
+    } else if (checkMode) {
       val committed = if (Files.exists(Paths.get(outPath)))
         Files.readString(Paths.get(outPath)) else ""
       val oldLines = committed.linesIterator
@@ -125,7 +127,7 @@ object PlanCensus {
       spark.stop()
       if (drift > 0) sys.exit(1)
     } else {
-      Files.writeString(Paths.get(outPath), json)
+      Files.writeString(Paths.get(outPath), lines.mkString("{\n", ",\n", "\n}\n"))
       println(s"[census] wrote $outPath (${keys.size} keys)")
       spark.stop()
     }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds a key-shifted ×factor replica of an SF dir so DECLARED bench
@@ -15,22 +15,17 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_SF_DIR=/tmp/sfprobe SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY=... runMain graft.Bench
   *
   * Replicated fact tables get COLLISION-FREE key shifts (orderkey lanes of
-  * 10M, doc_id lanes of 30M — a multiple of 3, the ScaleSmoke convention,
-  * so doc_id%3 kind assignment is replica-invariant) so join fan-outs and
-  * duplicate-group sizes match a genuinely larger corpus instead of
-  * degenerating into ×factor² duplicate blowup. Dimension tables copy
+  * 10M, doc_id lanes of 30M — a multiple of 3 so `doc_id % 3` is
+  * replica-invariant) so join fan-outs and duplicate-group sizes match a
+  * genuinely larger corpus instead of degenerating into ×factor²
+  * duplicate blowup. Dimension tables copy
   * through byte-identical. Not part of the driver contract. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ScaleProbe <srcSfDir> <outDir> <factor>")
     val Array(src, out, f) = args.take(3)
     val factor = f.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Session.build(cpusDefault = "32")
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(out))
     def rep(name: String)(shift: (DataFrame, Int) => DataFrame): Unit = {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, TextAnalysis, TrainingPrep}
+import scala.jdk.CollectionConverters._
 
 /** Hostile-corpus gates: the fixture corpus is clean (no nulls, no empty
   * docs), but a 100 TB crawl is not. These tests run the text/dedup tier
@@ -345,6 +346,27 @@ class HostileInputSpec extends SparkSpec {
     // the same ids inside the ring stay under the ceiling and solve
     val ok = (0L to 40L).map(i => (i, "x")).toDF("doc_id", "text")
     assert(ops.Graph.sccColoring(ok, nNodes = 2, sparsity = 1).collect().length === 2)
+  }
+
+  test("shared prewarm against a missing sf dir: names every step, throws nothing, writes no table") {
+    val missing = java.nio.file.Files.createTempDirectory("graft-prewarm")
+      .resolve("no-such-sf").toString
+    val warehouse = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def warehouseDirs: Set[String] =
+      if (!java.nio.file.Files.isDirectory(warehouse)) Set.empty
+      else {
+        val ls = java.nio.file.Files.list(warehouse)
+        try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+      }
+    def tables: Set[String] = spark.catalog.listTables().collect().map(_.name).toSet
+    val (tablesBefore, dirsBefore) = (tables, warehouseDirs)
+    val failed = Bench.prewarm(spark, missing)
+    assert(failed === Tables.names ++ Seq("events_normalized", "bucketed",
+      "band_index", "bloom_index", "ivf_index", "pq_index", "bpe_model",
+      "quantile_hist", "quantile_hist_perturbed"))
+    assert(tables === tablesBefore)
+    assert(warehouseDirs === dirsBefore)
   }
 
   test("sequence detect: null ts orders deterministically, null event_type never matches") {

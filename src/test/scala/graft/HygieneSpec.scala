@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.window.WindowExec
+import scala.jdk.CollectionConverters._
 
 /** Session-hygiene sweep over EVERY declared query key:
   *
@@ -139,5 +140,20 @@ class HygieneSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.isEmpty,
       s"leaked cached RDDs after full query sweep: " +
         sc.getPersistentRDDs.values.map(_.toString).mkString("; "))
+  }
+
+  test("SparkSession.builder() is called only by Session.build and the sync CLI") {
+    // every harness and tool shares Session.build; SyncPipeline.main keeps
+    // its own builder because its SPARK_MASTER is a deployment setting
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val allowed = Set("graft/Session.scala", "graft/sync/SyncPipeline.scala")
+    val files = java.nio.file.Files.walk(root)
+    val hits = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder()"))
+      .map(f => root.relativize(f).toString.replace('\\', '/')).toSet
+    finally files.close()
+    assert(hits.nonEmpty, s"scan found no builder at all under ${root.toAbsolutePath}")
+    assert(hits.subsetOf(allowed), s"SparkSession.builder() outside Session.build: ${hits -- allowed}")
   }
 }

@@ -18,28 +18,6 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("star-round min frames: broadcast hint present iff the edge-count gate holds (r14)") {
-    // r13 advice: the min frames are one row per NODE — data-dependent
-    // at 100 TB (the near-dup candidate population), so the hint must be
-    // conditional: forced under the gate (bench-sized graphs never lose
-    // the broadcast), absent past it (AQE picks shuffle vs broadcast for
-    // data-sized frames instead of a forced OOM).
-    import spark.implicits._
-    val nbrs = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("ctr", "nbr")
-    def hints(df: DataFrame): Int = df.queryExecution.analyzed.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-    }.size
-    // the hinted subtrees are referenced more than once in the analyzed
-    // tree (mins rides inside `large`, which both the final join and the
-    // mins2 aggregate reuse), so count presence, not exact multiplicity
-    assert(hints(llm.Dedup.starRound(nbrs, hintMins = true)) >= 2)
-    assert(hints(llm.Dedup.starRound(nbrs, hintMins = false)) === 0)
-    // and the gated round computes the same edge set either way
-    val a = llm.Dedup.starRound(nbrs, hintMins = true).collect().toSet
-    val b = llm.Dedup.starRound(nbrs, hintMins = false).collect().toSet
-    assert(a === b)
-  }
-
   test("agg_hash_group: two-phase HashAggregate (map-side partial combine)") {
     val p = planOf(ops.Aggregates.pricingSummary(Tables.lineitem(spark, sfDir)))
     assert(p.contains("partial_sum"), p) // map-side combine
