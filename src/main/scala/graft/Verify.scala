@@ -6,13 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=k1,k2 — dump a subset (local iteration; unset for a full dump)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     // shared builder (Session.scala): bench-identical session settings
     val spark = Session.build(cpusDefault = "4")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=k1,k2 — dump a subset (local iteration; driver unsets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

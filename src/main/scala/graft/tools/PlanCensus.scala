@@ -45,6 +45,9 @@ object PlanCensus {
     val sfDir = censusArgs.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
     val outPath = "plan_census.json"
+    // the listed dump keys, checked before any session work
+    val dumpKeys = if (dump.isEmpty) Nil
+      else SparkEntry.select(dump.lift(1)).keys.toSeq.sorted
     val spark = Session.build(cpusDefault = "4")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -94,15 +97,12 @@ object PlanCensus {
     }
 
     if (dump.nonEmpty) {
-      val listed = dump.lift(1).fold(keys)(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      val unknown = listed.filterNot(keys.contains)
-      require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
       Files.createDirectories(Paths.get(dump(0)))
-      listed.foreach { name =>
+      dumpKeys.foreach { name =>
         Files.writeString(Paths.get(dump(0), s"$name.txt"),
           plan(name).explainString(org.apache.spark.sql.execution.FormattedMode))
       }
-      println(s"[census] dumped ${listed.size} plans to ${dump(0)}")
+      println(s"[census] dumped ${dumpKeys.size} plans to ${dump(0)}")
       spark.stop()
     } else if (checkMode) {
       val committed = if (Files.exists(Paths.get(outPath)))

@@ -21,42 +21,22 @@ class CoreOpsSpec extends SparkSpec {
     }
   }
 
-  test("every oracleSql key has a matching query") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet -- qs
-    assert(missing.isEmpty, s"oracleSql without query: $missing")
-  }
-
-  test("every query has oracle SQL unless consciously exempt (hash/sketch ops)") {
-    val exempt = Set(
-      "agg_approx_distinct", "agg_approx_quantiles", // sketches ≠ exact
-      "dedup_near_minhash",                          // xxhash64-derived
-      // dedup_simhash left the exempt list in round 7: the production
-      // 48-bit fingerprint now packs two portable rolling folds and is
-      // oracle-checked (the sim_quantized_topk promotion pattern)
-      "sim_lsh_topk", "sim_ivf_topk",                // ANN, recall-gated
-      "sim_ivf_persisted", "sim_pq_persisted",       // ANN epoch artifacts; equality+plan gated
-      "sim_pq_topk",                                 // PQ-quantized ANN, recall + determinism gated
-      "agg_hll_rollup",                              // HLL union estimate, 5%-gated above
-      "agg_hll_delta",                               // sketch epoch; exact-equality gate below
-      // text_fingerprint regained its oracle in round 2: the fold now runs
-      // over code points, expressible as DuckDB list_reduce
-      // scan_csv_malformed left the exempt list in round 6: the per-class
-      // corrupt-record COUNTS are engine-portable and oracle-checked now
-      "mm_decode_stub",                              // decode not SQL-expressible
-      "mm_image_phash",                              // aHash over decoded raster, gated in LlmOpsSpec
-      "mm_frame_sample",                             // y4m decode-derived, synthesis law gated in LlmOpsSpec
-      "mm_audio_windows",                            // WAV decode-derived, synthesis law gated in LlmOpsSpec
-      "mm_scene_cuts",                               // y4m decode-derived, synthesis law gated in LlmOpsSpec
-      "text_bpe_train", "text_bpe_encode",           // iterative merge loop not SQL-expressible, gated in BpeSpec
-      "text_bpe_encode_persisted",                   // epoch artifact; equality+reuse+plan gated in BpeSpec
-      "text_bpe_fertility",                          // BPE-derived; BpeSpec recompute gate
-      "dedup_semantic_trained")                      // Lloyd float training, gated in LlmOpsSpec
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- exempt
-    assert(missing.isEmpty, s"query without oracle and not exempt: $missing")
-    // every exempt key needs a ScalaTest gate — enumerated here so a new
-    // exemption forces a conscious decision
-    assert((exempt -- SparkEntry.queries.keySet).isEmpty)
+  test("registry: unique names, 280 Sql / 20 Exempt, gating specs exist") {
+    import SparkEntry.{Exempt, Query, Sql}
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"duplicate keys: ${names.diff(names.distinct)}")
+    // counts, not names: the exemptions are listed once, in their records
+    assert(SparkEntry.registry.count(_.oracle.isInstanceOf[Sql]) === 280)
+    val exempt = SparkEntry.registry.collect { case Query(n, _, Exempt(r)) => n -> r }
+    assert(exempt.size === 20)
+    exempt.foreach { case (n, reason) =>
+      val specs = """\w+Spec""".r.findAllIn(reason).toSeq
+      assert(specs.nonEmpty, s"$n: exemption names no gating spec: $reason")
+      specs.foreach(spec => assert(
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"src/test/scala/graft/$spec.scala")),
+        s"$n: gating spec $spec.scala does not exist"))
+    }
   }
 
   test("SpaceSaving sketch: exact when capacity >= cardinality, retains heavy hitters when not") {

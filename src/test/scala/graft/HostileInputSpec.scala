@@ -369,6 +369,14 @@ class HostileInputSpec extends SparkSpec {
     assert(warehouseDirs === dirsBefore)
   }
 
+  test("subset selector: unknown keys fail by name, blanks are trimmed") {
+    val err = intercept[IllegalArgumentException](SparkEntry.select(Some("scan_parquet, nope")))
+    assert(err.getMessage.contains("nope"), err.getMessage)
+    assert(!err.getMessage.contains("scan_parquet"), err.getMessage)
+    assert(SparkEntry.select(Some(" scan_parquet ")).keySet === Set("scan_parquet"))
+    assert(SparkEntry.select(None).keySet === SparkEntry.queries.keySet)
+  }
+
   test("sequence detect: null ts orders deterministically, null event_type never matches") {
     import java.sql.Timestamp
     def t(s: String) = Timestamp.valueOf(s)
