@@ -74,6 +74,7 @@ object SparkEntry {
       // reads the parquet side)
       Sql("SELECT doc_id, text, length(text) AS n_chars FROM documents ORDER BY doc_id")),
     Query("scan_orc", (s, d) => Scans.scanOrc(s, Tables.nation(s, d), d),
+      // twin of scan_jsonl, kept: the same rows through a different reader
       // content identity through the ORC round-trip (oracle reads parquet)
       Sql("SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey")),
     Query("validate_reject", (s, d) => Scans.validateReject(Tables.customer(s, d)),
@@ -87,6 +88,7 @@ object SparkEntry {
         |FROM dirty WHERE slno IS NULL OR name = '' OR segment = ''
         |ORDER BY COALESCE(slno, -1), name""".stripMargin)),
     Query("project_cast_string", (s, d) => Scans.projectCastString(Tables.nation(s, d)),
+      // twin of scan_csv_allstring, kept: an in-memory cast against that key's CSV reader round trip
       Sql("""SELECT CAST(n_nationkey AS VARCHAR) AS n_nationkey, n_name, CAST(n_regionkey AS VARCHAR) AS n_regionkey
         |FROM nation ORDER BY nation.n_nationkey""".stripMargin)),
     Query("filter_pred", (s, d) => Scans.filterPred(Tables.lineitem(s, d)),
@@ -127,13 +129,6 @@ object SparkEntry {
         | CAST(o_key IS NOT NULL AS BIGINT) AS in_old,
         | CAST(n_key IS NOT NULL AS BIGINT) AS in_new
         |FROM o FULL OUTER JOIN n ON o_key = n_key ORDER BY slno""".stripMargin)),
-    Query("join_theta_range", (s, d) => Joins.thetaRange(Tables.events(s, d)),
-      Sql("""WITH s AS (SELECT event_id AS s_id, value AS s_value FROM events
-        |  WHERE event_type = 'signup' AND event_id % 20 = 0),
-        | p AS (SELECT event_id AS p_id, value AS p_value FROM events WHERE event_type = 'purchase')
-        |SELECT s_id, COUNT(*) AS n_near, MIN(p_id) AS first_p
-        |FROM s JOIN p ON p_value BETWEEN s_value - 0.5 AND s_value + 0.5
-        |GROUP BY s_id ORDER BY s_id""".stripMargin)),
     Query("join_range_bucketed", (s, d) => Joins.thetaRangeBucketed(Tables.events(s, d)),
       Sql("""WITH s AS (SELECT event_id AS s_id, value AS s_value FROM events
         |  WHERE event_type = 'signup' AND event_id % 20 = 0),
@@ -495,6 +490,7 @@ object SparkEntry {
       SnapshotDiff.diffReconciled(Snapshots.oldSnapshot(c), Snapshots.newSnapshot(c), "slno")
         .orderBy("op", "slno", "col")
     },
+      // twin of diff_keyed, kept: bucketReconcile is the base a per-bucket publish builds on
       /* diff_reconciled: deliberately the SAME SQL as diff_keyed — the
          operator's contract is that bucket pruning changes the PLAN, never
          the changeset, so the oracle pins reconciled ≡ full diff. */
@@ -594,6 +590,7 @@ object SparkEntry {
     Query("dedup_containment", (s, d) => Dedup.ngramContainment(Corpus.docCorpus(Tables.documents(s, d))),
       Sql(containmentOracleSql)),
     Query("dedup_containment_prefix", (s, d) => Dedup.ngramContainmentPrefix(Corpus.docCorpus(Tables.documents(s, d))),
+      // twin of dedup_containment, kept: the exact form is the specs' reference for this lossless prefix law
       // the prefix-filtered twin is LOSSLESS — identical answer, same
       // oracle; ONE shared literal so the twins can't silently diverge
       Sql(containmentOracleSql)),
@@ -1996,6 +1993,7 @@ object SparkEntry {
         s.table(Aggregates.ensureQuantileHist(s, o, epoch = 8201L)),
         s.table(Aggregates.ensureQuantileHist(s, Snapshots.perturbedOrders(o), epoch = 8202L)))
     },
+      // twin of dq_drift_ks, kept: the persisted-epoch serve path (docs/EPOCHS.md) is a second contract
       // see driftKsOracleSql for the KS CTE notes; the persisted-epoch
       // serve is exactly equal to the recompute (integer bucket counts;
       // spec-pinned), so both keys share one oracle
@@ -2436,23 +2434,9 @@ object SparkEntry {
         | FROM log GROUP BY key)
         |SELECT key, price_cents, status, last_seq, n_changes FROM c
         |WHERE last_op <> 'D' ORDER BY key""".stripMargin)),
-    Query("dedup_cluster_banded", (s, d) => Dedup.nearDupClustersBanded(Corpus.docCorpus(Tables.documents(s, d))),
-      Sql(s"""WITH RECURSIVE $minhashCtes,
-         |edges AS (SELECT a_id AS src, b_id AS dst FROM cand
-         |          UNION ALL SELECT b_id, a_id FROM cand),
-         |nodes AS (SELECT DISTINCT doc_id FROM corpus),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM nodes
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-         |SELECT src AS doc_id, min(dst) AS cluster FROM reach GROUP BY src ORDER BY doc_id""".stripMargin)),
-    Query("dedup_cluster_stars", (s, d) => {
-      val corpus = Corpus.docCorpus(Tables.documents(s, d))
-      Dedup.clustersFromPairsLargeSmallStar(corpus, Dedup.minhashBandedCandidates(corpus))
-    },
-      // connected components are algorithm-independent: large/small-star must
-      // produce the exact same labels as min-label propagation, so it shares
-      // the transitive-closure oracle of dedup_cluster_banded verbatim
+    Query("dedup_cluster_stars", (s, d) => Dedup.nearDupClustersBanded(Corpus.docCorpus(Tables.documents(s, d))),
+      // connected components over the banded MinHash candidates, checked
+      // against the recursive-CTE transitive closure of the same pairs
       Sql(s"""WITH RECURSIVE $minhashCtes,
          |edges AS (SELECT a_id AS src, b_id AS dst FROM cand
          |          UNION ALL SELECT b_id, a_id FROM cand),
@@ -3361,18 +3345,12 @@ object SparkEntry {
           | floor(CAST(CAST(SUM(ABS(err)) AS BIGINT) AS DOUBLE)/count(*)/100*1e4 + 0.5)/1e4 AS mae,
           | floor(CAST(CAST(SUM(err) AS BIGINT) AS DOUBLE)/count(*)/100*1e4 + 0.5)/1e4 AS bias
           |FROM errs GROUP BY 1, 2 ORDER BY event_type, horizon""".stripMargin)),
-    // strongly connected components: closure by iterated squaring on the
-    // node²-bounded residue graph, scc_id from the mutual self-join (r8)
+    // strongly connected components of the node²-bounded residue graph:
+    // one data-sized edge scan, then driver-side Tarjan (r8, r14)
     Query("graph_scc", (s, d) => graft.ops.Graph.scc(Tables.documents(s, d)),
       /* graph_scc: mutual reachability from the recursive-CTE transitive
          closure of the half-corpus mod-250 link graph; scc_id = least
          member id, all integer arithmetic. */
-      Sql(sccSql)),
-    // node-linear-state coloring twin; answer pinned ≡ graph_scc (r9)
-    Query("graph_scc_coloring", (s, d) => graft.ops.Graph.sccColoring(Tables.documents(s, d)),
-      /* graph_scc_coloring: deliberately the SAME SQL as graph_scc — the
-         coloring algorithm's contract is node-linear STATE with an
-         identical answer (the diff_reconciled oracle discipline). */
       Sql(sccSql)),
     // the SCC quotient DAG: cross-component citation structure (r9)
     Query("graph_condensation", (s, d) => graft.ops.Graph.condensation(Tables.documents(s, d)),
@@ -4292,9 +4270,8 @@ object SparkEntry {
       |    h.l + h.b
       |  FROM holt h JOIN num d ON d.event_type = h.event_type AND d.rn = h.rn + 1)""".stripMargin
 
-  /** The SCC CTE chain (shared by graph_scc, its node-linear coloring
-    * twin graph_scc_coloring — the algorithms must agree — and the
-    * condensation DAG, which quotients the same ids). */
+  /** The SCC CTE chain (shared by graph_scc and the condensation DAG,
+    * which quotients the same ids). */
   private val sccCtes =
     """WITH RECURSIVE edges AS (
       |  SELECT DISTINCT doc_id % 250 AS src, (doc_id * 31 + doc_id // 7) % 250 AS dst

@@ -886,110 +886,40 @@ object Dedup {
   }
 
   /** Near-dup clustering: connected components over the Jaccard candidate
-    * pairs via iterative min-label propagation — the step that turns a
-    * pair list into canonical-document groups (cluster = min doc_id of
-    * the component; survivors are rows with cluster == doc_id). Each
-    * round is one join + one aggregation; rounds needed = component
-    * diameter (near-dup components are tiny — `iters` = 6 is generous;
-    * for long-diameter components [[clustersFromPairsLargeSmallStar]]
-    * converges in O(log n) rounds). Deterministic: min is order-free. */
-  def nearDupClusters(corpus: DataFrame, threshold: Double = 0.5, iters: Int = 50,
+    * pairs ([[clustersFromPairs]]) — the step that turns a pair list into
+    * canonical-document groups (cluster = min doc_id of the component;
+    * survivors are rows with cluster == doc_id). */
+  def nearDupClusters(corpus: DataFrame, threshold: Double = 0.5,
                       dfCap: Option[Int] = None): DataFrame =
-    clustersFromPairs(corpus, ngramJaccardPairs(corpus, threshold, dfCap), iters)
+    clustersFromPairs(corpus, ngramJaccardPairs(corpus, threshold, dfCap))
 
   /** Scale-path clustering: connected components over the BANDED MinHash
     * candidates ([[minhashBandedOracle]]) instead of exact Jaccard pairs.
     * Exact pair generation is quadratic in duplicate multiplicity (the
     * 10× smoke measured 73 s where banding stayed at ~4 s); at corpus
     * scale the LSH candidates are the only affordable edge set, and the
-    * label propagation is identical. Oracle-checked end-to-end: the same
+    * clustering is identical. Oracle-checked end-to-end: the same
     * generated hash-family SQL feeds a recursive CTE. */
-  def nearDupClustersBanded(corpus: DataFrame, iters: Int = 50): DataFrame =
-    clustersFromPairs(corpus, minhashBandedCandidates(corpus), iters)
+  def nearDupClustersBanded(corpus: DataFrame): DataFrame =
+    clustersFromPairs(corpus, minhashBandedCandidates(corpus))
 
-  /** Min-label propagation over an (a_id, b_id) pair list (shared by the
-    * exact-Jaccard and banded-candidate cluster operators).
+  /** Connected components over an (a_id, b_id) pair list: every doc of
+    * `corpus` labelled with its component's minimum doc_id (docs in no
+    * pair are their own cluster), ordered by doc_id. The one clustering
+    * engine behind [[nearDupClusters]], [[nearDupClustersBanded]] and
+    * [[graft.ops.Graph.components]].
     *
     * Driver finish: the pair count comes from the one job that
-    * materializes the pair checkpoint, and a list of at most
-    * `driverMaxEdges` pairs (default [[driverFinishMaxEdges]]) is
-    * collected once and labelled by [[driverComponents]] — near-dup pair
-    * lists are that small at bench scale, where the rounds below were
-    * mostly scheduling. Label propagation never shrinks the edge set, so
-    * past the bound every round runs distributed. A negative
-    * `driverMaxEdges` pins the distributed loop (spec seam). */
-  private[graft] def clustersFromPairs(corpus: DataFrame, pairSrc: DataFrame,
-                                iters: Int,
-                                driverMaxEdges: Long = driverFinishMaxEdges): DataFrame = {
-    // localCheckpoint, not persist: each round self-joins the
-    // previous labels, and cache lookup misses on the deduplicated
-    // self-join subtrees — lineage then doubles per round (measured
-    // 0.7s → 36s by round 6). Physical truncation keeps every round O(1).
-    // pairs first, so the two union branches don't each recompute them.
-    // The count is the one job an eager checkpoint would run anyway (an
-    // RDD count: no aggregate exchange); it also sizes the driver-finish
-    // guard.
-    val pairs = pairSrc.select(col("a_id"), col("b_id")).localCheckpoint(eager = false)
-    val nPairs = pairs.queryExecution.toRdd.count()
-    if (nPairs <= driverMaxEdges) driverComponents(corpus, pairs, nPairs)
-    else minLabelRounds(corpus, pairs, iters)
-  }
-
-  private def minLabelRounds(corpus: DataFrame, pairs: DataFrame, iters: Int): DataFrame = {
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-    // only docs that appear in a candidate pair can change label — the
-    // (overwhelmingly larger at scale) isolated rest are each their own
-    // cluster and are appended after the loop, never joined per round.
-    // Initialization FUSES the first propagation round: label(doc) =
-    // min(doc, direct neighbors) — one groupBy, same cost as the plain
-    // distinct-docs init, but star-shaped components (the near-dup norm)
-    // are already converged, so the loop runs only the single
-    // detect-no-change round instead of propagate + detect.
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("doc_id"),
-        least(col("src"), col("mn")).as("cluster"))
-      .localCheckpoint()
-    // iters is a RUNAWAY BOUND, not an expected round count: the loop
-    // exits at the fixpoint (components' min-label eccentricity rounds —
-    // 2-3 for near-dup data). If the bound ever trips, FAIL loudly below:
-    // returning partial labels would be a silent wrong answer diverging
-    // from the transitive-closure oracle. Un-thresholded LSH candidate
-    // edges chain further than Jaccard-gated ones, so the bound is
-    // generous; chain-shaped components should use
-    // clustersFromPairsLargeSmallStar (O(log n) rounds) instead.
-    var converged = false
-    var round = 0
-    while (!converged && round < iters) {
-      val nbrMin = edges.join(labels, edges("src") === labels("doc_id"))
-        .groupBy(col("dst")).agg(min(col("cluster")).as("nbr_min"))
-      // carry a per-row `changed` flag through a LAZY checkpoint: the
-      // convergence count below is the one action of the round — it both
-      // materializes the checkpoint partitions and counts changed rows,
-      // so the fixpoint guarantee costs zero extra jobs (an eager
-      // checkpoint + separate isEmpty scan measured 3× slower in-suite)
-      val next = labels.join(nbrMin, labels("doc_id") === nbrMin("dst"), "left")
-        .select(labels("doc_id"),
-          least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("cluster"),
-          coalesce(col("nbr_min") < col("cluster"), lit(false)).as("changed"))
-        .localCheckpoint(eager = false)
-      converged = next.filter(col("changed")).count() == 0L
-      labels = next.drop("changed")
-      round += 1
-    }
-    require(converged,
-      s"label propagation did not converge within $iters rounds — component diameter exceeds the bound")
-    withIsolated(corpus, labels)
-  }
-
-  /** Web-scale connected components: alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) over the same (a_id, b_id) pair list and with the same
-    * output contract as [[clustersFromPairs]]. Min-label propagation
-    * needs component-DIAMETER rounds — right for near-dup components
-    * (diameter 2-3), wrong for chain-shaped ones; star operations halve
-    * tree heights so convergence is O(log n) rounds regardless of shape.
+    * materializes the pair checkpoint; at most `driverMaxEdges` pairs
+    * (default [[driverFinishMaxEdges]]) are collected once and labelled
+    * by [[driverComponents]]. At bench scale every caller ends here. A
+    * negative `driverMaxEdges` pins the distributed loop (spec seam).
     *
+    * Above the bound, for every caller (`dedup_cluster` and
+    * `pipeline_training_prep` included): alternating large-star /
+    * small-star rounds (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC'14) — O(log n) rounds whatever the
+    * component shape, where min-label propagation needs DIAMETER rounds.
     * Each round is two grouped passes over the edge set:
     *  - LARGE-STAR: center every node; connect each strictly-larger
     *    neighbor to the center's minimum (of itself and all neighbors).
@@ -997,29 +927,26 @@ object Dedup {
     *    connect every smaller neighbor AND u itself to their minimum.
     * The fixpoint is a star forest — every non-root points directly at
     * its component's min id — detected as an unchanged edge set, counted
-    * in the same action that materializes the round's lazy checkpoint
-    * (the [[clustersFromPairs]] single-action-per-round discipline).
-    *
-    * Driver finish: rounds run only while the edge count, which every
-    * fingerprint already carries, is above `driverMaxEdges` (default
-    * [[driverFinishMaxEdges]]). Once it is at or under the bound — at
-    * bench scale before the first round, at scale after the data-sized
-    * rounds have contracted dense components — the edge set is
-    * collected once and [[driverComponents]] finishes the labelling. A
-    * negative `driverMaxEdges` pins the distributed loop (spec seam). */
-  private[graft] def clustersFromPairsLargeSmallStar(
-      corpus: DataFrame, pairSrc: DataFrame, iters: Int = 30,
-      driverMaxEdges: Long = driverFinishMaxEdges): DataFrame = {
+    * in the same action that materializes the round's lazy checkpoint.
+    * Once the rounds have contracted the edge count (which every
+    * fingerprint carries) under the bound, the driver finishes. */
+  private[graft] def clustersFromPairs(corpus: DataFrame, pairSrc: DataFrame,
+                                driverMaxEdges: Long = driverFinishMaxEdges): DataFrame = {
+    // localCheckpoint, not persist (cache lookup misses on iterative
+    // self-join subtrees). The RDD count is the one job an eager
+    // checkpoint would run anyway; it also sizes the driver-finish guard.
+    val pairs = pairSrc.select(col("a_id"), col("b_id")).localCheckpoint(eager = false)
+    val nPairs = pairs.queryExecution.toRdd.count()
+    if (nPairs <= driverMaxEdges) return driverComponents(corpus, pairs, nPairs)
     // convergence fingerprint: (count, sum of xxhash64(u,v)) computed in
     // ONE aggregate job. Equal fingerprints across a round ⇒ the edge
     // SET is unchanged for this domain: edges are distinct, so the only
     // false positive is a different edge set whose exact 64-bit hash
     // sums collide at equal cardinality — negligible against the graph
     // sizes here (and a phantom match exits the loop, so it must stay
-    // negligible: ~2^-64 per round). This
-    // replaces the round-4 exceptAll().count() + count() pair (two jobs
-    // and an extra full-edge-set shuffle per round) with the same
-    // single-action-per-round discipline as [[clustersFromPairs]].
+    // negligible: ~2^-64 per round). One action per round: an
+    // exceptAll().count() + count() pair would cost two jobs and an
+    // extra full-edge-set shuffle.
     // decimal(38,0) accumulation: a raw long sum of 64-bit hashes
     // overflows (ANSI mode throws); decimal holds ~1e19 edges' worth.
     // A null sum with a nonzero count would mean decimal overflow in a
@@ -1034,14 +961,17 @@ object Dedup {
       (n, if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
     }
     // pair sources emit a_id < b_id: orient big→small from the start
-    var edges = pairSrc.select(col("b_id").as("u"), col("a_id").as("v"))
+    var edges = pairs.select(col("b_id").as("u"), col("a_id").as("v"))
       .distinct().localCheckpoint(eager = false)
     // the fingerprint aggregate doubles as the materializing action for
     // the lazy checkpoint — one job covers both
     var edgeFp = fingerprint(edges)
     var converged = false
     var round = 0
-    while (!converged && edgeFp._1 > driverMaxEdges && round < iters) {
+    // 30 is a RUNAWAY BOUND, not an expected round count: O(log n)
+    // rounds reach the fixpoint. If it ever trips, fail loudly below —
+    // partial labels would be a silent wrong answer.
+    while (!converged && edgeFp._1 > driverMaxEdges && round < 30) {
       val nbrs = edges.select(col("u").as("ctr"), col("v").as("nbr"))
         .unionByName(edges.select(col("v").as("ctr"), col("u").as("nbr")))
       // each round's only edge-sized exchanges are the two partial
@@ -1064,13 +994,13 @@ object Dedup {
     if (converged) starForestLabels(corpus, edges)
     else {
       require(edgeFp._1 <= driverMaxEdges,
-        s"large/small-star did not converge within $iters rounds")
+        s"large/small-star did not converge within $round rounds")
       driverComponents(corpus, edges, edgeFp._1)
     }
   }
 
-  /** Driver-finish bound: at or under this many edges, both
-    * connected-components loops collect their edge set and finish on
+  /** Driver-finish bound: at or under this many edges,
+    * [[clustersFromPairs]] collects its edge set and finishes on
     * the driver ([[driverComponents]]: at the bound, 1e6 collected rows
     * and up to 2e6 label rows). */
   private[graft] val driverFinishMaxEdges = 1000000L
@@ -1098,7 +1028,7 @@ object Dedup {
     withIsolated(corpus, edges.select(col("u").as("doc_id"), col("v").as("cluster"))
       .unionByName(edges.select(col("v").as("doc_id"), col("v").as("cluster")).distinct()))
 
-  /** Driver finish shared by both connected-components loops: collect
+  /** Driver finish of [[clustersFromPairs]]: collect
     * the `n`-row edge list (two bigint columns, either orientation,
     * duplicates allowed) and label it with one iterative union-find.
     * The caller guards the collect with the count it already holds —

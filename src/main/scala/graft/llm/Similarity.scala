@@ -16,16 +16,6 @@ import graft.functions.VectorExprs.{vecDot, vecNorm, nonzeroDenom}
   */
 object Similarity {
 
-  /** Codegen'd dot product (graft.functions.DotProduct) — same sequential
-    * left-to-right double fold as the HOF formulation, ~20x faster on
-    * all-pairs workloads. Mirror SQL: `list_dot_product(a, b)`. */
-  def dot(a: Column, b: Column): Column = vecDot(a, b)
-
-  /** Cosine similarity in double arithmetic; mirror SQL:
-    * `list_dot_product(a,b)/(sqrt(list_dot_product(a,a))*sqrt(list_dot_product(b,b)))`. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / nonzeroDenom(vecNorm(a) * vecNorm(b))
-
   private def doubled(embeddings: DataFrame): DataFrame =
     // native array cast (codegen'd) — the transform(x => x.cast) HOF form
     // evaluates its lambda interpreted per ELEMENT (64 calls/row)

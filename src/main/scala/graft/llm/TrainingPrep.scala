@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * algebra; the only iteration, connected components, is mirrored by a
   * recursive CTE).
   *
-  * Stage shuffles at 100 TB: the banded MinHash candidate join + bounded
-  * label propagation (Dedup.nearDupClustersBanded — LSH candidates, NOT
+  * Stage shuffles at 100 TB: the banded MinHash candidate join + the
+  * large/small-star rounds (Dedup.nearDupClustersBanded — LSH candidates, NOT
   * the quadratic exact-Jaccard pair generation), one map-side sample
   * filter, and the per-row chunk expansion — sampling and chunking add
   * NO shuffle beyond the final output sort.

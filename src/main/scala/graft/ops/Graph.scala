@@ -224,10 +224,11 @@ object Graph {
     * node id — the "domain grouping" pass a crawl pipeline runs before
     * per-site quality aggregation.
     *
-    * Reuses [[graft.llm.Dedup.clustersFromPairsLargeSmallStar]]
-    * (Kiveris SoCC'14, O(log n) rounds) over a different edge source —
-    * the clustering engine is generic over any (a_id, b_id) pair list,
-    * which is the point of shipping it as a separate operator.
+    * Reuses [[graft.llm.Dedup.clustersFromPairs]] (driver finish, or
+    * Kiveris SoCC'14 large/small-star rounds above its bound) over a
+    * different edge source — the clustering engine is generic over any
+    * (a_id, b_id) pair list, which is the point of shipping it as a
+    * separate operator.
     * Self-loops (synthesis residue at doc_id ≡ 0 mod 1400) are dropped
     * from the PAIR list (the star contract requires a_id < b_id) but
     * their endpoints stay in the node universe via the `corpus`
@@ -244,7 +245,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a_id"),
         greatest(col("src"), col("dst")).as("b_id"))
       .distinct()
-    graft.llm.Dedup.clustersFromPairsLargeSmallStar(nodes, pairs)
+    graft.llm.Dedup.clustersFromPairs(nodes, pairs)
       .select(col("doc_id").as("node"), col("cluster").as("component"))
       .orderBy("node")
   }
@@ -765,129 +766,17 @@ object Graph {
     * graph has 210 SCCs over 231 nodes, biggest 9). SCC is what
     * separates a genuine link ring (mutual) from a one-way citation
     * chain — the link-farm primitive [[components]]' undirected view
-    * cannot see.
-    *
-    * Mechanism: transitive closure by ITERATED SQUARING — after k
-    * rounds the closure holds every path of length ≤ 2ᵏ, so
-    * ⌈log₂ nNodes⌉ rounds are PROVABLY a fixpoint for ANY input (a
-    * simple path in a ≤`nNodes`-node graph is shorter than `nNodes`):
-    * the unroll bound derives from the residue-space parameter, not
-    * from the data — stronger than the measured-cascade contract
-    * [[kcore]] needs. `scc_id(v) = least(v, min{u : v ⇄ u})` then
-    * falls out of one self-join of the closure with its transpose.
-    * All integer arithmetic on the deterministic synthetic graph —
+    * cannot see. Output: one row per node, node-ascending, with
+    * `scc_id = least(v, min{u : v ⇄ u})` and the component's size;
     * oracle-checked against a recursive-CTE closure.
     *
-    * Scale: every frame is node²-bounded (the closure of a
-    * residue-class graph — ≤ nNodes², independent of corpus size), so
-    * like every operator in this file the data-sized scan ends at the
-    * first `distinct`; 8 squarings of a ≤62.5k-row frame are small
-    * bounded shuffles. The closure form is the right tool ONLY because
-    * the node space is bounded; an unbounded host space would take the
-    * FW-BW coloring loop instead (node-linear state, more rounds) —
-    * documented trade, same family as dedup's banded-vs-exact twins. */
+    * Bounded model (r14): the node space is the mod-`nNodes` residue
+    * ring, so the distinct edge set is ≤ nNodes² whatever the corpus
+    * size. The only distributed work is the part that touches data —
+    * one scan ending at the edge `distinct` — and the SCC runs
+    * driver-side over the collected edges ([[sccBoundedModel]]:
+    * iterative Tarjan, one exact pass). At 100 TB the scan dominates. */
   def scc(documents: DataFrame, nNodes: Int = 250, sparsity: Int = 2): DataFrame = {
-    val base = documents.filter(col("doc_id") % sparsity === 0)
-      .select((col("doc_id") % nNodes).as("src"),
-        ((col("doc_id") * 31 + expr("doc_id div 7")) % nNodes).as("dst"))
-      .distinct()
-    val nodes = base.select(col("src").as("node"))
-      .union(base.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
-    var r = base.filter(col("src") =!= col("dst")).localCheckpoint(eager = false)
-    val squarings = 32 - Integer.numberOfLeadingZeros(nNodes - 1) // ceil(log2 n)
-    // each round's count() materializes the checkpoint AND tests the
-    // fixpoint in one job (the components one-job-per-round discipline):
-    // |R ∪ R∘R| = |R| ⟺ R∘R ⊆ R ⟺ R is transitively closed, so the
-    // loop usually exits well before the provable ⌈log₂ n⌉ bound (the
-    // denser the graph, the smaller its diameter — sf0.1 closes in 3
-    // rounds where the bound allows 8)
-    var size = r.count()
-    var closed = false
-    for (_ <- 1 to squarings if !closed) {
-      val r2 = r.union(r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
-          .select(col("x.src").as("src"), col("y.dst").as("dst")))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val s2 = r2.count()
-      if (s2 == size) closed = true else { r = r2; size = s2 }
-    }
-    val mutual = r.as("f").join(r.as("g"),
-        col("f.src") === col("g.dst") && col("f.dst") === col("g.src"))
-      .select(col("f.src").as("node"), col("f.dst").as("m"))
-    val ids = nodes.join(mutual, Seq("node"), "left")
-      .groupBy("node").agg(min(col("m")).as("mn"))
-      .select(col("node"), least(col("node"), coalesce(col("mn"), col("node"))).as("scc_id"))
-    val sizes = ids.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
-    ids.join(broadcast(sizes), "scc_id")
-      .select(col("node"), col("scc_id"), col("scc_size"))
-      .orderBy("node")
-  }
-
-  /** SCC by FORWARD-MIN COLORING + BACKWARD CONFIRMATION (r9) — the
-    * NODE-LINEAR-STATE scale twin of [[scc]]'s iterated-squaring
-    * closure (the FW-BW/coloring family: Orzan's coloring step, the
-    * distributed-SCC shape of Hong et al. / Slota et al.). The closure
-    * form is provably-bounded but node²-HEAVY — the r9 scale
-    * ladder measured it exactly quadratic in the residue space (wall
-    * ×3.9 and exchange records ×4.00 per node-space doubling, already
-    * 277 s at n=2500 locally) — so past a few thousand hosts THIS is
-    * the production path: every frame here is node- or edge-linear,
-    * never node².
-    *
-    * Round structure (outer peel, repeated until no node remains):
-    *  1. COLOR: forward min-propagation to fixpoint — color(v) =
-    *     min({v} ∪ ancestors(v)) within the remaining subgraph; each
-    *     step is one edge join against the broadcast node-bounded
-    *     color frame ([[bfsLevels]] doctrine — edges never shuffle).
-    *  2. CONFIRM: a node r with color(r)=r is a root; grow S backward
-    *     from the roots along edges that stay INSIDE the root's color
-    *     class. Theorem (the coloring-SCC invariant): S(r) is exactly
-    *     SCC(r) — every v⇄r has color r (a smaller ancestor of v
-    *     would be a smaller ancestor of r), and every path v→…→r lies
-    *     wholly inside color class r (a path node with a smaller
-    *     ancestor would recolor r), so the within-class backward
-    *     growth loses nothing.
-    *  3. PEEL: assign scc_id = r (the class min — for s∈SCC(r) with
-    *     s<r, s would be a smaller ancestor of r), remove S, restrict
-    *     edges, repeat. Every round extracts at least the SCC of the
-    *     remaining minimum (it is always its own root), and on real
-    *     link graphs many roots resolve per round.
-    *
-    * Output is IDENTICAL to [[scc]] (same ids, same sizes) — the
-    * oracle for `graph_scc_coloring` is deliberately the `graph_scc`
-    * SQL, the diff_reconciled discipline: the algorithm changes the
-    * plan, never the answer. Convergence is data-dependent (propagation
-    * rounds ≈ remaining diameter, peels ≈ SCC-DAG depth residue), so
-    * unlike the closure's provable ⌈log₂ n⌉ bound the unrolls are
-    * MEASURED-CASCADE contracts ([[kcore]] class) with LOUD exhaustion:
-    * a graph that needs more rounds fails the require instead of
-    * returning a wrong answer. Budgets passed as 0 (the default) are
-    * DERIVED from nNodes (12+4·(n/250) peels, 24·(n/250) propagation
-    * steps, measured on a past scale ladder), so a wider
-    * graph gets a wider budget without the caller re-deriving it; an
-    * explicit positive value still pins the budget exactly (r11 ADVICE).
-    *
-    * BOUNDED-MODEL COLLECT (r14): the distributed peel/color loop is
-    * gone. The r13 profile showed the whole operator was driver/AQE
-    * orchestration-bound at bench scale (45 scheduled jobs summing
-    * <1 s inside a 4-5 s wall), and the model makes the loop
-    * unnecessary at ANY scale: the node space is the mod-`nNodes`
-    * residue ring and the distinct edge set is ≤ nNodes² — both
-    * PARAMETER-bounded, independent of corpus size. So the distributed
-    * work is exactly the part that touches data — one corpus-sized
-    * scan ending at the edge `distinct` — and the SCC fixpoint runs
-    * driver-side over the collected bounded edge set (iterative
-    * Tarjan, linear in the model, the same reference GraphSpec's r11
-    * property gate replays). This is the r13 peel-bookkeeping collect
-    * (already ≤ nNodes rows per peel) taken to its end: collect the
-    * whole model once instead of a slice per peel. At 100 TB the scan
-    * dominates and nothing here changes; at bench scale the ~45-job
-    * orchestration disappears. maxPeels/maxProp are retained for
-    * signature compatibility and ignored — Tarjan needs no cascade
-    * budget (it is exact and terminates in one pass). */
-  def sccColoring(documents: DataFrame, nNodes: Int = 250, sparsity: Int = 2,
-                  maxPeels: Int = 0, maxProp: Int = 0): DataFrame = {
     val spark = documents.sparkSession
     val (nodes, _, ids) = sccBoundedModel(documents, nNodes, sparsity)
     val sizeOf = nodes.groupBy(ids).map { case (k, vs) => k -> vs.length.toLong }
@@ -898,13 +787,13 @@ object Graph {
       .toDF("node", "scc_id", "scc_size")
   }
 
-  /** The bounded SCC model shared by [[sccColoring]] and
+  /** The bounded SCC model shared by [[scc]] and
     * [[condensation]]: run the one DATA-sized job (scan → synthesized
     * edge distinct, output ≤ nNodes² rows by the residue-ring
     * parameter), collect it, and solve SCC driver-side with iterative
     * Tarjan. Returns (nodes ascending, self-loop-free distinct edges,
-    * node → scc_id map) where scc_id is the component's minimum node —
-    * exactly [[scc]]'s `least(v, min{u : v ⇄ u})`.
+    * node → scc_id map) where scc_id is the component's minimum node,
+    * `least(v, min{u : v ⇄ u})`.
     *
     * The nNodes² ceiling holds only for non-negative doc ids (a negative
     * id's `%` residue is negative, widening the ring), so the collect
@@ -982,39 +871,14 @@ object Graph {
     * crossing it. This is the frame a link-farm analysis actually
     * reads: intra-SCC edges (the mutual rings) collapse away and what
     * remains is the acyclic citation structure BETWEEN rings — which
-    * farm feeds which, and how thickly. Composes the SCC id map with
-    * one broadcast of the node-bounded map onto each edge endpoint
-    * (edges never shuffle — the membership-broadcast doctrine), then a
-    * pair-grain aggregate; every frame is ≤ edges and the output is
-    * ≤ SCC-pair-bounded. Oracle: the shared SCC CTEs + the same two
-    * id joins, all integer.
+    * farm feeds which, and how thickly.
     *
-    * The id source is [[sccColoring]] (r10 — it had been [[scc]]'s
-    * iterated-squaring closure): the two are spec-pinned to IDENTICAL
-    * ids, so the oracle stays the shared SCC SQL (the diff_reconciled
-    * discipline — the composition changes the plan, never the answer),
-    * but the quotient now inherits the NODE-LINEAR state of the
-    * coloring loop instead of the closure's n² frames — the r9 scale
-    * ladder measured the closure 277 s at n=2500 where coloring reads
-    * ~10 s flat, so past a few thousand hosts only this composition
-    * can run at all (the r10 condensation ladder leg holds a n=5000
-    * point the closure form cannot reach).
-    *
-    * EXHAUSTION CONTRACT (inherited, r11 note): the composition rides
-    * [[sccColoring]]'s data-dependent peel/propagation budgets, so a
-    * graph whose SCC-DAG peel depth exceeds the budget THROWS the
-    * loud require where the old closure form would have (slowly)
-    * answered — the measured-cascade trade, deliberate. Budgets left
-    * at 0 are derived from nNodes (12+4·(n/250) peels), so widening
-    * the graph widens the budget automatically; pass explicit values
-    * only to pin a tighter contract. */
-  def condensation(documents: DataFrame, nNodes: Int = 250, sparsity: Int = 2,
-                   maxPeels: Int = 0, maxProp: Int = 0): DataFrame = {
-    // r14: ride the bounded model directly (see [[sccColoring]]) — the
-    // collected self-loop-free edge set IS the quotient's input, so the
-    // two membership broadcasts + pair aggregate + sort the r13 shape
-    // still scheduled collapse into driver arithmetic over ≤ nNodes²
-    // rows; the only Spark job left is the data-sized edge distinct.
+    * The ids come from [[scc]]'s bounded model, and its collected
+    * self-loop-free edge set IS the quotient's input: the quotient is
+    * driver arithmetic over ≤ nNodes² rows, and the only Spark job is
+    * the data-sized edge distinct. Oracle: the shared SCC CTEs + two id
+    * joins and a pair-grain aggregate, all integer. */
+  def condensation(documents: DataFrame, nNodes: Int = 250, sparsity: Int = 2): DataFrame = {
     val spark = documents.sparkSession
     val (_, edges, ids) = sccBoundedModel(documents, nNodes, sparsity)
     import spark.implicits._
@@ -1032,18 +896,18 @@ object Graph {
     * classic within-radius closeness (reached/Σdist) and the harmonic
     * sum (Σ 1/d — the form that stays defined on disconnected graphs,
     * Boldi-Vigna "Axioms for Centrality" 2014). The hop cap is the
-    * standard scale compromise: exact all-pairs distances are the
-    * [[scc]] closure's n² problem with a distance dimension on top,
+    * standard scale compromise: exact all-pairs distances are a
+    * transitive closure's n² problem with a distance dimension on top,
     * while a 4-hop ball already separates hubs from periphery on a
     * small-diameter web graph.
     *
     * Mechanism: [[bfsLevels]] run from EVERY source at once — the
-    * frontier carries (root, node) pairs, node²-bounded like the scc
-    * closure; edges join the broadcast frontier and NEVER shuffle (the
-    * pagerank step doctrine). Level counts pivot to c1..c4 columns,
-    * so each output formula is one fixed AST over exact BIGINTs —
-    * deterministic double division only at the end, mirrored by the
-    * oracle's recursive-CTE min-level BFS. */
+    * frontier carries (root, node) pairs, node²-bounded like a
+    * transitive closure; edges join the broadcast frontier and NEVER
+    * shuffle (the pagerank step doctrine). Level counts pivot to c1..c4
+    * columns, so each output formula is one fixed AST over exact
+    * BIGINTs — deterministic double division only at the end, mirrored
+    * by the oracle's recursive-CTE min-level BFS. */
   def closeness(documents: DataFrame, nNodes: Int = 200,
       maxDepth: Int = 4): DataFrame = {
     val (edges, nodes) = linkGraph(documents, nNodes)

@@ -152,30 +152,12 @@ object Joins {
 
   /** Non-equi (theta/range) join: signup events paired with purchases in a
     * value band. The build side is bounded by a deterministic key sample
-    * (event_id % 20 = 0) and broadcast — at 100 TB you never nested-loop
-    * two unbounded sides; you bound and broadcast one, or band-bucket both
-    * (join on floor(value/band) ± 1) to recover an equi-join. */
-  def thetaRange(events: DataFrame): DataFrame = {
-    val signups = events
-      .filter(col("event_type") === "signup" && col("event_id") % 20 === 0)
-      .select(col("event_id").as("s_id"), col("value").as("s_value"))
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("value").as("p_value"))
-    broadcast(signups)
-      .join(purchases, col("p_value").between(col("s_value") - 0.5, col("s_value") + 0.5))
-      .groupBy(col("s_id"))
-      .agg(count(lit(1)).as("n_near"), min(col("p_id")).as("first_p"))
-      .orderBy("s_id")
-  }
-
-  /** Band-bucketed range join — the scalable form of [[thetaRange]]: map
-    * each value to a bucket of width = band, explode the probe side into
-    * bucket±1, and equi-join on the bucket id. The non-equi predicate
-    * survives only as a cheap residual filter, so the join is a plain
-    * hash-partitioned equi-join (no broadcast nested loop, no replicated
-    * side) — at 100 TB both sides shuffle once on the bucket key.
-    * Result is identical to thetaRange (same oracle SQL). */
+    * (event_id % 20 = 0). Band-bucketed: map each value to a bucket of
+    * width = band, explode the probe side into bucket±1, and equi-join on
+    * the bucket id. The non-equi predicate survives only as a cheap
+    * residual filter, so the join is a plain hash-partitioned equi-join
+    * (no broadcast nested loop, no replicated side) — at 100 TB both
+    * sides shuffle once on the bucket key. */
   def thetaRangeBucketed(events: DataFrame, band: Double = 0.5): DataFrame = {
     val signups = events
       .filter(col("event_type") === "signup" && col("event_id") % 20 === 0)

@@ -472,32 +472,30 @@ class GraphSpec extends SparkSpec {
     assert(sizes.values.max > 1, "fixture graph has no cycle — SCC vacuous")
   }
 
-  test("sccColoring: identical answer to the closure form, node-linear state (r9)") {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-    val closure = ops.Graph.scc(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val coloring = ops.Graph.sccColoring(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // the twin contract: same ids (class minima), same sizes, same rows
-    assert(coloring === closure, s"first diffs: ${
-      ((coloring -- closure) ++ (closure -- coloring)).take(3)}")
-    // degenerate inputs converge too: a pure 3-cycle plus an isolated
-    // chain (exercises multi-peel: chain nodes resolve only after their
-    // upstream SCCs peel away)
+  test("scc: tiny graphs partition every node into class minima") {
     import spark.implicits._
+    // a handful of ids under the mod-250 synthesis law: every node
+    // appears exactly once, and its id is the minimum of its class
     val tiny = Seq(0L, 3L, 6L, 9L, 12L, 15L).toDF("doc_id")
-    // synthesized edges for these ids under the mod-250 law are fixed;
-    // just assert the op runs and partitions all its nodes
-    val t = ops.Graph.sccColoring(tiny).collect()
+    val t = ops.Graph.scc(tiny).collect()
+    assert(t.nonEmpty)
     assert(t.map(_.getLong(0)).distinct.length === t.length)
     assert(t.map(r => r.getLong(1) <= r.getLong(0)).forall(identity))
+    // the class of each id contains it, and its size counts its members
+    val byId = t.groupBy(_.getLong(1))
+    t.foreach { r =>
+      assert(byId(r.getLong(1)).exists(_.getLong(0) == r.getLong(1)))
+      assert(r.getLong(2) === byId(r.getLong(1)).length.toLong)
+    }
+    // a 2-cycle at nNodes = 2: id 7 gives edge 1 → 0, id 8 gives 0 → 1
+    val cycle = ops.Graph.scc(Seq(7L, 8L).toDF("doc_id"), nNodes = 2, sparsity = 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(cycle === Seq((0L, 0L, 2L), (1L, 0L, 2L)))
   }
 
-  test("sccColoring: equals a driver-side Tarjan on random doc-id subsets (r11)") {
-    // property gate for the r11 strided loop (union-min combine, chg-flag
-    // convergence, per-peel classEdges): the fixture test pins ONE graph;
-    // this pins five random ones against an independent reference.
+  test("scc: equals a driver-side Tarjan on random doc-id subsets (r11)") {
+    // the fixture test pins ONE graph; this pins five random ones
+    // against a reference Tarjan written here.
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 5) {
@@ -550,7 +548,7 @@ class GraphSpec extends SparkSpec {
       nodes.foreach(v => if (!index.contains(v)) strongconnect(v))
       val sizes = comp.values.groupBy(identity).map { case (k, vs) => k -> vs.size.toLong }
       val expect = nodes.map(v => (v, comp(v), sizes(comp(v)))).toSet
-      val got = ops.Graph.sccColoring(ids.toDF("doc_id"), nNodes = nNodes)
+      val got = ops.Graph.scc(ids.toDF("doc_id"), nNodes = nNodes)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === expect, s"trial $trial (nNodes=$nNodes): first diffs ${
         ((got -- expect) ++ (expect -- got)).take(3)}")

@@ -321,18 +321,13 @@ class HostileInputSpec extends SparkSpec {
     // never a fabricated self-pair
     assert(ops.Graph.neighborJaccard(empty).collect().isEmpty)
     assert(ops.Graph.neighborJaccard(one).collect().isEmpty)
-    // both SCC forms: empty → empty (the coloring twin's accumulator
-    // starts null — r9 guard); the single even doc (id 8 → edge
-    // 8 → (8·31+1) % 250 = 249) yields two trivial SCCs, twins agree
+    // SCC: empty → empty; the single even doc (id 8 → edge
+    // 8 → (8·31+1) % 250 = 249) yields two trivial SCCs
     assert(ops.Graph.scc(empty).collect().isEmpty)
-    assert(ops.Graph.sccColoring(empty).collect().isEmpty)
     val two = Seq((8L, "solo")).toDF("doc_id", "text")
     val sc = ops.Graph.scc(two).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val scC = ops.Graph.sccColoring(two).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sc === scC, s"twins disagree: $sc vs $scC")
-    assert(sc.forall(_._3 == 1L), s"single edge fabricated a cycle: $sc")
+    assert(sc === Set((8L, 8L, 1L), (249L, 249L, 1L)), s"single edge fabricated a cycle: $sc")
   }
 
   test("scc bounded model: edges past the nNodes² ceiling fail before the collect") {
@@ -340,12 +335,12 @@ class HostileInputSpec extends SparkSpec {
     // 7 distinct edges over {-1, 0, 1} — past the 4-edge ceiling
     val docs = (-20L to 20L).map(i => (i, "x")).toDF("doc_id", "text")
     val err = intercept[IllegalArgumentException](
-      ops.Graph.sccColoring(docs, nNodes = 2, sparsity = 1))
+      ops.Graph.scc(docs, nNodes = 2, sparsity = 1))
     assert(err.getMessage.contains("nNodes=2") && err.getMessage.contains("nNodes² = 4"),
       err.getMessage)
     // the same ids inside the ring stay under the ceiling and solve
     val ok = (0L to 40L).map(i => (i, "x")).toDF("doc_id", "text")
-    assert(ops.Graph.sccColoring(ok, nNodes = 2, sparsity = 1).collect().length === 2)
+    assert(ops.Graph.scc(ok, nNodes = 2, sparsity = 1).collect().length === 2)
   }
 
   test("shared prewarm against a missing sf dir: names every step, throws nothing, writes no table") {

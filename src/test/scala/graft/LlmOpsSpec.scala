@@ -738,8 +738,29 @@ class LlmOpsSpec extends SparkSpec {
 
   // The public calls finish small edge sets on the driver; `pinned` is the
   // private[graft] seam (driverMaxEdges < 0) that keeps every round
-  // distributed, so the specs below still exercise the loops themselves.
+  // distributed, so the specs below still exercise the star loop itself.
   private val pinned = -1L
+
+  /** Independent second opinion for [[Dedup.clustersFromPairs]]:
+    * min-label propagation to its fixpoint on the driver, every node
+    * labelled with its component's minimum, node-ascending. It shares
+    * neither code nor algorithm with the star rounds or the union-find
+    * finish. */
+  private def minLabelReference(nodes: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val label = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)
+    var changed = true
+    while (changed) {
+      changed = false
+      pairs.foreach { case (a, b) =>
+        val m = math.min(label(a), label(b))
+        if (label(a) != m || label(b) != m) { label(a) = m; label(b) = m; changed = true }
+      }
+    }
+    nodes.sorted.map(v => v -> label(v))
+  }
+
+  private def labelRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   /** Driver actions (Dataset head/count/collect) run by `f`, by funcName,
     * in order — not raw Spark jobs: lazy-localCheckpoint catch-up work
@@ -772,14 +793,13 @@ class LlmOpsSpec extends SparkSpec {
 
   test("large/small-star clusters a chain whose diameter exceeds min-label rounds") {
     import spark.implicits._
-    // a 400-long chain: component diameter 400, far beyond min-label's
-    // round bound — exactly the shape large/small-star exists for
-    // (O(log n) rounds regardless of diameter)
+    // a 400-long chain: component diameter 400, far beyond the loop's
+    // 30-round runaway bound — a diameter-round algorithm could not
+    // finish it, large/small-star needs O(log n) rounds
     val n = 400L
     val corpus = (0L until n).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Dedup.clustersFromPairsLargeSmallStar(corpus, pairs, driverMaxEdges = pinned)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val labels = labelRows(Dedup.clustersFromPairs(corpus, pairs, driverMaxEdges = pinned))
     assert(labels.length === n.toInt)
     assert(labels.map(_._1).toSet === (0L until n).toSet)
     assert(labels.forall(_._2 == 0L), "chain must collapse to root 0")
@@ -795,32 +815,33 @@ class LlmOpsSpec extends SparkSpec {
     val n = 400L
     val links = (0L until n - 1).map(i => (i, i + 1))
     val both = links ++ links.map(_.swap)
-    def run(bound: Long)(s: org.apache.spark.sql.SparkSession): Array[(Long, Long)] = {
+    def run(bound: Long)(s: org.apache.spark.sql.SparkSession): Seq[(Long, Long)] = {
       import s.implicits._
-      Dedup.clustersFromPairsLargeSmallStar((0L until n).toDF("doc_id"),
-          both.toDF("a_id", "b_id"), driverMaxEdges = bound)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      labelRows(Dedup.clustersFromPairs((0L until n).toDF("doc_id"),
+          both.toDF("a_id", "b_id"), driverMaxEdges = bound))
     }
     val expected = (0L until n).map(_ -> 0L)
-    var handOff = Array.empty[(Long, Long)]
-    // actions: initial fingerprint, one round's fingerprint, the guarded
-    // edge collect, then the test's own collect of the result
+    var handOff = Seq.empty[(Long, Long)]
+    // actions (the pair checkpoint's RDD count is not a Dataset action):
+    // initial fingerprint, one round's fingerprint, the guarded edge
+    // collect, then the test's own collect of the result
     assert(actionsDuring(s => handOff = run(600L)(s)) ===
       Seq("head", "head", "collect", "collect"))
-    assert(handOff.toSeq === expected)
+    assert(handOff === expected)
     // the same answer from the pinned loop, which never collects edges
-    var distributed = Array.empty[(Long, Long)]
+    var distributed = Seq.empty[(Long, Long)]
     val pinnedActions = actionsDuring(s => distributed = run(pinned)(s))
     assert(pinnedActions.count(_ == "head") > 2 && pinnedActions.count(_ == "collect") === 1,
       pinnedActions)
-    assert(distributed.toSeq === expected)
+    assert(distributed === expected)
   }
 
   test("property: large/small-star == min-label connected components on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
     // random edge sets over 40 nodes: mixes isolated nodes, stars, chains
-    // and dense blobs — both algorithms must produce IDENTICAL labelings
+    // and dense blobs — the pinned star loop must produce the labelling
+    // of the driver-side min-label reference, in row order
     val genEdges: Gen[List[(Long, Long)]] = Gen.listOf(
       for {
         a <- Gen.chooseNum(0L, 39L)
@@ -829,25 +850,24 @@ class LlmOpsSpec extends SparkSpec {
     val params = SCTest.Parameters.default
       .withMinSuccessfulTests(10)
       .withInitialSeed(org.scalacheck.rng.Seed(7L))
-    val nodes = (0L until 40L).toDF("doc_id")
+    val ids = 0L until 40L
+    val nodes = ids.toDF("doc_id")
     val res = SCTest.check(params, Prop.forAll(genEdges) { edges =>
       val pairs = edges.distinct.toDF("a_id", "b_id")
-      val viaStars = Dedup.clustersFromPairsLargeSmallStar(nodes, pairs, driverMaxEdges = pinned)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val viaMinLabel = Dedup.clustersFromPairs(nodes, pairs, iters = 50, driverMaxEdges = pinned)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      viaStars == viaMinLabel
+      labelRows(Dedup.clustersFromPairs(nodes, pairs, driverMaxEdges = pinned)) ==
+        minLabelReference(ids, edges)
     })
     assert(res.passed, s"component-equivalence property failed: $res")
   }
 
-  test("property: the driver finish labels random graphs exactly as both distributed loops") {
+  test("property: driver finish == star loop == min-label reference on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
     // graphs of 1-40 nodes; pairs are drawn with replacement (duplicate
     // pairs) and usually miss some nodes (isolated nodes). The public
-    // calls finish on the driver at this size; the reference is each
-    // pinned loop, compared in output row order (doc_id ascending).
+    // call finishes on the driver at this size; the references are the
+    // pinned loop and the driver-side min-label propagation, compared in
+    // output row order (doc_id ascending).
     val genGraph: Gen[(Long, List[(Long, Long)])] = for {
       n <- Gen.chooseNum(1L, 40L)
       pairs <- Gen.listOf(for {
@@ -858,18 +878,12 @@ class LlmOpsSpec extends SparkSpec {
     val params = SCTest.Parameters.default
       .withMinSuccessfulTests(10)
       .withInitialSeed(org.scalacheck.rng.Seed(11L))
-    def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val res = SCTest.check(params, Prop.forAll(genGraph) { case (n, edges) =>
       val nodes = (0L until n).toDF("doc_id")
       val pairs = edges.toDF("a_id", "b_id")
-      val starDriver = labels(Dedup.clustersFromPairsLargeSmallStar(nodes, pairs))
-      val minLabelDriver = labels(Dedup.clustersFromPairs(nodes, pairs, iters = 50))
-      val starLoop = labels(
-        Dedup.clustersFromPairsLargeSmallStar(nodes, pairs, driverMaxEdges = pinned))
-      val minLabelLoop = labels(
-        Dedup.clustersFromPairs(nodes, pairs, iters = 50, driverMaxEdges = pinned))
-      starDriver == starLoop && minLabelDriver == minLabelLoop && starDriver == minLabelDriver
+      val driver = labelRows(Dedup.clustersFromPairs(nodes, pairs))
+      val loop = labelRows(Dedup.clustersFromPairs(nodes, pairs, driverMaxEdges = pinned))
+      driver == loop && driver == minLabelReference(0L until n, edges)
     })
     assert(res.passed, s"driver-finish equivalence property failed: $res")
   }
@@ -881,39 +895,49 @@ class LlmOpsSpec extends SparkSpec {
         import s2.implicits._
         val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toDF("doc_id")
         val edges = pairs.toDF("a_id", "b_id")
-        bound.fold(Dedup.clustersFromPairsLargeSmallStar(nodes, edges))(b =>
-          Dedup.clustersFromPairsLargeSmallStar(nodes, edges, driverMaxEdges = b))
+        bound.fold(Dedup.clustersFromPairs(nodes, edges))(b =>
+          Dedup.clustersFromPairs(nodes, edges, driverMaxEdges = b))
         ()
       }
     val star = Seq((1L, 2L), (1L, 3L))
     val chain = Seq((1L, 2L), (2L, 3L))
     // pinned loop. star {1-2, 1-3}: already a star forest -> fixpoint
     // after 1 round. expected actions = 1 (initial fingerprint, which
-    // also materializes the lazy edge checkpoint) + 1 round = 2. The
-    // round-4 implementation (exceptAll.count + count per round) cost 2
-    // actions per round and would fail these exact counts.
+    // also materializes the lazy edge checkpoint) + 1 round = 2; the
+    // pair checkpoint's RDD count is not a Dataset action. The round-4
+    // implementation (exceptAll.count + count per round) cost 2 actions
+    // per round and would fail these exact counts.
     assert(actionsFor(star, Some(pinned)).size === 2)
     // chain {1-2, 2-3}: one restructuring round plus the fixpoint round
     // -> 1 + 2 = 3 actions
     assert(actionsFor(chain, Some(pinned)).size === 3)
-    // the public call: the initial fingerprint, then the guarded edge
-    // collect of the driver finish — no round runs
-    assert(actionsFor(star, None) === Seq("head", "collect"))
-    assert(actionsFor(chain, None) === Seq("head", "collect"))
+    // the public call: the RDD count, then the guarded edge collect of
+    // the driver finish — no fingerprint, no round
+    assert(actionsFor(star, None) === Seq("collect"))
+    assert(actionsFor(chain, None) === Seq("collect"))
   }
 
   test("large/small-star matches min-label propagation on banded candidates") {
     val corpus = Corpus.docCorpus(documents)
-    val viaMinLabel = Dedup.clustersFromPairs(
-        corpus, Dedup.minhashBandedCandidates(corpus), iters = 50, driverMaxEdges = pinned)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaStars = Dedup.clustersFromPairsLargeSmallStar(
-        corpus, Dedup.minhashBandedCandidates(corpus), driverMaxEdges = pinned).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaStars === viaMinLabel)
-    // and the public call's driver finish agrees with both
-    assert(Dedup.nearDupClustersBanded(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet === viaMinLabel)
+    val cand = Dedup.minhashBandedCandidates(corpus)
+    val viaStars = labelRows(Dedup.clustersFromPairs(corpus, cand, driverMaxEdges = pinned))
+    val reference = minLabelReference(
+      corpus.select("doc_id").collect().map(_.getLong(0)).toSeq.distinct,
+      cand.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(viaStars === reference)
+    assert(reference.exists { case (d, c) => d != c }, "no candidate pair — comparison vacuous")
+    // and the public call's driver finish agrees
+    assert(labelRows(Dedup.nearDupClustersBanded(corpus)) === reference)
+  }
+
+  test("large/small-star over exact Jaccard pairs matches the public nearDupClusters") {
+    // dedup_cluster's path above the driver-finish bound: the pinned
+    // loop over the same ngramJaccardPairs the public call clusters
+    val corpus = Corpus.docCorpus(documents)
+    val viaStars = labelRows(
+      Dedup.clustersFromPairs(corpus, Dedup.ngramJaccardPairs(corpus), driverMaxEdges = pinned))
+    assert(viaStars === labelRows(Dedup.nearDupClusters(corpus)))
+    assert(viaStars.exists { case (d, c) => d != c }, "no Jaccard pair — comparison vacuous")
   }
 
   test("embedding delta dedup: drop same-bucket near-dups, keep bucket escapes and far vectors") {
