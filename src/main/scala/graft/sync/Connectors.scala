@@ -16,12 +16,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    DataFrame; a Sheets impl would fetch the value range, take row 1
   *    as the schema (all-string, like the reference at syncquill.py:64),
   *    and parallelize the rest.
-  *  - [[SyncTarget.merge]] receives the already-computed NEW snapshot
-  *    (old + changeset, set-based) and must publish it atomically-enough
-  *    for the store: parquet stages to `path + ".next"` then promotes by
-  *    rename; a BQ impl would instead translate the changeset to batched
-  *    DML or a MERGE statement — which is why the changeset rows ride
-  *    along: per-op DML needs them, snapshot stores ignore them.
+  *  - [[SyncTarget.merge]] receives the NEW snapshot — the source cast
+  *    to the target's types, which is the old table with the changeset
+  *    applied — and must publish it atomically-enough for the store:
+  *    parquet stages one scan → cast → write job to `path + ".next"`
+  *    through [[Sinks]], then promotes by rename; a BQ impl would instead
+  *    translate the changeset to batched DML or a MERGE statement — which
+  *    is why the lazy changeset rides along: per-op DML materializes and
+  *    replays it, snapshot stores ignore it.
   */
 trait SyncSource {
   def read(spark: SparkSession): DataFrame
@@ -31,9 +33,11 @@ trait SyncTarget {
   /** Current target table contents (diff baseline). */
   def read(spark: SparkSession): DataFrame
 
-  /** Publish `merged` (the post-changeset snapshot) over the target.
-    * `changes` is the keyed changeset that produced it, for connectors
-    * that apply deltas (BQ DML) rather than overwrite snapshots. */
+  /** Publish `merged` (the new snapshot, in this target's schema) over
+    * the target. `changes` is the lazy keyed changeset from the old table
+    * to `merged`, for connectors that apply deltas (BQ DML) rather than
+    * overwrite snapshots; a connector that replays it materializes it
+    * itself. */
   def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit
 
   /** R11 truncate-and-load: replace the whole table with `snapshot`. */
@@ -209,10 +213,11 @@ final case class JdbcTarget(url: String, table: String,
     }
   }
 
-  /** NOTE: expects a MATERIALIZED `changes` (SyncPipeline persists it
-    * before calling merge): the three DML passes are separate actions,
-    * and an unmaterialized changeset would be re-derived against the
-    * target table this method is actively mutating.
+  /** The changeset is `localCheckpoint`ed here, before the first DML
+    * pass: the passes are separate actions, and a lazy changeset would be
+    * re-derived against the table this method is actively mutating. This
+    * is the only target that replays the changeset, so it owns that
+    * materialization; the sync verb persists nothing.
     *
     * TRANSACTIONAL CONTRACT (r8, crash-mid-merge laws in PipelineSpec):
     *  - `atomic = false` (default) is the HALF-APPLY-FAITHFUL mode,
@@ -234,8 +239,9 @@ final case class JdbcTarget(url: String, table: String,
 
   def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String,
             atomic: Boolean): Unit = {
+    val delta = changes.localCheckpoint()
     val valueCols = merged.columns.filterNot(_ == key).toSeq
-    // ONE small aggregate over the (materialized) changeset decides which
+    // ONE small aggregate over the materialized changeset decides which
     // DML passes run and which columns updates touch. The changeset is
     // CELL-level for updates: one prepared statement per touched column
     // (statement text varies by column; values bind as ?). Column names
@@ -244,7 +250,7 @@ final case class JdbcTarget(url: String, table: String,
     // diffKeyed must not be able to inject identifiers. Skipping absent
     // op classes matters beyond tidiness: each pass is a Spark job whose
     // plan scans the TARGET TABLE (stored-key join below).
-    val opCols = changes.groupBy(col("op"), col("col")).count()
+    val opCols = delta.groupBy(col("op"), col("col")).count()
       .collect().map(r => (r.getString(0), r.getString(1)))
     val touched = opCols.collect { case ("update", c) => c }.distinct.sorted
     val unknown = touched.filterNot(valueCols.contains)
@@ -283,11 +289,11 @@ final case class JdbcTarget(url: String, table: String,
     val passes = Seq.newBuilder[(String, DataFrame)]
     if (opCols.exists(_._1 == "delete"))
       passes += s"DELETE FROM $table WHERE ${q(key)} = ?" ->
-        withStoredKey(changes.filter(col("op") === "delete"), None)
+        withStoredKey(delta.filter(col("op") === "delete"), None)
     touched.foreach { c =>
       passes += s"UPDATE $table SET ${q(c)} = ? WHERE ${q(key)} = ?" ->
         withStoredKey(
-          changes.filter(col("op") === "update" && col("col") === c), Some("new_val"))
+          delta.filter(col("op") === "update" && col("col") === c), Some("new_val"))
     }
     // inserts carry the whole-row JSON image; decode it Spark-side
     if (opCols.exists(_._1 == "insert")) {
@@ -295,7 +301,7 @@ final case class JdbcTarget(url: String, table: String,
         org.apache.spark.sql.types.StructType(valueCols.map(c =>
           org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType))))
       passes += s"INSERT INTO $table (${(key +: valueCols).map(q).mkString(", ")}) VALUES (${Seq.fill(valueCols.size + 1)("?").mkString(", ")})" ->
-        changes.filter(col("op") === "insert")
+        delta.filter(col("op") === "insert")
           .select(col("slno") +: valueCols.map(c => img.getField(c).as(c)): _*)
     }
     if (atomic) execAtomic(passes.result())

@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Changeset pretty-printer — the reference's human-in-the-loop preview
   * (R12, syncquill.py:164-215: ASCII table of Old/New rows per change
@@ -12,9 +12,14 @@ import org.apache.spark.sql.DataFrame
 object PrettyPrint {
 
   /** Render a changeset DataFrame (op, slno, col, old_val, new_val) as an
-    * ASCII table grouped by op, reference-style. */
-  def render(changes: DataFrame, maxRows: Int = 1000): String = {
-    val rows = changes.orderBy("op", "slno", "col").limit(maxRows).collect()
+    * ASCII table grouped by op, reference-style: its first `maxRows`
+    * changes in (op, slno, col) order. */
+  def render(changes: DataFrame, maxRows: Int = 1000): String =
+    render(changes.orderBy("op", "slno", "col").limit(maxRows).collect().toSeq)
+
+  /** Render changeset rows already on the driver (the sync verb's diff
+    * action collects them, ordered and bounded). */
+  def render(rows: Seq[Row]): String = {
     if (rows.isEmpty) return "No changes.\n"
     val header = Seq("op", "slno", "col", "old_value", "new_value")
     val cells = rows.map(r => header.indices.map(i => String.valueOf(r.get(i))))
@@ -29,7 +34,4 @@ object PrettyPrint {
     sb.append(sep).append('\n')
     sb.toString
   }
-
-  def show(changes: DataFrame, maxRows: Int = 1000): Unit =
-    print(render(changes, maxRows))
 }

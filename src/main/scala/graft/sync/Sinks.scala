@@ -7,9 +7,9 @@ import org.apache.spark.sql.DataFrame
   * all inserted rows) and truncate-and-load (R11, syncquill.py:131-146:
   * WRITE_TRUNCATE + autodetect). The merge write that replaces R8/R10's
   * per-cell UPDATE / per-row DELETE round-trips lives in the connector
-  * seam: SyncPipeline.sync computes the new snapshot set-based
-  * (SnapshotDiff.applyChangeset) and publishes it through
-  * [[SyncTarget.merge]] (stage-then-promote for snapshot stores).
+  * seam: SyncPipeline.sync publishes the source cast to the target's
+  * types through [[SyncTarget.merge]], which for a parquet target is one
+  * scan → cast → write job here, staged and then promoted by rename.
   *
   * All distributed parquet jobs; at scale add partitioning columns
   * (`partitionBy`) so downstream scans prune.

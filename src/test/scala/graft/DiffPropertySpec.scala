@@ -91,6 +91,53 @@ class DiffPropertySpec extends SparkSpec {
     })
   }
 
+  /** Typed snapshot rows: bigint key, then bigint / decimal(12,2) / date /
+    * string cells, each nullable, from small domains so unchanged, updated
+    * and null-transition cells all occur. Strings are never empty (the
+    * sync rejects empty cells). */
+  private type TypedRow = (Long, Option[Long], Option[BigDecimal], Option[java.sql.Date],
+    Option[String])
+  private val genTyped: Gen[Seq[TypedRow]] = for {
+    keys <- Gen.someOf(0L to 25L)
+    rows <- Gen.listOfN(keys.size, for {
+      qty <- Gen.option(Gen.chooseNum(-3L, 3L))
+      price <- Gen.option(Gen.chooseNum(-999L, 999L).map(c => BigDecimal(c, 2)))
+      day <- Gen.option(Gen.chooseNum(0, 3).map(i => java.sql.Date.valueOf(s"2024-01-0${i + 1}")))
+      name <- Gen.option(Gen.oneOf("a", "b", "a|b", "q\"uo\\te"))
+    } yield (qty, price, day, name))
+  } yield keys.toSeq.sorted.zip(rows).map { case (k, (q, p, d, n)) => (k, q, p, d, n) }
+
+  private def toTyped(rows: Seq[TypedRow]) = {
+    import spark.implicits._
+    rows.toDF("slno", "qty", "price", "day", "name")
+      .withColumn("price", col("price").cast("decimal(12,2)"))
+  }
+
+  test("law: sync into a typed parquet target == applyChangeset cast to the target schema") {
+    // the sheet arrives all-string; the target keeps its types, holds
+    // exactly what the string-domain apply law computes, and the verb's
+    // counts are the diff's per-op counts
+    import graft.sync.{ParquetSource, ParquetTarget, SyncPipeline}
+    import spark.implicits._
+    check("typed sync")(Prop.forAll(genTyped, genTyped) { (rt, rs) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_typed_law").toString
+      val (t, s) = (toTyped(rt), toTyped(rs))
+      val target = ParquetTarget(s"$dir/target")
+      target.truncateLoad(t)
+      allString(s).write.parquet(s"$dir/sheet")
+      val schema = target.read(spark).schema
+      val changes = SnapshotDiff.diffKeyed(t, s, "slno")
+      val byOp = changes.groupBy("op").count().as[(String, Long)].collect().toMap
+        .withDefaultValue(0L)
+      val want = SnapshotDiff.applyChangeset(t, changes, "slno")
+        .select(t.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      val r = SyncPipeline.sync(spark, ParquetSource(s"$dir/sheet"), target, "slno", preview = false)
+      val got = target.read(spark)
+      r == SyncPipeline.SyncResult(byOp.values.sum, byOp("insert"), byOp("delete"), byOp("update")) &&
+        got.schema == schema && got.exceptAll(want).count() == 0L && want.exceptAll(got).count() == 0L
+    })
+  }
+
   /** Snapshot in the IVM fixtures' schema: (slno, name, acctbal, segment)
     * with decimal-string balances (nullable) and a small segment domain
     * so group moves and vanishing groups occur often. */

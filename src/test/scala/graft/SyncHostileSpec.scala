@@ -1,0 +1,171 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
+import graft.sync.{ParquetSource, ParquetTarget, SnapshotDiff, SyncPipeline}
+
+/** Hostile input for the `sync` verb against a TYPED parquet target
+  * (bigint key, bigint / decimal(12,2) / date / string values) fed
+  * all-string sheets, the way a Sheets source meets a BigQuery table.
+  * Every rejection must name the side, the column and the count, and
+  * leave the target untouched; every accepted sync must keep the target
+  * schema and leave the table equal to the typed sheet.
+  *
+  * Each case runs under a time limit: an observed metric whose branch
+  * adaptive execution prunes (an empty side) must read as zero, never
+  * wait forever for a report that cannot come.
+  */
+class SyncHostileSpec extends SparkSpec with TimeLimits {
+  import spark.implicits._
+
+  implicit val signaler: Signaler = ThreadSignaler
+
+  private def hostile(name: String)(body: => Unit): Unit =
+    test(name)(failAfter(Span(180, Seconds))(body))
+
+  private val cols = Seq("slno", "qty", "price", "day", "name")
+  private type Cells = (String, String, String, String, String)
+
+  /** All-string sheet rows in `cols` order. */
+  private def sheet(rows: Cells*): DataFrame = rows.toDF(cols: _*)
+
+  /** The sheet as the typed table holds it. */
+  private def typed(df: DataFrame): DataFrame = df.select(
+    col("slno").cast("bigint").as("slno"), col("qty").cast("bigint").as("qty"),
+    col("price").cast("decimal(12,2)").as("price"), col("day").cast("date").as("day"),
+    col("name"))
+
+  private val base = Seq[Cells](
+    ("1", "10", "1.50", "2024-01-01", "a"),
+    ("2", "20", "2.50", "2024-01-02", "b"),
+    ("3", "30", "3.50", "2024-01-03", "c"))
+
+  private def tmpDir(): String = Files.createTempDirectory("graft_hostile").toString
+
+  /** A parquet target loaded with `table`, and a parquet source path per sheet. */
+  private def setup(table: DataFrame, sheets: DataFrame*): (ParquetTarget, Seq[String]) = {
+    val d = tmpDir()
+    val t = ParquetTarget(s"$d/target")
+    t.truncateLoad(table)
+    val paths = sheets.indices.map { i =>
+      sheets(i).write.parquet(s"$d/source$i")
+      s"$d/source$i"
+    }
+    (t, paths)
+  }
+
+  private def sync(t: ParquetTarget, src: String) =
+    SyncPipeline.sync(spark, ParquetSource(src), t, "slno", preview = false)
+
+  private def rows(df: DataFrame): Set[Row] = df.collect().toSet
+
+  /** The sync throws naming every one of `parts`, and writes nothing. */
+  private def rejected(t: ParquetTarget, src: String, parts: String*): Unit = {
+    val (before, schema) = (rows(t.read(spark)), t.read(spark).schema)
+    val e = intercept[IllegalArgumentException](sync(t, src))
+    parts.foreach(p => assert(e.getMessage.contains(p), e.getMessage))
+    assert(rows(t.read(spark)) === before)
+    assert(t.read(spark).schema === schema)
+    assert(!new File(t.path + ".next").exists())
+  }
+
+  /** The sync succeeds with `want`, keeps the schema and publishes the typed sheet. */
+  private def synced(t: ParquetTarget, src: String, want: SyncPipeline.SyncResult): Unit = {
+    val schema = t.read(spark).schema
+    assert(sync(t, src) === want)
+    assert(t.read(spark).schema === schema)
+    assert(rows(t.read(spark)) === rows(typed(spark.read.parquet(src))))
+  }
+
+  hostile("duplicate keys fail naming the side, the count and the keys; nothing is written") {
+    // '02' and '2' are one bigint key: a duplicate only the typed key shows
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)),
+      sheet(base :+ ("3", "31", "3.50", "2024-01-03", "c") :+ ("02", "20", "2.50", "2024-01-02", "b"): _*))
+    rejected(t, src, "source: 4 rows sharing a key (keys 2, 3)")
+
+    val (t2, Seq(src2)) = setup(typed(sheet(base :+ ("3", "99", "9.99", "2024-02-02", "z"): _*)),
+      sheet(base: _*))
+    rejected(t2, src2, "target: 2 rows sharing a key (keys 3)")
+  }
+
+  hostile("a cell that fails the cast to its target type fails naming the column") {
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)), sheet(
+      ("1", "ten", "1.50", "2024-01-01", "a"),
+      ("2", "20", "2.50", "2024-13-45", "b"),
+      ("3", "30", "12345678901.00", "2024-01-03", "c")))
+    rejected(t, src, "source: 1 cells in qty failing the cast to BIGINT",
+      "source: 1 cells in day failing the cast to DATE",
+      "source: 1 cells in price failing the cast to DECIMAL(12,2)")
+  }
+
+  hostile("an empty string cell and a null key fail naming them") {
+    val (t, Seq(empty, nullKey)) = setup(typed(sheet(base: _*)),
+      sheet(base.init :+ ("3", "30", "3.50", "2024-01-03", ""): _*),
+      sheet(base :+ ((null: String, "40", "4.50", "2024-01-04", "d")): _*))
+    rejected(t, empty, "source: 1 empty cells in name")
+    rejected(t, nullKey, "source: 1 rows with a null key")
+  }
+
+  hostile("non-canonical keys: '007' matches 7 in a bigint target, not in an all-string one") {
+    val (t, Seq(same, changed)) = setup(
+      typed(sheet(("7", "70", "7.00", "2024-07-07", "g"))),
+      sheet(("007", "70", "7.00", "2024-07-07", "g")),
+      sheet(("007", "71", "7.00", "2024-07-07", "g")))
+    synced(t, same, SyncPipeline.SyncResult(0, 0, 0, 0))
+    synced(t, changed, SyncPipeline.SyncResult(1, 0, 0, 1))
+    assert(t.read(spark).select("slno", "qty").as[(Long, Long)].collect().toSeq === Seq((7L, 71L)))
+
+    val (s, Seq(src)) = setup(sheet(("7", "70", "7.00", "2024-07-07", "g")),
+      sheet(("007", "70", "7.00", "2024-07-07", "g")))
+    assert(sync(s, src) === SyncPipeline.SyncResult(2, 1, 1, 0))
+    assert(rows(s.read(spark)) === rows(spark.read.parquet(src)))
+  }
+
+  hostile("reordered columns sync by name; added or dropped columns fail naming them") {
+    val neu = base.init :+ (("4", "40", "4.50", "2024-01-04", "d"))
+    val (t, Seq(reordered, added, dropped)) = setup(typed(sheet(base: _*)),
+      sheet(neu: _*).select("name", "day", "slno", "price", "qty"),
+      sheet(base: _*).withColumn("note", lit("x")),
+      sheet(base: _*).drop("price"))
+    rejected(t, added, "added [note]", "missing []")
+    rejected(t, dropped, "missing [price]", "added []")
+    synced(t, reordered, SyncPipeline.SyncResult(2, 1, 1, 0))
+    assert(t.read(spark).columns.toSeq === cols)
+  }
+
+  hostile("nulls in typed columns are values, not failures, and round-trip") {
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)), sheet(
+      ("1", null, "1.50", "2024-01-01", "a"),
+      ("2", "20", null, null, null),
+      ("3", "30", "3.50", "2024-01-03", "c")))
+    synced(t, src, SyncPipeline.SyncResult(4, 0, 0, 4))
+    synced(t, src, SyncPipeline.SyncResult(0, 0, 0, 0))
+  }
+
+  hostile("an empty source deletes every row and keeps the schema; an empty target inserts") {
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)), sheet())
+    synced(t, src, SyncPipeline.SyncResult(3, 0, 3, 0))
+    assert(t.read(spark).count() === 0)
+
+    val (e, Seq(full)) = setup(typed(sheet(base: _*)).limit(0), sheet(base: _*))
+    synced(e, full, SyncPipeline.SyncResult(3, 3, 0, 0))
+  }
+
+  hostile("three typed round trips in a row keep the schema and publish each sheet") {
+    val sheets = Seq(
+      base.map { case (k, q, p, d, n) => (k, q, p, d, n + "1") },
+      base.tail :+ (("4", "40", "4.50", "2024-01-04", "d")),
+      base.take(1) :+ (("5", "50", "5.05", "2024-01-05", "e")))
+    val (t, paths) = setup(typed(sheet(base: _*)), sheets.map(s => sheet(s: _*)): _*)
+    paths.foreach { src =>
+      val want = SnapshotDiff.diffKeyed(t.read(spark), typed(spark.read.parquet(src)), "slno")
+        .groupBy("op").count().as[(String, Long)].collect().toMap.withDefaultValue(0L)
+      synced(t, src, SyncPipeline.SyncResult(want.values.sum, want("insert"), want("delete"),
+        want("update")))
+    }
+  }
+}

@@ -44,7 +44,9 @@ Usage:
         two-consecutive-close min-run gate (see above). Exit 1 on any
         CONFIRMED breach or REMOVED key (vanished from the bench =
         coverage regression). NEW keys (no budget) are reported, not
-        failed. Without bench_prior.json, falls back to the strict
+        failed: a NEW key is either new or retired since that close,
+        so the fix is one added budget for that key, never a re-level
+        of every key. Without bench_prior.json, falls back to the strict
         single-close gate (every min-breach fails).
     python3 tools/bench_budget.py roll   [bench_full.json]
         persist this close's normalized medians AND mins to
@@ -174,8 +176,10 @@ def check(bench_path):
               f"({norm[k][0]/budget[k]:.1f}x on the med) — {ps}; "
               "triage isolated, min-confirms NEXT close if real")
     for k in new:
-        print(f"[budget] NEW {k}: normalized {norm[k][0]:.3f} (no committed budget; "
-              "run update with this change)")
+        print(f"[budget] NEW {k}: normalized {norm[k][0]:.3f} (no committed budget: "
+              "new key, or retired since this close; if new, add this one key to "
+              f"bench_budget.json as \"{k}\": {round(norm[k][0], 3)}, and leave "
+              "the other budgets as they are)")
     for k in removed:
         print(f"[budget] REMOVED {k}: budgeted but absent from the bench")
     mode = "two-close min" if prior is not None else "single-close (no bench_prior.json)"
