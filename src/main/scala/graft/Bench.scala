@@ -188,6 +188,11 @@ object Bench {
     // join_bucketed times the co-located JOIN, not the one-time bucketing
     warm("bucketed")(ops.ScaleJoins.ensureBucketed(spark,
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)))
+    // the day-partitioned and compacted event layouts are one-time
+    // ingests as well (join_dpp, scan_partition_pruned, maintenance_*)
+    warm("events_by_day")(ops.PartitionedLayout.ensurePartitionedEvents(spark,
+      Tables.events(spark, sfDir)))
+    warm("events_compact")(ops.Maintenance.compactEvents(spark, Tables.events(spark, sfDir)))
     // same write-time/probe-time split for the dedup index artifacts:
     // dedup_delta_index / dedup_bloom_prefilter time the delta PROBE,
     // not the once-per-epoch index build

@@ -112,6 +112,8 @@ object Dedup {
     * (the probe is cheap; unbounded growth is the only real cost). */
   private val collapseProbeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), java.lang.Boolean]()
+  /** Forget every memoized probe, so the next dedup key probes again. */
+  private[graft] def clearCollapseProbes(): Unit = collapseProbeCache.clear()
   private def shouldCollapse(df: DataFrame, key: org.apache.spark.sql.Column): Boolean = {
     if (collapseProbeCache.size > 256) collapseProbeCache.clear()
     val (planFp, filesFp) = graft.Warehouse.sourceFingerprint(df.sparkSession, df)

@@ -1,8 +1,8 @@
 package org.apache.spark
 
-/** Test-only accessor for the private[spark] listener bus: lets specs
+/** Accessor for the private[spark] listener bus: PlanCensus and the specs
   * drain async listener events deterministically instead of sleeping. */
-object GraftTestBus {
+object GraftBus {
   def drain(sc: SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
 }

@@ -358,7 +358,7 @@ class HostileInputSpec extends SparkSpec {
     val (tablesBefore, dirsBefore) = (tables, warehouseDirs)
     val failed = Bench.prewarm(spark, missing)
     assert(failed === Tables.names ++ Seq("events_normalized", "bucketed",
-      "band_index", "bloom_index", "ivf_index", "pq_index", "bpe_model",
+      "events_by_day", "events_compact", "band_index", "bloom_index", "ivf_index", "pq_index", "bpe_model",
       "quantile_hist", "quantile_hist_perturbed"))
     assert(tables === tablesBefore)
     assert(warehouseDirs === dirsBefore)

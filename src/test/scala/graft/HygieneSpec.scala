@@ -83,7 +83,7 @@ class HygieneSpec extends SparkSpec {
         // drain the async bus BEFORE advancing currentKey: the listener
         // reads currentKey at processing time, so an undrained event from
         // this query would be attributed to the next key
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext, 30000)
+        org.apache.spark.GraftBus.drain(spark.sparkContext, 30000)
       }
     } finally spark.listenerManager.unregister(listener)
     (offenders.toSet, cartesians.toSet)

@@ -786,7 +786,7 @@ class LlmOpsSpec extends SparkSpec {
     // reading the queue (a stability-poll heuristic flaked under load)
     try {
       f(s2)
-      org.apache.spark.GraftTestBus.drain(s2.sparkContext, 30000)
+      org.apache.spark.GraftBus.drain(s2.sparkContext, 30000)
       scala.jdk.CollectionConverters.IterableHasAsScala(actions).asScala.toSeq
     } finally s2.listenerManager.unregister(listener)
   }

@@ -581,4 +581,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("partial_count"), p)
   }
+
+  test("census job and stage counts repeat, and see the jobs graph_scc runs while built") {
+    // graph_scc's returned plan is a local relation: its shape counts are
+    // all zero, so only the construction counts can see its one job
+    val keys = Seq("graph_scc", "agg_assoc_rules", "dedup_cluster")
+    def census() = keys.map(k => k -> tools.PlanCensus.counts(spark, sfDir, k).toMap).toMap
+    val (first, second) = (census(), census())
+    assert(first === second)
+    assert(first("graph_scc")("construct_jobs") >= 1, first("graph_scc"))
+  }
 }

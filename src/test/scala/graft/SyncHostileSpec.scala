@@ -8,8 +8,9 @@ import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
 import graft.sync.{ParquetSource, ParquetTarget, SnapshotDiff, SyncPipeline}
 
-/** Hostile input for the `sync` verb against a TYPED parquet target
-  * (bigint key, bigint / decimal(12,2) / date / string values) fed
+/** Hostile input for the `sync` and `upsert` verbs against a TYPED
+  * parquet target (bigint key, bigint / decimal(12,2) / date / string
+  * values) fed
   * all-string sheets, the way a Sheets source meets a BigQuery table.
   * Every rejection must name the side, the column and the count, and
   * leave the target untouched; every accepted sync must keep the target
@@ -93,13 +94,16 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
   }
 
   hostile("a cell that fails the cast to its target type fails naming the column") {
+    // a price with more scale than decimal(12,2) and a date with a time of
+    // day cast without error but lose information: failures too
     val (t, Seq(src)) = setup(typed(sheet(base: _*)), sheet(
       ("1", "ten", "1.50", "2024-01-01", "a"),
       ("2", "20", "2.50", "2024-13-45", "b"),
-      ("3", "30", "12345678901.00", "2024-01-03", "c")))
+      ("3", "30", "12345678901.00", "2024-01-03", "c"),
+      ("4", "40", "1.239", "2024-01-05 13:00", "d")))
     rejected(t, src, "source: 1 cells in qty failing the cast to BIGINT",
-      "source: 1 cells in day failing the cast to DATE",
-      "source: 1 cells in price failing the cast to DECIMAL(12,2)")
+      "source: 2 cells in day failing the cast to DATE",
+      "source: 2 cells in price failing the cast to DECIMAL(12,2)")
   }
 
   hostile("an empty string cell and a null key fail naming them") {
@@ -167,5 +171,25 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
       synced(t, src, SyncPipeline.SyncResult(want.values.sum, want("insert"), want("delete"),
         want("update")))
     }
+  }
+
+  hostile("upsert into a typed target keeps its schema and loads the typed sheet") {
+    val neu = base.init :+ (("4", "40", "4.05", "2024-01-04", "d"))
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)),
+      sheet(neu: _*).select("name", "day", "slno", "price", "qty"))
+    val schema = t.read(spark).schema
+    SyncPipeline.upsert(spark, ParquetSource(src), t, "slno")
+    assert(t.read(spark).schema === schema)
+    assert(rows(t.read(spark)) === rows(typed(sheet(neu: _*))))
+  }
+
+  hostile("upsert rejects a duplicate key naming it; nothing is written") {
+    val (t, Seq(src)) = setup(typed(sheet(base: _*)),
+      sheet(base :+ ("02", "21", "2.50", "2024-01-02", "b"): _*))
+    val before = rows(t.read(spark))
+    val e = intercept[IllegalArgumentException](
+      SyncPipeline.upsert(spark, ParquetSource(src), t, "slno"))
+    assert(e.getMessage.contains("source: 2 rows sharing a key (keys 2)"), e.getMessage)
+    assert(rows(t.read(spark)) === before)
   }
 }
