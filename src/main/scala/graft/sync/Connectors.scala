@@ -18,9 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    and parallelize the rest.
   *  - [[SyncTarget.merge]] receives the NEW snapshot — the source cast
   *    to the target's types, which is the old table with the changeset
-  *    applied — and must publish it atomically-enough for the store:
-  *    parquet stages one scan → cast → write job to `path + ".next"`
-  *    through [[Sinks]], then promotes by rename; a BQ impl would instead
+  *    applied, read back from the diff's own key-partitioned shuffle of
+  *    the source — and must publish it atomically-enough for the store:
+  *    parquet stages one write job (a task per reduce partition) to
+  *    `path + ".next"` through [[Sinks]], then promotes by rename; a BQ
+  *    impl would instead
   *    translate the changeset to batched DML or a MERGE statement — which
   *    is why the lazy changeset rides along: per-op DML materializes and
   *    replays it, snapshot stores ignore it.

@@ -9,7 +9,10 @@ import org.apache.spark.sql.DataFrame
   * per-cell UPDATE / per-row DELETE round-trips lives in the connector
   * seam: SyncPipeline.sync publishes the source cast to the target's
   * types through [[SyncTarget.merge]], which for a parquet target is one
-  * scan → cast → write job here, staged and then promoted by rename.
+  * write job here, staged and then promoted by rename. That job reads
+  * the source the diff job already scanned, cast and shuffled by key,
+  * one task and one file per reduce partition; `upsert`'s load reads
+  * its check job's shuffle the same way.
   *
   * All distributed parquet jobs; at scale add partitioning columns
   * (`partitionBy`) so downstream scans prune.

@@ -1,6 +1,8 @@
 package graft.sync
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftFrames, Row, SparkSession}
+import org.apache.spark.sql.execution.DoNotCleanup
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, StructField, TimestampType}
@@ -12,9 +14,14 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, 
   *    preview, its per-op counts and the validation counts together; when
   *    there are changes, ONE publish writes the source cast to the
   *    target's types (vs the reference's one DML round-trip per changed
-  *    cell / deleted row, syncquill.py:87,105).
+  *    cell / deleted row, syncquill.py:87,105), read back from the
+  *    diff's own shuffle of the source.
   *  - `upsert`: truncate-and-load the target from the source cast to
-  *    the target's types (R11), after the same source checks.
+  *    the target's types (R11), after the same source checks; the load
+  *    reads the check action's shuffle of the source.
+  *
+  * Each verb scans and casts the source once: the write runs one task
+  * per reduce partition of that shuffle (see `shuffled`).
   *
   * Auth/config (R13/R14) collapse to SparkSession config + method args —
   * there is no OAuth dance against parquet. Validation (R2) fails before
@@ -64,11 +71,12 @@ object SyncPipeline {
     c.isNotNull && (t.isNull || lossy)
   }
 
-  /** The source aligned by name to `fields` and each column `try_cast` to
-    * its field's type (`typed`), plus the same with one flag long per 63
-    * checks (`flagged`) and the counts of each check over those longs
-    * (`checks`): null keys, empty string cells, and cells whose cast
-    * fails or loses information. Missing or added columns fail at once. */
+  /** The source aligned by name to `fields` and each column not already
+    * of its field's type `try_cast` to it (`typed`), plus the same with
+    * one flag long per 63 checks (`flagged`) and the counts of each check
+    * over those longs (`checks`): null keys, empty string cells, and
+    * cells whose cast fails or loses information. Missing or added
+    * columns fail at once. */
   private final case class Checked(typed: DataFrame, flagged: DataFrame, checks: Seq[Column])
 
   private def checked(src: DataFrame, fields: Seq[StructField], key: String): Checked = {
@@ -79,7 +87,11 @@ object SyncPipeline {
       s"the target's: missing [${dropped.mkString(", ")}], added [${added.mkString(", ")}]")
     require(want.contains(key), s"validation failed: key column $key is not in the target")
 
-    val typedCols = fields.map(f => col(f.name).try_cast(f.dataType).as(f.name))
+    // a column already of its field's type stays the source's own
+    // attribute (no identity cast whose alias the optimizer would drop),
+    // so the shuffle of `flagged` outputs exactly `flagged`'s attributes
+    val typedCols = fields.map(f => if (src.schema(f.name).dataType == f.dataType) col(f.name)
+      else col(f.name).try_cast(f.dataType).as(f.name))
     val checks: Seq[(String, Column)] = ("rows with a null key" -> col(key).isNull) +:
       (src.schema.fields.toSeq.collect {
         case f if f.dataType == StringType => s"empty cells in ${f.name}" -> (col(f.name) === "")
@@ -100,19 +112,44 @@ object SyncPipeline {
         (col(s"__bad${i / 63}") bitwiseAND (1L << (i % 63))) =!= 0, 1)).as(checks(i)._1)))
   }
 
+  /** `df`'s rows, read back from the shuffle stage that the action
+    * already run on `ran` wrote from `df` (the stage whose output is
+    * `df`'s own attributes), through that stage's coalesced read: no
+    * second scan or cast, one task per reduce partition after
+    * coalescing. `df` itself when the executed plan has no such stage
+    * (adaptive execution is off, or removed the side), reads it split
+    * for skew, or removes its shuffle files once the action ends. */
+  private def shuffled(ran: DataFrame, df: DataFrame): DataFrame = {
+    val out = df.queryExecution.analyzed.output.map(_.exprId)
+    def isDf(s: ShuffleQueryStageExec) = s.output.map(_.exprId) == out
+    val read = if (ran.queryExecution.shuffleCleanupMode != DoNotCleanup) None
+      else Stages.collectFirst(ran.queryExecution.executedPlan) {
+        case r @ AQEShuffleReadExec(s: ShuffleQueryStageExec, _) if isDf(s) =>
+          Option.when(r.isCoalescedRead)(r)
+        case s: ShuffleQueryStageExec if isDf(s) => Some(s)
+      }.flatten
+    read.fold(df)(GraftFrames.ofPlan(df.sparkSession, _))
+  }
+
+  /** Walks adaptive plans into their query stages. */
+  private object Stages extends AdaptiveSparkPlanHelper
+
   /** A row of counts as (name, count) pairs. */
   private def named(r: Row): Seq[(String, Long)] =
     r.schema.fieldNames.toSeq.zip(r.toSeq.map(_.asInstanceOf[Long]))
 
+  /** Up to 10 keys of `df` that several rows share, in order (a query;
+    * failure path only). */
+  private def firstShared(df: DataFrame, key: String): Seq[Any] =
+    df.groupBy(key).count().filter(col("count") > 1).select(key).orderBy(key).limit(10)
+      .collect().map(_.get(0)).toSeq
+
   /** Throws naming `side`, the check and its count for every non-zero
-    * count, and up to 10 keys of `df` that several rows share. */
-  private def rejectBad(sides: Seq[(String, Seq[(String, Long)], DataFrame)], key: String): Unit = {
-    val problems = sides.flatMap { case (side, counts, df) =>
+    * count, and the keys `shared` gives when rows share a key. */
+  private def rejectBad(sides: Seq[(String, Seq[(String, Long)], () => Seq[Any])]): Unit = {
+    val problems = sides.flatMap { case (side, counts, shared) =>
       counts.collect { case (what, n) if n > 0 =>
-        // failure path only: a query naming up to 10 of the shared keys
-        val keys = if (what != SharedKeys) "" else df
-          .groupBy(key).count().filter(col("count") > 1).select(key).orderBy(key).limit(10)
-          .collect().map(_.get(0)).mkString(" (keys ", ", ", ")")
+        val keys = if (what != SharedKeys) "" else shared().mkString(" (keys ", ", ", ")")
         s"$side: $n $what$keys"
       }
     }
@@ -133,7 +170,9 @@ object SyncPipeline {
     * and counts, before anything is written. A snapshot target then
     * publishes the typed source itself: `applyChangeset(t, diffKeyed(t, s)) ≡ s`
     * (DiffPropertySpec), so re-reading the target and joining the
-    * changeset back in would rebuild the same table. */
+    * changeset back in would rebuild the same table. The typed source it
+    * publishes is the diff's own hash-partitioned shuffle of it, so the
+    * publish neither scans nor casts the sheet again. */
   def sync(spark: SparkSession, source: SyncSource, target: SyncTarget,
            key: String, preview: Boolean): SyncResult = {
     val tgt = target.read(spark)
@@ -150,14 +189,16 @@ object SyncPipeline {
     // an observed branch AQE pruned (an empty side) reports nothing: count 0
     val metrics = diff.queryExecution.observedMetrics
     def counts(name: String): Seq[(String, Long)] = metrics.get(name).toSeq.flatMap(named)
-    rejectBad(Seq(("source", counts("source"), src.typed), ("target", counts("target"), tgt)), key)
+    rejectBad(Seq(("source", counts("source"), () => firstShared(src.typed, key)),
+      ("target", counts("target"), () => firstShared(tgt, key))))
 
     val byOp = counts("changes").toMap.withDefaultValue(0L)
     val total = byOp.values.sum
     if (preview) print(PrettyPrint.render(rows))
     if (total == 0) { println("No changes."); SyncResult(0, 0, 0, 0) }
     else {
-      target.merge(spark, src.typed, SnapshotDiff.diffKeyed(tgt, src.typed, key), key)
+      val merged = shuffled(diff, src.flagged).select(want.map(col): _*)
+      target.merge(spark, merged, SnapshotDiff.diffKeyed(tgt, src.typed, key), key)
       SyncResult(total, byOp("insert"), byOp("delete"), byOp("update"))
     }
   }
@@ -169,17 +210,25 @@ object SyncPipeline {
 
   /** `upsert` verb: whole-source truncate-and-load (R11). Into an
     * existing target it loads the source cast to the target's types,
-    * after the checks `sync` runs on the source (one job); a new target
-    * gets the source's own types and the same key and cell checks. */
+    * after the checks `sync` runs on the source; a new target gets the
+    * source's own types and the same key and cell checks. One check
+    * action observes the counts over the windowed source and collects the
+    * first 10 rows that share a key (none on a valid sheet); the load
+    * then writes the source that action already scanned, cast and
+    * shuffled by key. */
   def upsert(spark: SparkSession, source: SyncSource, target: SyncTarget, key: String): Unit = {
     val raw = source.read(spark)
     val fields = (try target.read(spark).schema catch {
       case _: AnalysisException | _: java.sql.SQLException => raw.schema
     }).fields.toSeq
+    val want = fields.map(_.name)
     val src = checked(raw, fields, key)
-    val r = windowed(src.flagged, key).agg(sharedKeys, src.checks: _*).head()
-    rejectBad(Seq(("source", named(r), src.typed)), key)
-    target.truncateLoad(src.typed)
+    val check = windowed(src.flagged, key).observe("source", sharedKeys, src.checks: _*)
+      .filter(col("__n") > 1).select(want.map(col): _*).orderBy(key).limit(10)
+    val shared = check.collect().map(_.getAs[Any](key)).distinct.toSeq
+    rejectBad(Seq(("source", check.queryExecution.observedMetrics.get("source").toSeq
+      .flatMap(named), () => shared)))
+    target.truncateLoad(shuffled(check, src.flagged).select(want.map(col): _*))
   }
 
   /** Path-based `upsert` (CLI / harness form). */

@@ -2,8 +2,11 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
 import graft.sync.{ParquetSource, ParquetTarget, SnapshotDiff, SyncPipeline}
@@ -159,6 +162,29 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
     synced(e, full, SyncPipeline.SyncResult(3, 3, 0, 0))
   }
 
+  /** `body` with session conf `k` set to `v`, then restored. */
+  private def withConf(k: String, v: String)(body: => Unit): Unit = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  hostile("with no shuffle to read back, a sync and an upsert scan and cast the sheet themselves") {
+    // adaptive execution off: the executed plans hold no query stage;
+    // shuffle file clean-up on: the diff's shuffle files are gone once it ends
+    Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.classic.shuffleDependency.fileCleanup.enabled" -> "true").foreach { case (k, v) =>
+      withConf(k, v) {
+        val neu = base.init :+ (("4", "40", "4.50", "2024-01-04", "d"))
+        val (t, Seq(empty, changed)) = setup(typed(sheet(base: _*)), sheet(), sheet(neu: _*))
+        synced(t, empty, SyncPipeline.SyncResult(3, 0, 3, 0))
+        synced(t, changed, SyncPipeline.SyncResult(3, 3, 0, 0))
+        SyncPipeline.upsert(spark, ParquetSource(empty), t, "slno")
+        assert(t.read(spark).count() === 0)
+      }
+    }
+  }
+
   hostile("three typed round trips in a row keep the schema and publish each sheet") {
     val sheets = Seq(
       base.map { case (k, q, p, d, n) => (k, q, p, d, n + "1") },
@@ -191,5 +217,66 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
       SyncPipeline.upsert(spark, ParquetSource(src), t, "slno"))
     assert(e.getMessage.contains("source: 2 rows sharing a key (keys 2)"), e.getMessage)
     assert(rows(t.read(spark)) === before)
+  }
+
+  /** (name, tasks, input records) of each stage `body` runs. */
+  private def stages(body: => Unit): Seq[(String, Int, Long)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long)]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        seen.add((i.name, i.numTasks, i.taskMetrics.inputMetrics.recordsRead))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    GraftBus.drain(sc, 30000)
+    sc.addSparkListener(listener)
+    try { body; GraftBus.drain(sc, 30000) } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  /** `n` distinct all-string sheet rows; `name` is a 64-character hash. */
+  private def generated(n: Long): DataFrame = spark.range(n).select(
+    col("id").cast("string").as("slno"), (col("id") % 97).cast("string").as("qty"),
+    format_string("%d.%02d", col("id") % 1000, col("id") % 100).as("price"),
+    date_format(date_add(lit("2024-01-01"), (col("id") % 365).cast("int")), "yyyy-MM-dd").as("day"),
+    sha2(col("id").cast("string"), 256).as("name"))
+
+  private def parquetFiles(path: String): Int =
+    new File(path).listFiles().count(_.getName.endsWith(".parquet"))
+
+  hostile("a changed sync and an upsert scan the source once and write on every reduce partition") {
+    // one source file of 60,000 rows, a target missing every 50th; the
+    // source reads 60,000 input records, the target 58,800
+    val n = 60000L
+    val (t, Seq(src)) = setup(typed(generated(n).filter(col("slno").cast("long") % 50 =!= 0)),
+      generated(n).coalesce(1))
+    def check(verb: String)(run: => Unit): Unit = {
+      val ran = stages(run)
+      assert(ran.count(_._3 == n) === 1, s"$verb: stages reading the source: $ran")
+      val writes = ran.filter(_._1.contains("Sinks.scala"))
+      // the write reads the diff's (or the check's) shuffle, not the file
+      assert(writes.size === 1 && writes.head._2 > 1 && writes.head._3 === 0,
+        s"$verb: write stages: $writes")
+      assert(rows(t.read(spark)) === rows(typed(spark.read.parquet(src))))
+    }
+    check("sync")(assert(sync(t, src) === SyncPipeline.SyncResult(1200, 1200, 0, 0)))
+    check("upsert")(SyncPipeline.upsert(spark, ParquetSource(src), t, "slno"))
+  }
+
+  hostile("at 200 shuffle partitions a sync and an upsert write at most 4 files") {
+    // the CLI's own session keeps Spark's default of 200 partitions
+    withConf("spark.sql.shuffle.partitions", "200") {
+      val sheetRows = generated(1000)
+      val (t, Seq(src, upserted)) = setup(
+        typed(sheetRows.filter(col("slno").cast("long") % 100 =!= 0)),
+        sheetRows, sheetRows.filter(col("slno").cast("long") % 3 =!= 0))
+      synced(t, src, SyncPipeline.SyncResult(10, 10, 0, 0))
+      assert(parquetFiles(t.path) <= 4)
+      SyncPipeline.upsert(spark, ParquetSource(upserted), t, "slno")
+      assert(parquetFiles(t.path) <= 4)
+      assert(rows(t.read(spark)) === rows(typed(spark.read.parquet(upserted))))
+    }
   }
 }
