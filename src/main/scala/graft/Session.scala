@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of every harness and tool (Bench, Verify,
-  * RunOne, PlanCensus, ScaleProbe, the perfbench harness): identical
+  * PlanCensus, ScaleProbe, the perfbench harness): identical
   * settings everywhere (master `local[$SPARK_GRAFT_CPUS]`,
   * shuffle partitions = cpus, UTC, no UI, suite-sized codegen cache), so
   * a number measured in one harness is comparable in the others and a
@@ -10,23 +10,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
-  /** SPARK_GRAFT_CODEGEN_CACHE, parsed and validated ONCE (r13 advice):
-    * `spark.sql.codegen.cache.maxEntries` is a static conf, so a
-    * non-numeric value used to fail session construction with an opaque
-    * Spark error instead of naming the env var.
-    *
-    * Why the default is 5000 and not Spark's 100: a 300-query suite with
-    * iterative operators generates far more than 100 whole-stage-codegen
-    * classes, so at the default every re-run of every query recompiles
-    * its generated code — measured 2.2x on a 12-key subset (44.9→20.0 s)
-    * from this alone. The cache holds COMPILED CLASSES keyed by generated
-    * source, never data or results; the same setting serves any
-    * long-lived production driver re-running a query mix. */
-  private[graft] def codegenCacheEntries: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")
-    raw.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CODEGEN_CACHE must be a positive integer, got '$raw'"))
-  }
+  /** `spark.sql.codegen.cache.maxEntries`. Why 5000 and not Spark's
+    * 100: a 300-query suite with iterative operators generates far more
+    * than 100 whole-stage-codegen classes, so at the default every re-run
+    * of every query recompiles its generated code — measured 2.2x on a
+    * 12-key subset (44.9→20.0 s) from this alone. The cache holds
+    * COMPILED CLASSES keyed by generated source, never data or results;
+    * the same setting serves any long-lived production driver re-running
+    * a query mix. */
+  private val CodegenCacheEntries = 5000
 
   /** Core count the driver contract pins: `local[$SPARK_GRAFT_CPUS]`.
     * Each entrypoint keeps its historical fallback for local use. */
@@ -39,7 +31,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", c)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
   }
 }

@@ -19,13 +19,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[SyncTarget.merge]] receives the NEW snapshot — the source cast
   *    to the target's types, which is the old table with the changeset
   *    applied, read back from the diff's own key-partitioned shuffle of
-  *    the source — and must publish it atomically-enough for the store:
-  *    parquet stages one write job (a task per reduce partition) to
-  *    `path + ".next"` through [[Sinks]], then promotes by rename; a BQ
-  *    impl would instead
-  *    translate the changeset to batched DML or a MERGE statement — which
-  *    is why the lazy changeset rides along: per-op DML materializes and
-  *    replays it, snapshot stores ignore it.
+  *    the source — plus the lazy changeset. A snapshot store keeps the
+  *    default, which publishes the new snapshot with its one
+  *    [[SyncTarget.truncateLoad]]; a BQ impl would instead translate the
+  *    changeset to batched DML or a MERGE statement, as [[JdbcTarget]]
+  *    does.
+  *  - [[SyncTarget.truncateLoad]] of a snapshot store is its one write
+  *    path, shared by `sync`'s publish and `upsert`'s load: one write job
+  *    (a task per partition of the snapshot) staged to `path + ".next"`,
+  *    then promoted by rename ([[Promote]]), so a failed write leaves the
+  *    old table in place.
   */
 trait SyncSource {
   def read(spark: SparkSession): DataFrame
@@ -39,8 +42,9 @@ trait SyncTarget {
     * the target. `changes` is the lazy keyed changeset from the old table
     * to `merged`, for connectors that apply deltas (BQ DML) rather than
     * overwrite snapshots; a connector that replays it materializes it
-    * itself. */
-  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit
+    * itself. A snapshot store ignores it and replaces the table. */
+  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit =
+    truncateLoad(merged)
 
   /** R11 truncate-and-load: replace the whole table with `snapshot`. */
   def truncateLoad(snapshot: DataFrame): Unit
@@ -67,15 +71,12 @@ final case class ParquetSource(path: String) extends SyncSource {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 }
 
-/** Parquet snapshot target: merge = stage-then-promote. */
+/** Parquet snapshot target: one [[Sinks]] write, staged then promoted. */
 final case class ParquetTarget(path: String) extends SyncTarget {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 
-  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit =
-    Promote.over(spark, path)(Sinks.truncateLoad(merged, _))
-
   def truncateLoad(snapshot: DataFrame): Unit =
-    Sinks.truncateLoad(snapshot, path)
+    Promote.over(snapshot.sparkSession, path)(Sinks.truncateLoad(snapshot, _))
 }
 
 /** All-string CSV source — the FAITHFUL analog of the reference's Sheets
@@ -155,8 +156,10 @@ final case class SheetsJsonSource(path: String) extends SyncSource {
   * written as VARCHAR (Derby's default StringType mapping is CLOB, which
   * cannot sit in a WHERE clause). Tested against in-process Derby —
   * zero network, same DML surface; a BQ/postgres URL changes only the
-  * connection string. Transactions commit per executor partition: each
-  * statement batch is atomic, the whole changeset is not — matching the
+  * connection string. DML runs through one transaction wrapper and one
+  * bind-and-batch loop ([[Connectors.transaction]],
+  * [[Connectors.batched]]): by default each pass is its own
+  * transaction, so the whole changeset is not atomic — matching the
   * reference, whose per-cell DML has no cross-statement transaction
   * either. Identifiers (table/column names) come from the engine's own
   * schema, never from data; values always bind through `?` parameters. */
@@ -173,44 +176,17 @@ final case class JdbcTarget(url: String, table: String,
   def read(spark: SparkSession): DataFrame =
     Connectors.readJdbc(spark, url, table, driver)
 
-  /** Run `sql` once per input row, binding every column of the row (in
-    * order) as a string parameter; batches of 500, one transaction per
-    * partition. The changeset COALESCES TO ONE PARTITION first: DML is
-    * the delta path (changeset-sized, not corpus-sized), and concurrent
-    * row-locking transactions deadlock embedded Derby; a server-grade
-    * target that tolerates concurrent writers can raise the parallelism
-    * by dropping the coalesce. */
-  private def execBatch(rowsDf: DataFrame, sql: String): Unit = {
+  /** Run each pass's `sql` once per row as its own transaction. The
+    * pass COALESCES TO ONE PARTITION first: DML is the delta path
+    * (changeset-sized, not corpus-sized), and concurrent row-locking
+    * transactions deadlock embedded Derby; a server-grade target that
+    * tolerates concurrent writers can raise the parallelism by dropping
+    * the coalesce. */
+  private def execPerPass(passes: Seq[(String, DataFrame)]): Unit = {
     val (u, d) = (url, driver) // avoid serializing the case class closure
-    rowsDf.coalesce(1).foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        java.lang.Class.forName(d)
-        val conn = java.sql.DriverManager.getConnection(u)
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
-          try {
-            var n = 0
-            rows.foreach { r =>
-              (0 until r.length).foreach { i =>
-                st.setString(i + 1, if (r.isNullAt(i)) null else r.get(i).toString)
-              }
-              st.addBatch()
-              n += 1
-              if (n % 500 == 0) { st.executeBatch(); () }
-            }
-            st.executeBatch()
-            conn.commit()
-          } catch {
-            // the failing pass rolls back AS A UNIT (merge's contract) —
-            // and releases its row locks: an un-rolled-back embedded
-            // connection keeps them and stalls the next reader into a
-            // lock-wait abort instead of surfacing this error
-            case t: Throwable =>
-              try conn.rollback() catch { case _: Throwable => () }
-              throw t
-          } finally st.close()
-        } finally conn.close()
+    passes.foreach { case (sql, rowsDf) =>
+      rowsDf.coalesce(1).foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+        if (rows.hasNext) Connectors.transaction(u, d)(Connectors.batched(_, sql, rows))
       }
     }
   }
@@ -236,7 +212,8 @@ final case class JdbcTarget(url: String, table: String,
     *    byte-identical to its pre-merge state. Use when the target
     *    grades consistency over the reference's resume-from-half model.
     */
-  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit =
+  override def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame,
+                     key: String): Unit =
     merge(spark, merged, changes, key, atomic = false)
 
   def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String,
@@ -297,17 +274,11 @@ final case class JdbcTarget(url: String, table: String,
         withStoredKey(
           delta.filter(col("op") === "update" && col("col") === c), Some("new_val"))
     }
-    // inserts carry the whole-row JSON image; decode it Spark-side
-    if (opCols.exists(_._1 == "insert")) {
-      val img = from_json(col("new_val"),
-        org.apache.spark.sql.types.StructType(valueCols.map(c =>
-          org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType))))
+    // inserts carry the whole-row image; decode it Spark-side
+    if (opCols.exists(_._1 == "insert"))
       passes += s"INSERT INTO $table (${(key +: valueCols).map(q).mkString(", ")}) VALUES (${Seq.fill(valueCols.size + 1)("?").mkString(", ")})" ->
-        delta.filter(col("op") === "insert")
-          .select(col("slno") +: valueCols.map(c => img.getField(c).as(c)): _*)
-    }
-    if (atomic) execAtomic(passes.result())
-    else passes.result().foreach { case (sql, rows) => execBatch(rows, sql) }
+        SnapshotDiff.imageRows(delta, "insert", key, valueCols)
+    if (atomic) execAtomic(passes.result()) else execPerPass(passes.result())
   }
 
   /** ALL-OR-NOTHING apply: every pass's rows are collected FIRST (the
@@ -321,35 +292,8 @@ final case class JdbcTarget(url: String, table: String,
     * (crash-mid-merge law in PipelineSpec). */
   private def execAtomic(passes: Seq[(String, DataFrame)]): Unit = {
     val mat = passes.map { case (sql, df) => (sql, df.collect()) }
-    java.lang.Class.forName(driver)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      conn.setAutoCommit(false)
-      try {
-        mat.foreach { case (sql, rows) =>
-          if (rows.nonEmpty) {
-            val st = conn.prepareStatement(sql)
-            try {
-              var n = 0
-              rows.foreach { r =>
-                (0 until r.length).foreach { i =>
-                  st.setString(i + 1, if (r.isNullAt(i)) null else r.get(i).toString)
-                }
-                st.addBatch()
-                n += 1
-                if (n % 500 == 0) { st.executeBatch(); () }
-              }
-              st.executeBatch()
-            } finally st.close()
-          }
-        }
-        conn.commit()
-      } catch {
-        case t: Throwable =>
-          try conn.rollback() catch { case _: Throwable => () }
-          throw t
-      }
-    } finally conn.close()
+    Connectors.transaction(url, driver)(conn =>
+      mat.foreach { case (sql, rows) => Connectors.batched(conn, sql, rows.iterator) })
   }
 
   def truncateLoad(snapshot: DataFrame): Unit = {
@@ -387,6 +331,44 @@ object Connectors {
     * Registering this dialect (ahead of the built-in; first canHandle
     * wins) makes StringType VARCHAR end-to-end. Idempotent via lazy val;
     * every JDBC connector entry point forces it. */
+  /** Runs `body` on a fresh connection as ONE transaction: commits when
+    * it returns; on any throwable rolls the whole transaction back as a
+    * unit and rethrows — which also releases its row locks: an embedded
+    * connection left holding them stalls the next reader into a
+    * lock-wait abort instead of surfacing this error; closes the
+    * connection either way. */
+  private[sync] def transaction(url: String, driver: String)(body: java.sql.Connection => Unit): Unit = {
+    java.lang.Class.forName(driver)
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.setAutoCommit(false)
+      try { body(conn); conn.commit() } catch {
+        case t: Throwable =>
+          try conn.rollback() catch { case _: Throwable => () }
+          throw t
+      }
+    } finally conn.close()
+  }
+
+  /** Runs `sql` once per row on `conn`, binding every column of the row
+    * (in order) as a string parameter, in batches of 500. */
+  private[sync] def batched(conn: java.sql.Connection, sql: String,
+                            rows: Iterator[org.apache.spark.sql.Row]): Unit = {
+    val st = conn.prepareStatement(sql)
+    try {
+      var n = 0
+      rows.foreach { r =>
+        (0 until r.length).foreach { i =>
+          st.setString(i + 1, if (r.isNullAt(i)) null else r.get(i).toString)
+        }
+        st.addBatch()
+        n += 1
+        if (n % 500 == 0) { st.executeBatch(); () }
+      }
+      st.executeBatch()
+    } finally st.close()
+  }
+
   private[sync] lazy val derbyVarcharDialect: Unit = {
     import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
     JdbcDialects.registerDialect(new JdbcDialect {
@@ -408,12 +390,7 @@ final case class CsvTarget(path: String) extends SyncTarget {
   def read(spark: SparkSession): DataFrame =
     spark.read.option("header", "true").csv(path)
 
-  private def writeCsv(df: DataFrame, out: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(out)
-
-  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit =
-    Promote.over(spark, path)(writeCsv(merged, _))
-
   def truncateLoad(snapshot: DataFrame): Unit =
-    writeCsv(snapshot, path)
+    Promote.over(snapshot.sparkSession, path)(
+      snapshot.write.mode("overwrite").option("header", "true").csv(_))
 }

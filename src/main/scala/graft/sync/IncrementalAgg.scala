@@ -47,44 +47,30 @@ object IncrementalAgg {
     // (same rationale as applyToMinMax — one derivation of the diff
     // chain, not one per branch)
     val changes = changes0.localCheckpoint(eager = false)
-    // whole-row JSON images ({"name":...,"acctbal":...,"segment":...}) —
-    // decoded by field name, null-safely (see SnapshotDiff.rowImage)
-    val imgSchema = org.apache.spark.sql.types.StructType(
-      Seq("name", "acctbal", "segment").map(c =>
-        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-    def imgCol(img: org.apache.spark.sql.Column, field: String) =
-      from_json(img, imgSchema).getField(field)
+    val valueCols = old.columns.filterNot(_ == "slno").toSeq
+    // one signed (segment, acctbal) contribution per row of `rows`
+    def deltas(rows: DataFrame, segment: String, acctbal: String, n: Long) =
+      rows.select(col(segment).as("segment"),
+        (if (n > 0) col(acctbal).cast(dec) else -col(acctbal).cast(dec)).as("d_sum"),
+        lit(n).as("d_n"))
 
-    val inserts = changes.filter(col("op") === "insert").select(
-      imgCol(col("new_val"), "segment").as("segment"),
-      imgCol(col("new_val"), "acctbal").cast(dec).as("d_sum"),
-      lit(1L).as("d_n"))
-    val deletes = changes.filter(col("op") === "delete").select(
-      imgCol(col("old_val"), "segment").as("segment"),
-      (-imgCol(col("old_val"), "acctbal").cast(dec)).as("d_sum"),
-      lit(-1L).as("d_n"))
-
-    // updates: fold each key's changed cells into a patch, join the OLD
-    // row for the unchanged cells, emit -old and +patched contributions
-    val patches = changes.filter(col("op") === "update")
-      .groupBy(col("slno"))
-      .agg(map_from_entries(collect_list(struct(col("col"), col("new_val")))).as("patch"))
+    // updates: join each key's patch to its OLD row for the unchanged
+    // cells, emit -old and +patched contributions
+    val patches = SnapshotDiff.patches(changes)
     val updated = old.join(patches, old("slno").cast("long") === patches("slno"))
       .select(
         old("segment").as("old_segment"),
         old("acctbal").as("old_acctbal"),
-        when(map_contains_key(col("patch"), "segment"), element_at(col("patch"), "segment"))
-          .otherwise(old("segment")).as("new_segment"),
-        when(map_contains_key(col("patch"), "acctbal"), element_at(col("patch"), "acctbal"))
-          .otherwise(old("acctbal")).as("new_acctbal"))
-    val updMinus = updated.select(col("old_segment").as("segment"),
-      (-col("old_acctbal").cast(dec)).as("d_sum"), lit(-1L).as("d_n"))
-    val updPlus = updated.select(col("new_segment").as("segment"),
-      col("new_acctbal").cast(dec).as("d_sum"), lit(1L).as("d_n"))
+        SnapshotDiff.patchedCell(col("patch"), "segment", old("segment")).as("new_segment"),
+        SnapshotDiff.patchedCell(col("patch"), "acctbal", old("acctbal")).as("new_acctbal"))
 
-    val deltas = inserts.unionByName(deletes).unionByName(updMinus).unionByName(updPlus)
+    def image(op: String) = SnapshotDiff.imageRows(changes, op, "slno", valueCols)
+    val all = deltas(image("insert"), "segment", "acctbal", 1L)
+      .unionByName(deltas(image("delete"), "segment", "acctbal", -1L))
+      .unionByName(deltas(updated, "old_segment", "old_acctbal", -1L))
+      .unionByName(deltas(updated, "new_segment", "new_acctbal", 1L))
     baseAgg.select(col("segment"), col("sum_bal").as("d_sum"), col("n").as("d_n"))
-      .unionByName(deltas)
+      .unionByName(all)
       .groupBy(col("segment"))
       .agg(sum(col("d_sum")).as("sum_bal"), sum(col("d_n")).as("n"))
       .filter(col("n") > 0) // groups whose last row left disappear, like a re-agg
@@ -112,28 +98,18 @@ object IncrementalAgg {
     // 34 exchanges on this key — 2x the next-highest — all of them
     // re-derived joins of the same old-vs-new diff)
     val changes = changes0.localCheckpoint(eager = false)
-    val imgSchema = org.apache.spark.sql.types.StructType(
-      Seq("name", "acctbal", "segment").map(c =>
-        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-    def img(c: org.apache.spark.sql.Column, f: String) = from_json(c, imgSchema).getField(f)
-
-    val inserts = changes.filter(col("op") === "insert")
-      .select(img(col("new_val"), "segment").as("segment"),
-        img(col("new_val"), "acctbal").as("acctbal"))
-    val deletes = changes.filter(col("op") === "delete")
-      .select(col("slno"), img(col("old_val"), "segment").as("segment"))
-    val patches = changes.filter(col("op") === "update")
-      .groupBy(col("slno"))
-      .agg(map_from_entries(collect_list(struct(col("col"), col("new_val")))).as("patch"))
+    val valueCols = old.columns.filterNot(_ == "slno").toSeq
+    val inserts = SnapshotDiff.imageRows(changes, "insert", "slno", valueCols)
+      .select(col("segment"), col("acctbal"))
+    val deletes = SnapshotDiff.imageRows(changes, "delete", "slno", valueCols)
+    val patches = SnapshotDiff.patches(changes)
     // the patched-row frame feeds three consumers (both affected sides +
     // newRows) — shared for the same reason as the changeset above
     val updated = old.join(patches, old("slno").cast("long") === patches("slno"))
       .select(
         old("segment").as("old_segment"),
-        when(map_contains_key(col("patch"), "segment"), element_at(col("patch"), "segment"))
-          .otherwise(old("segment")).as("new_segment"),
-        when(map_contains_key(col("patch"), "acctbal"), element_at(col("patch"), "acctbal"))
-          .otherwise(old("acctbal")).as("new_acctbal"))
+        SnapshotDiff.patchedCell(col("patch"), "segment", old("segment")).as("new_segment"),
+        SnapshotDiff.patchedCell(col("patch"), "acctbal", old("acctbal")).as("new_acctbal"))
       .localCheckpoint(eager = false)
 
     // affected groups (changeset-sized), derived ONCE and shared by both

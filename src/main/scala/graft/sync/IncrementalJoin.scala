@@ -38,41 +38,25 @@ object IncrementalJoin {
     * cells of partially-updated rows. */
   def applyToJoin(view: DataFrame, changes: DataFrame, old: DataFrame,
                   dim: DataFrame): DataFrame = {
-    val imgSchema = org.apache.spark.sql.types.StructType(
-      Seq("name", "acctbal", "segment").map(c =>
-        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-
     // r13: the changeset feeds THREE consumers (touched keys, the patch
     // map, inserts) — without a checkpoint the full-outer diff that
     // produces it ran three times in one plan. Changesets are
     // delta-sized by contract (the persisted artifact in a production
     // nightly), so materializing once is the honest shape at any scale.
     val ch = changes.localCheckpoint(eager = false)
+    val valueCols = old.columns.filterNot(_ == "slno").toSeq
     val touched = ch.select(col("slno")).distinct()
     val kept = view.join(broadcast(touched), Seq("slno"), "left_anti")
 
-    val patches = ch.filter(col("op") === "update")
-      .groupBy(col("slno"))
-      .agg(map_from_entries(collect_list(struct(col("col"), col("new_val")))).as("patch"))
-    // rebuild ONLY the updated keys from the old snapshot + patch map;
-    // membership test (not coalesce) so an update-to-NULL sticks.
+    // rebuild ONLY the updated keys from the old snapshot + patch map.
     // r13: patches are changeset-sized — broadcast them so the old
     // snapshot is never exchanged for this join.
     val patched = old.as("o")
-      .join(broadcast(patches.as("u")), col("o.slno").cast("long") === col("u.slno"))
-      .select(col("o.slno").cast("long").as("slno") +:
-        Seq("name", "acctbal", "segment").map { c =>
-          when(map_contains_key(col("u.patch"), c), element_at(col("u.patch"), c))
-            .otherwise(col(s"o.$c").cast("string")).as(c)
-        }: _*)
+      .join(broadcast(SnapshotDiff.patches(ch).as("u")), col("o.slno").cast("long") === col("u.slno"))
+      .select(col("o.slno").cast("long").as("slno") +: valueCols.map(c =>
+        SnapshotDiff.patchedCell(col("u.patch"), c, col(s"o.$c")).as(c)): _*)
 
-    val inserts = ch.filter(col("op") === "insert")
-      .withColumn("img", from_json(col("new_val"), imgSchema))
-      .select(col("slno"),
-        col("img.name").as("name"), col("img.acctbal").as("acctbal"),
-        col("img.segment").as("segment"))
-
-    val rebuilt = patched.unionByName(inserts)
+    val rebuilt = patched.unionByName(SnapshotDiff.imageRows(ch, "insert", "slno", valueCols))
       .join(broadcast(dim), "segment")
       .select(col("slno"), col("name"), col("acctbal"), col("segment"), col("seg_len"))
 

@@ -3,6 +3,7 @@ package graft.sync
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Distributed snapshot diff + changeset apply — the Spark-native
   * re-expression of the reference's core (`compare_data`,
@@ -22,7 +23,17 @@ import org.apache.spark.sql.functions._
   * — op ∈ {update, insert, delete} (keyed) or {diff, extra_row, del_row}
   * (positional, matching the reference's vocabulary at
   * syncquill.py:119,123,128). Values are compared in the string domain,
-  * exactly like the reference (syncquill.py:112-113).
+  * exactly like the reference (syncquill.py:112-113). An update is one
+  * row per changed cell (`col`, its old and new text); an insert or delete
+  * is one row whose `new_val` / `old_val` holds the whole-row image
+  * ([[rowImage]]).
+  *
+  * This object is the only code that knows that format: every consumer
+  * (the apply below, the IVM operators, the JDBC DML target, the sync
+  * verb's counts) reads a changeset through its decoders —
+  * [[imageRows]] (inserted or deleted rows, image decoded),
+  * [[patches]] (per-key `col → new_val` map), [[patchedCell]] (a cell
+  * after its patch) and [[opCounts]] (rows per op).
   */
 object SnapshotDiff {
 
@@ -39,10 +50,41 @@ object SnapshotDiff {
       struct(cols.map(c => col(s"$side.$c").cast("string").as(c)): _*),
       Map("ignoreNullFields" -> "false"))
 
-  /** Schema used to decode a [[rowImage]] back into columns. */
-  private def imageSchema(cols: Seq[String]) =
-    org.apache.spark.sql.types.StructType(cols.map(c =>
-      org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
+  /** The absent side of an insert or delete entry. */
+  private val noValue: Column = lit(null).cast("string")
+
+  /** One changeset entry, present where `cond` holds (null elsewhere). */
+  private def entry(cond: Column, op: String, slno: Column, c: Column, oldVal: Column,
+                    newVal: Column): Column =
+    when(cond, struct(lit(op).as("op"), slno.cast("long").as("slno"), c.as("col"),
+      oldVal.as("old_val"), newVal.as("new_val")))
+
+  /** The `op` rows (`insert` or `delete`) of `changes`, each as `key`
+    * (its `slno`) plus the string `valueCols` decoded from its row image,
+    * null-safely by field name. */
+  def imageRows(changes: DataFrame, op: String, key: String, valueCols: Seq[String]): DataFrame =
+    changes.filter(col("op") === op)
+      .withColumn("img", from_json(col(if (op == "insert") "new_val" else "old_val"),
+        StructType(valueCols.map(StructField(_, StringType)))))
+      .select(col("slno").as(key) +: valueCols.map(c => col(s"img.$c").as(c)): _*)
+
+  /** The updates of `changes` folded per key: `slno` and `patch`, the map
+    * from each changed column to its new value. */
+  def patches(changes: DataFrame): DataFrame =
+    changes.filter(col("op") === "update")
+      .groupBy(col("slno"))
+      .agg(map_from_entries(collect_list(struct(col("col"), col("new_val")))).as("patch"))
+
+  /** Value column `c` after `patch`: the patched value where the map holds
+    * `c`, else `old` as a string. A membership test, not coalesce: an
+    * update may set a cell to NULL, and coalesce(patch[c], old) would
+    * silently resurrect the old value. */
+  def patchedCell(patch: Column, c: String, old: Column): Column =
+    when(map_contains_key(patch, c), element_at(patch, c)).otherwise(old.cast("string"))
+
+  /** Rows per keyed op, as the count columns `insert`, `delete` and `update`. */
+  val opCounts: Seq[Column] =
+    Seq("insert", "delete", "update").map(op => count(when(col("op") === op, 1)).as(op))
 
   /** BUCKET RECONCILE (r8) — the cheap pre-diff a sync engine runs
     * FIRST: per key-range bucket, row count and an order-free content
@@ -127,27 +169,20 @@ object SnapshotDiff {
     val inOld = col(s"o.$key").isNotNull
     val inNew = col(s"n.$key").isNotNull
 
-    val insertC = when(!inOld && inNew, struct(
-      lit("insert").as("op"), col(s"n.$key").cast("long").as("slno"),
-      lit("").as("col"), lit(null).cast("string").as("old_val"),
-      rowImage(valueCols, "n").as("new_val")))
-    val deleteC = when(inOld && !inNew, struct(
-      lit("delete").as("op"), col(s"o.$key").cast("long").as("slno"),
-      lit("").as("col"), rowImage(valueCols, "o").as("old_val"),
-      lit(null).cast("string").as("new_val")))
+    val insertC = entry(!inOld && inNew, "insert", col(s"n.$key"), lit(""), noValue,
+      rowImage(valueCols, "n"))
+    val deleteC = entry(inOld && !inNew, "delete", col(s"o.$key"), lit(""),
+      rowImage(valueCols, "o"), noValue)
     // null-safe inequality: `=!=` yields NULL (not true) for null->value
     // or value->null transitions, silently swallowing those updates
     val updateCs = valueCols.map { c =>
-      when(inOld && inNew && !(col(s"o.$c") <=> col(s"n.$c")), struct(
-        lit("update").as("op"), col(s"o.$key").cast("long").as("slno"),
-        lit(c).as("col"), col(s"o.$c").cast("string").as("old_val"),
-        col(s"n.$c").cast("string").as("new_val")))
+      entry(inOld && inNew && !(col(s"o.$c") <=> col(s"n.$c")), "update", col(s"o.$key"),
+        lit(c), col(s"o.$c").cast("string"), col(s"n.$c").cast("string"))
     }
 
     j.select(explode(array(insertC +: deleteC +: updateCs: _*)).as("ch"))
       .filter(col("ch.op").isNotNull)
-      .select(col("ch.op").as("op"), col("ch.slno").as("slno"),
-        col("ch.col").as("col"), col("ch.old_val").as("old_val"), col("ch.new_val").as("new_val"))
+      .select(col("ch.*"))
   }
 
   /** Faithful positional diff — the reference's exact (and exactly wrong)
@@ -180,25 +215,19 @@ object SnapshotDiff {
     val j = l1.join(l2, col("a.pos") === col("b.pos"), "full_outer")
     val both = col("a.pos").isNotNull && col("b.pos").isNotNull
 
-    val delRow = when(col("b.pos").isNull, struct(
-      lit("del_row").as("op"), col(s"a.$key").cast("long").as("slno"),
-      lit("").as("col"), rowImage(valueCols, "a").as("old_val"),
-      lit(null).cast("string").as("new_val")))
-    val extraRow = when(col("a.pos").isNull, struct(
-      lit("extra_row").as("op"), col(s"b.$key").cast("long").as("slno"),
-      lit("").as("col"), lit(null).cast("string").as("old_val"),
-      rowImage(valueCols, "b").as("new_val")))
+    val delRow = entry(col("b.pos").isNull, "del_row", col(s"a.$key"), lit(""),
+      rowImage(valueCols, "a"), noValue)
+    val extraRow = entry(col("a.pos").isNull, "extra_row", col(s"b.$key"), lit(""), noValue,
+      rowImage(valueCols, "b"))
     val cellDiffs = valueCols.map { c =>
-      when(both && !(col(s"a.$c") <=> col(s"b.$c")), struct(
-        lit("diff").as("op"), col(s"a.$key").cast("long").as("slno"),
-        lit(c).as("col"), col(s"a.$c").as("old_val"), col(s"b.$c").as("new_val")))
+      entry(both && !(col(s"a.$c") <=> col(s"b.$c")), "diff", col(s"a.$key"), lit(c),
+        col(s"a.$c"), col(s"b.$c"))
     }
 
     j.select(coalesce(col("a.pos"), col("b.pos")).cast("long").as("pos"),
         explode(array(delRow +: extraRow +: cellDiffs: _*)).as("ch"))
       .filter(col("ch.op").isNotNull)
-      .select(col("pos"), col("ch.op").as("op"), col("ch.slno").as("slno"),
-        col("ch.col").as("col"), col("ch.old_val").as("old_val"), col("ch.new_val").as("new_val"))
+      .select(col("pos"), col("ch.*"))
   }
 
   /** Apply a keyed changeset to `old`, yielding the new snapshot in ONE
@@ -208,28 +237,13 @@ object SnapshotDiff {
     * `applyChangeset(old, diffKeyed(old, new), ...) ≡ new`. */
   def applyChangeset(old: DataFrame, changes: DataFrame, key: String): DataFrame = {
     val valueCols = old.columns.filterNot(_ == key).toSeq
-
     val deletes = changes.filter(col("op") === "delete").select(col("slno"))
-    // updates: one row per key with a col→new_val map
-    val updates = changes.filter(col("op") === "update")
-      .groupBy(col("slno"))
-      .agg(map_from_entries(collect_list(struct(col("col"), col("new_val")))).as("patch"))
-    // inserts: JSON row images decoded back into columns (null-safe)
-    val inserts = changes.filter(col("op") === "insert")
-      .withColumn("img", from_json(col("new_val"), imageSchema(valueCols)))
-      .select(col("slno").as(key) +: valueCols.map(c => col(s"img.$c").as(c)): _*)
-
-    val patched = old.as("o")
+    old.as("o")
       .join(deletes.as("d"), col(s"o.$key").cast("long") === col("d.slno"), "left_anti")
-      .join(updates.as("u"), col(s"o.$key").cast("long") === col("u.slno"), "left")
-      // membership test, not coalesce: an update may set a cell to NULL,
-      // and coalesce(patch[c], old) would silently resurrect the old value
-      .select(col(s"o.$key").as(key) +: valueCols.map { c =>
-        when(map_contains_key(col("u.patch"), c), element_at(col("u.patch"), c))
-          .otherwise(col(s"o.$c").cast("string")).as(c)
-      }: _*)
-
-    patched.unionByName(inserts)
+      .join(patches(changes).as("u"), col(s"o.$key").cast("long") === col("u.slno"), "left")
+      .select(col(s"o.$key").as(key) +:
+        valueCols.map(c => patchedCell(col("u.patch"), c, col(s"o.$c")).as(c)): _*)
+      .unionByName(imageRows(changes, "insert", key, valueCols))
   }
 
   /** SCD TYPE-2 history from a snapshot pair — the warehouse-maintenance

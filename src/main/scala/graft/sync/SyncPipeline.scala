@@ -71,13 +71,12 @@ object SyncPipeline {
     c.isNotNull && (t.isNull || lossy)
   }
 
-  /** The source aligned by name to `fields` and each column not already
-    * of its field's type `try_cast` to it (`typed`), plus the same with
-    * one flag long per 63 checks (`flagged`) and the counts of each check
-    * over those longs (`checks`): null keys, empty string cells, and
-    * cells whose cast fails or loses information. Missing or added
-    * columns fail at once. */
-  private final case class Checked(typed: DataFrame, flagged: DataFrame, checks: Seq[Column])
+  /** The source aligned by name to `fields`, each column not already of
+    * its field's type `try_cast` to it, plus one flag long per 63 checks
+    * (`flagged`), and the counts of each check over those longs
+    * (`checks`): null keys, empty string cells, and cells whose cast
+    * fails or loses information. Missing or added columns fail at once. */
+  private final case class Checked(flagged: DataFrame, checks: Seq[Column])
 
   private def checked(src: DataFrame, fields: Seq[StructField], key: String): Checked = {
     val (have, want) = (src.columns.toSeq, fields.map(_.name))
@@ -106,8 +105,7 @@ object SyncPipeline {
     // per no-change sync of a 150,000-row sheet on 4 local cores
     val flags = checks.indices.grouped(63).toSeq.map(word => word.map(i =>
       when(checks(i)._2, 1L << (i % 63)).otherwise(0L)).reduce(_ bitwiseOR _))
-    Checked(src.select(typedCols: _*),
-      src.select(typedCols ++ flags.indices.map(w => flags(w).as(s"__bad$w")): _*),
+    Checked(src.select(typedCols ++ flags.indices.map(w => flags(w).as(s"__bad$w")): _*),
       checks.indices.map(i => count(when(
         (col(s"__bad${i / 63}") bitwiseAND (1L << (i % 63))) =!= 0, 1)).as(checks(i)._1)))
   }
@@ -180,16 +178,14 @@ object SyncPipeline {
     val src = checked(source.read(spark), tgt.schema.fields.toSeq, key)
     val diff = SnapshotDiff.diffKeyed(observed(tgt, key, "target", Nil, want),
         observed(src.flagged, key, "source", src.checks, want), key)
-      .observe("changes", count(when(col("op") === "insert", 1)).as("insert"),
-        count(when(col("op") === "delete", 1)).as("delete"),
-        count(when(col("op") === "update", 1)).as("update"))
+      .observe("changes", SnapshotDiff.opCounts.head, SnapshotDiff.opCounts.tail: _*)
       .orderBy("op", "slno", "col").limit(PreviewRows)
     val rows = diff.collect().toSeq
 
     // an observed branch AQE pruned (an empty side) reports nothing: count 0
     val metrics = diff.queryExecution.observedMetrics
     def counts(name: String): Seq[(String, Long)] = metrics.get(name).toSeq.flatMap(named)
-    rejectBad(Seq(("source", counts("source"), () => firstShared(src.typed, key)),
+    rejectBad(Seq(("source", counts("source"), () => firstShared(src.flagged, key)),
       ("target", counts("target"), () => firstShared(tgt, key))))
 
     val byOp = counts("changes").toMap.withDefaultValue(0L)
@@ -198,7 +194,7 @@ object SyncPipeline {
     if (total == 0) { println("No changes."); SyncResult(0, 0, 0, 0) }
     else {
       val merged = shuffled(diff, src.flagged).select(want.map(col): _*)
-      target.merge(spark, merged, SnapshotDiff.diffKeyed(tgt, src.typed, key), key)
+      target.merge(spark, merged, SnapshotDiff.diffKeyed(tgt, merged, key), key)
       SyncResult(total, byOp("insert"), byOp("delete"), byOp("update"))
     }
   }

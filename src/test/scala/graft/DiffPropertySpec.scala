@@ -180,6 +180,21 @@ class DiffPropertySpec extends SparkSpec {
     })
   }
 
+  test("law: IVM join — applyToJoin(joinView(old, dim), diff) == joinView(new, dim)") {
+    import graft.sync.IncrementalJoin
+    import spark.implicits._
+    // the dim covers only segments A and B: rows inserted into, updated
+    // onto or already on C are absent from the view
+    val dim = Seq(("A", 1L), ("B", 1L)).toDF("segment", "seg_len")
+    check("ivm join")(Prop.forAll(genIvmSnapshot, genIvmSnapshot) { (ra, rb) =>
+      val (a, b) = (toIvm(ra), toIvm(rb))
+      val inc = IncrementalJoin.applyToJoin(
+        IncrementalJoin.joinView(a, dim), SnapshotDiff.diffKeyed(a, b, "slno"), a, dim)
+      val direct = IncrementalJoin.joinView(b, dim)
+      inc.exceptAll(direct).count() == 0L && direct.exceptAll(inc).count() == 0L
+    })
+  }
+
   test("law: diffReconciled == diffKeyed for arbitrary pairs and bucket grains (r9)") {
     // the composition law under adversarial inputs: whatever the churn
     // pattern (including all-dirty, all-clean, empty sides) and whatever

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
-import graft.sync.{ParquetSource, ParquetTarget, SnapshotDiff, SyncPipeline}
+import graft.sync.{CsvTarget, ParquetSource, ParquetTarget, SnapshotDiff, SyncPipeline, SyncTarget}
 
 /** Hostile input for the `sync` and `upsert` verbs against a TYPED
   * parquet target (bigint key, bigint / decimal(12,2) / date / string
@@ -277,6 +277,29 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
       SyncPipeline.upsert(spark, ParquetSource(upserted), t, "slno")
       assert(parquetFiles(t.path) <= 4)
       assert(rows(t.read(spark)) === rows(typed(spark.read.parquet(upserted))))
+    }
+  }
+
+  hostile("a snapshot publish whose write job fails keeps the old table") {
+    // the write job throws on one row: a parquet and a CSV target must
+    // both still read back their old rows and schema, because the write
+    // is staged before the old files go
+    val d = tmpDir()
+    val targets = Seq[(SyncTarget, DataFrame)](
+      ParquetTarget(s"$d/typed") -> typed(sheet(base: _*)), CsvTarget(s"$d/csv") -> sheet(base: _*))
+    targets.foreach { case (t, table) =>
+      t.truncateLoad(table)
+      val (before, schema) = (rows(t.read(spark)), t.read(spark).schema)
+      assert(before.size === base.size)
+      // repartitioned: over local rows the optimizer would evaluate the
+      // projection, and throw, while planning, before any write job runs
+      val poisoned = table.repartition(2).withColumn("name",
+        when(col("slno") === 2, raise_error(lit("poisoned row"))).otherwise(col("name")))
+      val e = intercept[Exception](t.truncateLoad(poisoned))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("poisoned row")), e)
+      assert(rows(t.read(spark)) === before, t)
+      assert(t.read(spark).schema === schema, t)
     }
   }
 }
