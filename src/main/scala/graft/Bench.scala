@@ -63,17 +63,21 @@ object Bench {
     // the artifact must let a reader tell "max was the codegen run" from
     // "a steady-state run flapped" without re-running anything
     val results = selected.map { case (name, fn) =>
-      val raw = (1 to runs).map { _ =>
+      val raw = (1 to runs).map { i =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           // record the failure: a throwing query times out in ~ms, and an
           // unmarked fast-stable timing would read as a SPEEDUP in the
           // artifact instead of the regression it is
-          case _: Throwable => errors(name) = errors.getOrElse(name, 0) + 1
+          case e: Throwable =>
+            errors(name) = errors.getOrElse(name, 0) + 1
+            System.err.println(s"[bench] $name run $i failed: $e")
         }
         val dt = (System.nanoTime() - t0) / 1e9
         // drop caches persisted inside operators so runs don't interfere
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
+        try spark.catalog.clearCache() catch {
+          case e: Throwable => System.err.println(s"[bench] $name run $i clearCache failed: $e")
+        }
         // Spark's ContextCleaner discovers dead shuffles/broadcasts via GC
         // (weak references). With a 24g heap a full GC may never run across
         // the 154-query suite, so map-output state and shuffle files pile up

@@ -3,16 +3,25 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The one implementation of the persisted EPOCH-ARTIFACT resolution
-  * every `ensure*` builder shares (band index, IVF/PQ indexes, BPE merge
-  * model, DSIR counts, quantile histogram, daily HLL, pagerank epochs):
-  * if the table is already in the catalog, serve it; otherwise clear any
-  * ORPHANED warehouse directory first (the in-memory catalog forgets
-  * tables across JVMs but the warehouse files survive — `saveAsTable`
-  * would refuse or, worse, append over the corpse) and run the builder's
-  * write. Centralized because the orphan-cleanup subtlety was
-  * copy-pasted five times and a fix to it (e.g. the lowercase
-  * normalization below) must hold everywhere at once.
+/** The one home of every DERIVED dataset the engine writes: epoch
+  * artifacts, ingest layouts, bucketed tables and scratch dirs. Three
+  * decisions live here and nowhere else:
+  *  - where it lives: [[srcTag]] names a dataset after its source,
+  *    [[dir]] places it under the session warehouse, [[scratch]] under
+  *    the JVM temp dir;
+  *  - when it is built: [[ensure]] resolves-or-builds a CATALOG table,
+  *    [[dir]] a warehouse PATH;
+  *  - how it is published: [[promote]] stages a write beside its path
+  *    and moves it over the path only once the write has completed.
+  *
+  * [[ensure]] is the persisted EPOCH-ARTIFACT resolution every `ensure*`
+  * builder shares (band index, IVF/PQ indexes, BPE merge model, DSIR
+  * counts, quantile histogram, daily HLL, pagerank epochs, bucketed
+  * tables): if the table is already in the catalog, serve it; otherwise
+  * clear any ORPHANED warehouse directory first (the in-memory catalog
+  * forgets tables across JVMs but the warehouse files survive —
+  * `saveAsTable` would refuse or, worse, append over the corpse) and run
+  * the builder's write.
   *
   * Identifier case: `saveAsTable` lowercases the on-disk directory, so
   * the orphan delete must target the LOWERCASED path or a mixed-case
@@ -48,6 +57,40 @@ object Warehouse {
   def srcTag(df: DataFrame): String =
     df.inputFiles.headOption.getOrElse("mem")
       .replaceAll("[^A-Za-z0-9]", "_").toLowerCase(java.util.Locale.ROOT)
+
+  /** Resolve-or-build for a derived dataset that is a warehouse PATH,
+    * not a catalog table (ingest layouts, the Bloom epoch file): returns
+    * `<spark.sql.warehouse.dir>/<name>`; when that path is absent, `write`
+    * builds it through [[promote]], so a build that fails leaves no
+    * directory for a later call to serve. */
+  def dir(spark: SparkSession, name: String)(write: String => Unit): String = {
+    val path = warehouse(spark).stripPrefix("file:") + s"/$name"
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      promote(spark, path)(write)
+    path
+  }
+
+  /** Stage-then-promote publish: the write job completes into
+    * `path + ".next"` BEFORE the target is touched, so the non-atomic
+    * delete+rename window holds only directory moves, never a
+    * partially-written dataset. */
+  def promote(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val staging = path + ".next"
+    write(staging)
+    val tgt = new org.apache.hadoop.fs.Path(path)
+    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tgt, true)
+    require(fs.rename(new org.apache.hadoop.fs.Path(staging), tgt),
+      s"failed to promote $staging over $path")
+  }
+
+  /** Round-trip scratch dir under the JVM temp dir, keyed by a hash of
+    * `tag` (pass the source dir) so concurrent sessions and interleaved
+    * scale factors never overwrite each other's fixture. */
+  def scratch(kind: String, tag: String): String =
+    sys.props("java.io.tmpdir") + s"/graft_${kind}_" +
+      java.lang.Long.toHexString(scala.util.hashing.MurmurHash3.stringHash(tag).toLong & 0xffffffffL)
 
   /** Metadata-only source fingerprints: (derivation, file-status).
     * The derivation half hashes the CANONICALIZED analyzed plan —
@@ -252,9 +295,11 @@ object Warehouse {
     }.toSeq.sorted
   }
 
+  private def warehouse(spark: SparkSession): String =
+    spark.conf.get("spark.sql.warehouse.dir")
+
   private def dropOrphanDir(spark: SparkSession, name: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + s"/$name")
+    val loc = new org.apache.hadoop.fs.Path(warehouse(spark) + s"/$name")
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) { fs.delete(loc, true); () }
   }

@@ -679,12 +679,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Artifact names are keyed by the SOURCE path (same scheme as
-    * ScaleJoins.sfTag) so different scale factors — or a concurrent
-    * Verify — never collide on one warehouse entry. */
-  private def srcTag(df: DataFrame): String =
-    df.inputFiles.headOption.getOrElse("mem").replaceAll("[^A-Za-z0-9]", "_")
-
   /** PERSISTED LSH band index: [[minhashBandTable]] written ONCE per
     * index epoch as a warehouse table bucketed AND sorted by (band, bs).
     * This is the artifact the 100 TB story names: the accumulated-corpus
@@ -694,10 +688,12 @@ object Dedup {
     * PlanAuditSpec: SelectedBucketsCount on the index scan, zero
     * ShuffleExchange in the index branch of the semi-join). Idempotent
     * per (source, epoch): the write happens on first call, every later
-    * call resolves the existing table. */
+    * call resolves the existing table. The name is keyed by the SOURCE
+    * path ([[graft.Warehouse.srcTag]]) so different scale factors — or a
+    * concurrent Verify — never collide on one warehouse entry. */
   def ensureBandIndex(spark: SparkSession, index: DataFrame,
                       epoch: Long = 0L, buckets: Int = 8): String =
-    graft.Warehouse.ensure(spark, s"dedup_band_idx_${srcTag(index)}_e$epoch",
+    graft.Warehouse.ensure(spark, s"dedup_band_idx_${graft.Warehouse.srcTag(index)}_e$epoch",
         source = Some(index)) {
       name => minhashBandTable(index)
         .write.bucketBy(buckets, "band", "bs").sortBy("band", "bs")
@@ -753,48 +749,35 @@ object Dedup {
       .agg(graft.functions.Sketches.bloomAgg(col("d"), expectedItems, numBits).as("bf"))
       .head().getAs[Array[Byte]]("bf")
 
-  /** Batch step: screen `batch` against the prebuilt filter; exact
-    * whatever the filter size (see [[bloomPrefilterDedup]]). `sorted =
-    * false` drops the presentation sort — the production form (a sink
-    * doesn't need order; the smoke measures the join pipeline alone).
-    *
-    * Null-text rows are never lost to three-valued logic: `xxhash64`
-    * hashes a NULL input to its seed (non-null), so `might_contain`
-    * returns a real boolean and the row lands in exactly one branch;
-    * if it probes true, the confirm anti-join's null digest matches
-    * nothing and the row is kept — same answer as the exact twin
-    * (gated in HostileInputSpec). */
   /** PERSISTED Bloom epoch artifact: the filter bytes written once per
     * (source, epoch) under the warehouse dir and reloaded by every later
     * batch — the file IS the "build once per index epoch, amortize
     * across batches" contract [[bloomPrefilterDedup]] documents. An
     * empty index (null filter) persists as a zero-length file so the
-    * "nothing to reject" answer is ALSO remembered, not rebuilt. Write
-    * is atomic-enough for the single-writer epoch model: temp file +
-    * rename. */
+    * "nothing to reject" answer is ALSO remembered, not rebuilt. The
+    * epoch dir is built through [[graft.Warehouse.dir]] (staged, then
+    * promoted), and the build's own call reads the file back like every
+    * later one. */
   def ensureBloomIndex(spark: SparkSession, index: DataFrame, epoch: Long = 0L,
                        expectedItems: Long = 1L << 16,
                        numBits: Long = 1L << 20): Array[Byte] = {
-    val dir = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + s"/bloom_idx_${srcTag(index)}/epoch=$epoch")
-    val file = new org.apache.hadoop.fs.Path(dir, "bloom.bin")
-    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(file)) {
-      val len = fs.getFileStatus(file).getLen.toInt
-      if (len == 0) null
-      else {
-        val buf = new Array[Byte](len)
-        val in = fs.open(file)
-        try in.readFully(buf) finally in.close()
-        buf
-      }
-    } else {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = graft.Warehouse.dir(spark,
+        s"bloom_idx_${graft.Warehouse.srcTag(index)}/epoch=$epoch") { staging =>
       val bytes = bloomBuild(index, expectedItems, numBits)
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_bloom.bin.tmp")
-      val out = fs.create(tmp, true)
+      val file = new org.apache.hadoop.fs.Path(staging, "bloom.bin")
+      val out = file.getFileSystem(conf).create(file, true)
       try { if (bytes != null) out.write(bytes) } finally out.close()
-      fs.rename(tmp, file)
-      bytes
+    }
+    val file = new org.apache.hadoop.fs.Path(dir, "bloom.bin")
+    val fs = file.getFileSystem(conf)
+    val len = fs.getFileStatus(file).getLen.toInt
+    if (len == 0) null
+    else {
+      val buf = new Array[Byte](len)
+      val in = fs.open(file)
+      try in.readFully(buf) finally in.close()
+      buf
     }
   }
 
@@ -809,6 +792,17 @@ object Dedup {
                                    numBits: Long = 1L << 20): DataFrame =
     bloomProbe(ensureBloomIndex(spark, index, epoch, expectedItems, numBits), index, batch)
 
+  /** Batch step: screen `batch` against the prebuilt filter; exact
+    * whatever the filter size (see [[bloomPrefilterDedup]]). `sorted =
+    * false` drops the presentation sort — the production form (a sink
+    * doesn't need order; the smoke measures the join pipeline alone).
+    *
+    * Null-text rows are never lost to three-valued logic: `xxhash64`
+    * hashes a NULL input to its seed (non-null), so `might_contain`
+    * returns a real boolean and the row lands in exactly one branch;
+    * if it probes true, the confirm anti-join's null digest matches
+    * nothing and the row is kept — same answer as the exact twin
+    * (gated in HostileInputSpec). */
   def bloomProbe(bloomBytes: Array[Byte], index: DataFrame, batch: DataFrame,
                  sorted: Boolean = true): DataFrame = {
     val b = batch.select(col("doc_id"), col("n_chars"), md5(col("text")).as("d"))

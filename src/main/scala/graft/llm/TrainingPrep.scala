@@ -258,9 +258,7 @@ object TrainingPrep {
   def shardManifest(spark: org.apache.spark.sql.SparkSession,
                     documents: DataFrame,
                     seed: Long = 42L, tag: String = ""): DataFrame = {
-    val dir = sys.props("java.io.tmpdir") + "/graft_shards_" +
-      java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(s"$tag:$seed").toLong & 0xffffffffL) +
+    val dir = graft.Warehouse.scratch("shards", s"$tag:$seed") +
       "_" + java.util.UUID.randomUUID.toString.take(12)
     val key = md5(concat_ws(":", lit(seed.toString), col("doc_id").cast("string")))
     val src = documents

@@ -13,24 +13,16 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  private def warehouseDir(spark: SparkSession, name: String, tag: String): String =
-    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") +
-      s"/${name}_" + tag.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Simulate a fragmented table (the state appends leave behind), then
     * compact it. Returns (fragmentedPath, compactedPath). Idempotent per
     * source path. */
   def compactEvents(spark: SparkSession, events: DataFrame,
                     fragments: Int = 64, targetFiles: Int = 4): (String, String) = {
-    val tag = events.inputFiles.headOption.getOrElse("mem")
-    val frag = warehouseDir(spark, "events_frag", tag)
-    val comp = warehouseDir(spark, "events_compact", tag)
-    val fs = new org.apache.hadoop.fs.Path(frag)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(frag))) {
-      events.repartition(fragments).write.mode("overwrite").parquet(frag)
+    val tag = graft.Warehouse.srcTag(events)
+    val frag = graft.Warehouse.dir(spark, s"events_frag_$tag") {
+      events.repartition(fragments).write.mode("overwrite").parquet(_)
     }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(comp))) {
+    val comp = graft.Warehouse.dir(spark, s"events_compact_$tag") {
       // compaction = read small files, write few large ones. repartition
       // (not coalesce): coalesce chains the upstream parallelism to the
       // target count; a real compactor also range-sorts here so min/max
@@ -38,7 +30,7 @@ object Maintenance {
       spark.read.parquet(frag)
         .repartitionByRange(targetFiles, col("event_id"))
         .sortWithinPartitions("event_id")
-        .write.mode("overwrite").parquet(comp)
+        .write.mode("overwrite").parquet(_)
     }
     (frag, comp)
   }

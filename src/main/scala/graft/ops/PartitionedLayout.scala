@@ -10,24 +10,15 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedLayout {
 
-  private def dir(spark: SparkSession, sfTag: String): String =
-    spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:") + s"/events_by_day_$sfTag"
-
   /** One-time ingest: events re-laid-out hive-style by event date. The
     * layout dir is keyed by the SOURCE path so a different scale factor
     * never reuses a stale fixture. */
-  def ensurePartitionedEvents(spark: SparkSession, events: DataFrame): String = {
-    val sfTag = events.inputFiles.headOption.getOrElse("mem")
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val path = dir(spark, sfTag)
-    if (!new java.io.File(path).exists()) {
+  def ensurePartitionedEvents(spark: SparkSession, events: DataFrame): String =
+    graft.Warehouse.dir(spark, s"events_by_day_${graft.Warehouse.srcTag(events)}") {
       events
         .withColumn("event_date", to_date(col("ts")))
-        .write.partitionBy("event_date").mode("overwrite").parquet(path)
+        .write.partitionBy("event_date").mode("overwrite").parquet(_)
     }
-    path
-  }
 
   /** ANALYZE-style PER-PARTITION statistics over the hive layout — the
     * stats pass a maintenance scheduler runs to pick compaction /

@@ -14,29 +14,17 @@ object ScaleJoins {
   /** Write both sides bucketed by the join key into the session warehouse
     * (idempotent per session). At 100 TB this is done once at ingest:
     * every later equi-join/aggregation on the bucket key skips its
-    * exchange entirely. */
-  /** Bucketed-table names are keyed by the SOURCE path so different
-    * scale factors (or a concurrently-running Verify) never collide on
-    * one warehouse directory. */
-  private def sfTag(df: DataFrame): String =
-    df.inputFiles.headOption.getOrElse("mem").replaceAll("[^A-Za-z0-9]", "_")
-
+    * exchange entirely. Table names are keyed by the SOURCE path
+    * ([[graft.Warehouse.srcTag]]) so different scale factors (or a
+    * concurrently-running Verify) never collide on one warehouse
+    * directory; [[graft.Warehouse.ensure]] builds each side once. */
   def ensureBucketed(spark: SparkSession, orders: DataFrame, lineitem: DataFrame,
                      buckets: Int = 8): (String, String) = {
-    def write(name: String, df: DataFrame, key: String): Unit =
-      if (!spark.catalog.tableExists(name)) {
-        // in-memory catalog forgets tables across JVMs but the warehouse
-        // files survive — clear any orphan dir before re-creating
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$name")
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) { fs.delete(loc, true); () }
-        df.write.bucketBy(buckets, key).sortBy(key).mode("overwrite").saveAsTable(name)
+    def bucketed(prefix: String, df: DataFrame, key: String): String =
+      graft.Warehouse.ensure(spark, s"${prefix}_b_${graft.Warehouse.srcTag(df)}") {
+        df.write.bucketBy(buckets, key).sortBy(key).mode("overwrite").saveAsTable(_)
       }
-    val (on, ln) = (s"orders_b_${sfTag(orders)}", s"lineitem_b_${sfTag(lineitem)}")
-    write(on, orders, "o_orderkey")
-    write(ln, lineitem, "l_orderkey")
-    (on, ln)
+    (bucketed("orders", orders, "o_orderkey"), bucketed("lineitem", lineitem, "l_orderkey"))
   }
 
   /** Co-located join over the bucketed tables — planner sees matching

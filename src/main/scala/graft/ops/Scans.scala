@@ -30,20 +30,13 @@ object Scans {
       // order by every output column for a total order (SURVEY §7)
       .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
 
-  /** Round-trip staging dir keyed by the source tag so concurrent
-    * sessions / interleaved scale factors never overwrite each other's
-    * fixture (the same hazard ScaleJoins.sfTag guards against). */
-  private def stagingDir(kind: String, tag: String): String =
-    sys.props("java.io.tmpdir") + s"/graft_${kind}_" +
-      java.lang.Long.toHexString(scala.util.hashing.MurmurHash3.stringHash(tag).toLong & 0xffffffffL)
-
   /** R1: sheet-snapshot ingest. Round-trips `nation` through a header CSV
     * (the stand-in for the Sheets API snapshot) and reads it back with an
     * explicit all-`StringType` schema — the reference's "every cell is a
     * string" domain (syncquill.py:110-111). Deterministic output order via
     * the numeric key. `tag` keys the staging dir (pass the sf dir). */
   def scanCsvAllString(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
-    val dir = stagingDir("csv_nation", tag)
+    val dir = graft.Warehouse.scratch("csv_nation", tag)
     val asString = nation.select(nation.columns.map(c => col(c).cast("string").as(c)).toIndexedSeq: _*)
     asString.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
     val schema = StructType(nation.columns.map(c => StructField(c, StringType)))
@@ -57,7 +50,7 @@ object Scans {
     * a column). Values must survive the round trip exactly — the oracle
     * reads the parquet table directly. */
   def scanJsonl(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
-    val dir = stagingDir("jsonl_nation", tag)
+    val dir = graft.Warehouse.scratch("jsonl_nation", tag)
     nation.coalesce(1).write.mode("overwrite").json(dir)
     spark.read.schema(nation.schema).json(dir)
       .orderBy("n_nationkey")
@@ -76,7 +69,7 @@ object Scans {
     * corpus fixture is tab/newline-free (verified), so the round trip is
     * exact and the oracle just reads the parquet side. */
   def scanTextLines(spark: SparkSession, documents: DataFrame, tag: String = ""): DataFrame = {
-    val dir = stagingDir("text_documents", tag)
+    val dir = graft.Warehouse.scratch("text_documents", tag)
     documents
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text")).as("value"))
       .coalesce(1).write.mode("overwrite").text(dir)
@@ -89,13 +82,6 @@ object Scans {
       .orderBy("doc_id")
   }
 
-  /** Schema-evolution scan: two parquet generations of `nation` — v1
-    * without `n_regionkey` (even keys), v2 with it (odd keys) — read as
-    * ONE table via `mergeSchema`; columns missing in a generation come
-    * back null. The at-rest complement of `set_union_byname` (which
-    * handles evolution between in-memory frames): a 100 TB table ingested
-    * over years ALWAYS spans schema versions, and the reader must
-    * reconcile footers rather than force a rewrite of old data. */
   /** ORC round-trip scan: nation written as ORC (the other major
     * columnar at-rest format — ORC readers/writers ship in Spark's core
     * distribution) and read back. Content must be IDENTICAL to the
@@ -104,7 +90,7 @@ object Scans {
     * checked. Same format-plurality story a 100 TB lake needs when
     * upstream teams standardize on different columnar formats. */
   def scanOrc(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
-    val dir = stagingDir("orc_nation", tag)
+    val dir = graft.Warehouse.scratch("orc_nation", tag)
     // unconditional overwrite, like every sibling scan fixture: an
     // exists() guard would silently reuse a partial dir from a crashed
     // write or stale rows from regenerated testdata
@@ -112,8 +98,15 @@ object Scans {
     spark.read.orc(dir).orderBy("n_nationkey")
   }
 
+  /** Schema-evolution scan: two parquet generations of `nation` — v1
+    * without `n_regionkey` (even keys), v2 with it (odd keys) — read as
+    * ONE table via `mergeSchema`; columns missing in a generation come
+    * back null. The at-rest complement of `set_union_byname` (which
+    * handles evolution between in-memory frames): a 100 TB table ingested
+    * over years ALWAYS spans schema versions, and the reader must
+    * reconcile footers rather than force a rewrite of old data. */
   def scanSchemaMerge(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
-    val dir = stagingDir("schema_merge_nation", tag)
+    val dir = graft.Warehouse.scratch("schema_merge_nation", tag)
     val v1 = new java.io.File(dir, "gen=1").toString
     val v2 = new java.io.File(dir, "gen=2").toString
     nation.filter(col("n_nationkey") % 2 === 0)
@@ -138,7 +131,7 @@ object Scans {
     * filtering on it straight off the scan. */
   def scanCsvMalformed(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val dir = stagingDir("csv_malformed", tag)
+    val dir = graft.Warehouse.scratch("csv_malformed", tag)
     val good = nation.select(concat_ws(",",
       col("n_nationkey"), col("n_name"), col("n_regionkey")).as("line"))
     val bad = spark.createDataFrame(Seq(
@@ -184,7 +177,7 @@ object Scans {
     * straight off the scan). */
   def scanJsonlMalformed(spark: SparkSession, nation: DataFrame, tag: String = ""): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val dir = stagingDir("jsonl_malformed", tag)
+    val dir = graft.Warehouse.scratch("jsonl_malformed", tag)
     val good = nation.select(concat(
       lit("""{"slno": """), col("n_nationkey"),
       lit(""", "name": """"), col("n_name"),

@@ -27,8 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[SyncTarget.truncateLoad]] of a snapshot store is its one write
   *    path, shared by `sync`'s publish and `upsert`'s load: one write job
   *    (a task per partition of the snapshot) staged to `path + ".next"`,
-  *    then promoted by rename ([[Promote]]), so a failed write leaves the
-  *    old table in place.
+  *    then promoted by rename ([[graft.Warehouse.promote]]), so a failed
+  *    write leaves the old table in place.
   */
 trait SyncSource {
   def read(spark: SparkSession): DataFrame
@@ -50,22 +50,6 @@ trait SyncTarget {
   def truncateLoad(snapshot: DataFrame): Unit
 }
 
-private object Promote {
-  /** Stage-then-promote publish shared by snapshot targets: the write job
-    * completes into `path + ".next"` BEFORE the target is touched, so the
-    * non-atomic delete+rename window holds only directory moves, never a
-    * partially-written table. */
-  def over(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    val staging = path + ".next"
-    write(staging)
-    val tgt = new org.apache.hadoop.fs.Path(path)
-    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(tgt, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), tgt),
-      s"failed to promote $staging over $path")
-  }
-}
-
 /** Parquet snapshot source — the harness stand-in for the Sheets reader. */
 final case class ParquetSource(path: String) extends SyncSource {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
@@ -76,7 +60,7 @@ final case class ParquetTarget(path: String) extends SyncTarget {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 
   def truncateLoad(snapshot: DataFrame): Unit =
-    Promote.over(snapshot.sparkSession, path)(Sinks.truncateLoad(snapshot, _))
+    graft.Warehouse.promote(snapshot.sparkSession, path)(Sinks.truncateLoad(snapshot, _))
 }
 
 /** All-string CSV source — the FAITHFUL analog of the reference's Sheets
@@ -325,12 +309,6 @@ object Connectors {
       .option("dbtable", table).option("driver", driver).load()
   }
 
-  /** Spark's built-in Derby dialect maps StringType to CLOB, so a NULL
-    * string cell is written as setNull(Types.CLOB) — which Derby rejects
-    * with 22005 against the VARCHAR columns the DML surface needs.
-    * Registering this dialect (ahead of the built-in; first canHandle
-    * wins) makes StringType VARCHAR end-to-end. Idempotent via lazy val;
-    * every JDBC connector entry point forces it. */
   /** Runs `body` on a fresh connection as ONE transaction: commits when
     * it returns; on any throwable rolls the whole transaction back as a
     * unit and rethrows — which also releases its row locks: an embedded
@@ -369,6 +347,12 @@ object Connectors {
     } finally st.close()
   }
 
+  /** Spark's built-in Derby dialect maps StringType to CLOB, so a NULL
+    * string cell is written as setNull(Types.CLOB) — which Derby rejects
+    * with 22005 against the VARCHAR columns the DML surface needs.
+    * Registering this dialect (ahead of the built-in; first canHandle
+    * wins) makes StringType VARCHAR end-to-end. Idempotent via lazy val;
+    * every JDBC connector entry point forces it. */
   private[sync] lazy val derbyVarcharDialect: Unit = {
     import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
     JdbcDialects.registerDialect(new JdbcDialect {
@@ -391,6 +375,6 @@ final case class CsvTarget(path: String) extends SyncTarget {
     spark.read.option("header", "true").csv(path)
 
   def truncateLoad(snapshot: DataFrame): Unit =
-    Promote.over(snapshot.sparkSession, path)(
+    graft.Warehouse.promote(snapshot.sparkSession, path)(
       snapshot.write.mode("overwrite").option("header", "true").csv(_))
 }

@@ -142,18 +142,34 @@ class HygieneSpec extends SparkSpec {
         sc.getPersistentRDDs.values.map(_.toString).mkString("; "))
   }
 
-  test("SparkSession.builder() is called only by Session.build and the sync CLI") {
-    // every harness and tool shares Session.build; SyncPipeline.main keeps
-    // its own builder because its SPARK_MASTER is a deployment setting
+  /** Paths (relative to src/main/scala) of the main sources containing `needle`. */
+  private def sourcesContaining(needle: String): Set[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val allowed = Set("graft/Session.scala", "graft/sync/SyncPipeline.scala")
     val files = java.nio.file.Files.walk(root)
     val hits = try files.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder()"))
+      .filter(f => java.nio.file.Files.readString(f).contains(needle))
       .map(f => root.relativize(f).toString.replace('\\', '/')).toSet
     finally files.close()
-    assert(hits.nonEmpty, s"scan found no builder at all under ${root.toAbsolutePath}")
+    assert(hits.nonEmpty, s"scan found no '$needle' at all under ${root.toAbsolutePath}")
+    hits
+  }
+
+  test("SparkSession.builder() is called only by Session.build and the sync CLI") {
+    // every harness and tool shares Session.build; SyncPipeline.main keeps
+    // its own builder because its SPARK_MASTER is a deployment setting
+    val allowed = Set("graft/Session.scala", "graft/sync/SyncPipeline.scala")
+    val hits = sourcesContaining("SparkSession.builder()")
     assert(hits.subsetOf(allowed), s"SparkSession.builder() outside Session.build: ${hits -- allowed}")
+  }
+
+  test("derived-data locations are decided only in Warehouse") {
+    // where a derived dataset or scratch dir lives is Warehouse.dir /
+    // Warehouse.scratch's decision; a second reader of either setting
+    // is a second naming scheme
+    Seq("spark.sql.warehouse.dir", "java.io.tmpdir").foreach { setting =>
+      val hits = sourcesContaining(setting)
+      assert(hits === Set("graft/Warehouse.scala"), s"$setting read outside Warehouse: $hits")
+    }
   }
 }

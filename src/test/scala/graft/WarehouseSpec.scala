@@ -254,4 +254,49 @@ class WarehouseSpec extends SparkSpec {
     })
     assert(res.passed, s"retain property sweep: $res")
   }
+
+  private def warehousePath(name: String) =
+    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir") + s"/$name")
+
+  test("a layout build that fails leaves nothing to serve: the next call builds it whole") {
+    val src = java.nio.file.Files.createTempDirectory("graft-layout")
+      .resolve("events.parquet").toString
+    (0L until 200L).map(i => (i, i % 11, s"t${i % 3}", i * 0.5,
+        new java.sql.Timestamp(1704067200000L + i * 3600000L)))
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+      .write.parquet(src)
+    val good = spark.read.parquet(src)
+    // same input files (so the same layout dir), but the layout's write
+    // job hits raise_error on one row
+    val bad = good.withColumn("ts", when(col("event_id") === 117L,
+      raise_error(lit("layout build failure")).cast("timestamp")).otherwise(col("ts")))
+    intercept[Exception](ops.PartitionedLayout.ensurePartitionedEvents(spark, bad))
+    val path = ops.PartitionedLayout.ensurePartitionedEvents(spark, good)
+    try assert(spark.read.parquet(path).count() === 200L)
+    finally {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  test("bucketed tables over a mixed-case source path clear the lowercased orphan dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bucketed").resolve("Data")
+    val (o, l) = (root.resolve("Orders.parquet").toString, root.resolve("Lineitem.parquet").toString)
+    Tables.orders(spark, sfDir).orderBy("o_orderkey").limit(50).coalesce(1).write.parquet(o)
+    val orders = spark.read.parquet(o)
+    Tables.lineitem(spark, sfDir)
+      .join(orders, col("l_orderkey") === col("o_orderkey"), "left_semi")
+      .coalesce(1).write.parquet(l)
+    val lineitem = spark.read.parquet(l)
+    // what a previous JVM leaves behind: saveAsTable wrote the LOWERCASED
+    // directory, and the in-memory catalog forgot the table
+    val orphan = warehousePath(s"orders_b_${Warehouse.srcTag(orders)}")
+    orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(orphan, "part-00000-orphan.parquet")).close()
+    val (on, ln) = ops.ScaleJoins.ensureBucketed(spark, orders, lineitem)
+    try {
+      assert(spark.table(on).count() === 50L)
+      assert(spark.table(ln).count() === lineitem.count())
+    } finally Seq(on, ln).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+  }
 }
