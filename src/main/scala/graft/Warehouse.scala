@@ -60,15 +60,51 @@ object Warehouse {
 
   /** Resolve-or-build for a derived dataset that is a warehouse PATH,
     * not a catalog table (ingest layouts, the Bloom epoch file): returns
-    * `<spark.sql.warehouse.dir>/<name>`; when that path is absent, `write`
+    * `<spark.sql.warehouse.dir>/<name>`. When that path is absent, `write`
     * builds it through [[promote]], so a build that fails leaves no
-    * directory for a later call to serve. */
-  def dir(spark: SparkSession, name: String)(write: String => Unit): String = {
+    * directory for a later call to serve, and the build stamps the
+    * staged directory with `source`'s [[sourceFingerprint]] in a
+    * `_`-prefixed file (which Spark's file listing skips). A later call
+    * serves the path only if `source` derives the same pair again, and
+    * throws [[IllegalStateException]] like [[ensure]] otherwise: a
+    * different derivation of the same files (same name) is refused, not
+    * answered with the first build's content. Serving is metadata-only.
+    * A directory with no stamp was not built here and is rebuilt. */
+  def dir(spark: SparkSession, name: String, source: DataFrame)(write: String => Unit): String = {
     val path = warehouse(spark).stripPrefix("file:") + s"/$name"
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      promote(spark, path)(write)
+    val stamp = new org.apache.hadoop.fs.Path(path, StampFile)
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val now = sourceFingerprint(spark, source)
+    if (fs.exists(stamp)) {
+      val in = fs.open(stamp)
+      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+        finally in.close()
+      checkFingerprint(name, (stored.head, stored(1)), now)
+    } else promote(spark, path) { staging =>
+      write(staging)
+      val out = fs.create(new org.apache.hadoop.fs.Path(staging, StampFile), true)
+      try out.write(s"${now._1}\n${now._2}\n".getBytes("UTF-8")) finally out.close()
+    }
     path
+  }
+
+  /** The file in a [[dir]] build holding its source's fingerprint pair. */
+  private val StampFile = "_source_fingerprint"
+
+  /** Throws naming `name` when the `now` (plan, files) fingerprint of
+    * the caller's source differs from the `built` one. */
+  private def checkFingerprint(name: String, built: (String, String),
+                               now: (String, String)): Unit = {
+    if (built._1 != now._1)
+      throw new IllegalStateException(
+        s"epoch collision on artifact '$name': the caller's source frame " +
+        s"is a DIFFERENT derivation than the one that built it " +
+        s"(plan fingerprint ${now._1} != stored ${built._1}). " +
+        "Bump the epoch for the new derivation, or pass the original frame.")
+    if (built._2 != now._2)
+      throw new IllegalStateException(
+        s"stale artifact '$name': its source files changed on disk since " +
+        "the build (length/mtime mismatch). Rebuild under a new epoch.")
   }
 
   /** Stage-then-promote publish: the write job completes into
@@ -175,17 +211,8 @@ object Warehouse {
       source.foreach { df =>
       if (spark.catalog.tableExists(metaName)) {
         val m = headWithStaleRetry(spark, metaName)
-        val (planFp, filesFp) = sourceFingerprint(spark, df)
-        if (m.getAs[String]("plan_fp") != planFp)
-          throw new IllegalStateException(
-            s"epoch collision on artifact '$name': the caller's source frame " +
-            s"is a DIFFERENT derivation than the one that built it " +
-            s"(plan fingerprint ${planFp} != stored ${m.getAs[String]("plan_fp")}). " +
-            "Bump the epoch for the new derivation, or pass the original frame.")
-        if (m.getAs[String]("files_fp") != filesFp)
-          throw new IllegalStateException(
-            s"stale artifact '$name': its source files changed on disk since " +
-            "the build (length/mtime mismatch). Rebuild under a new epoch.")
+        checkFingerprint(name, (m.getAs[String]("plan_fp"), m.getAs[String]("files_fp")),
+          sourceFingerprint(spark, df))
       }
       }
     }

@@ -756,14 +756,16 @@ object Dedup {
     * empty index (null filter) persists as a zero-length file so the
     * "nothing to reject" answer is ALSO remembered, not rebuilt. The
     * epoch dir is built through [[graft.Warehouse.dir]] (staged, then
-    * promoted), and the build's own call reads the file back like every
+    * promoted, stamped with the index's fingerprint, so another index
+    * over the same files at the same epoch throws instead of reading this
+    * filter), and the build's own call reads the file back like every
     * later one. */
   def ensureBloomIndex(spark: SparkSession, index: DataFrame, epoch: Long = 0L,
                        expectedItems: Long = 1L << 16,
                        numBits: Long = 1L << 20): Array[Byte] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = graft.Warehouse.dir(spark,
-        s"bloom_idx_${graft.Warehouse.srcTag(index)}/epoch=$epoch") { staging =>
+        s"bloom_idx_${graft.Warehouse.srcTag(index)}/epoch=$epoch", index) { staging =>
       val bytes = bloomBuild(index, expectedItems, numBits)
       val file = new org.apache.hadoop.fs.Path(staging, "bloom.bin")
       val out = file.getFileSystem(conf).create(file, true)

@@ -15,14 +15,14 @@ object Maintenance {
 
   /** Simulate a fragmented table (the state appends leave behind), then
     * compact it. Returns (fragmentedPath, compactedPath). Idempotent per
-    * source path. */
+    * source path; a different derivation of the same files throws. */
   def compactEvents(spark: SparkSession, events: DataFrame,
                     fragments: Int = 64, targetFiles: Int = 4): (String, String) = {
     val tag = graft.Warehouse.srcTag(events)
-    val frag = graft.Warehouse.dir(spark, s"events_frag_$tag") {
+    val frag = graft.Warehouse.dir(spark, s"events_frag_$tag", events) {
       events.repartition(fragments).write.mode("overwrite").parquet(_)
     }
-    val comp = graft.Warehouse.dir(spark, s"events_compact_$tag") {
+    val comp = graft.Warehouse.dir(spark, s"events_compact_$tag", events) {
       // compaction = read small files, write few large ones. repartition
       // (not coalesce): coalesce chains the upstream parallelism to the
       // target count; a real compactor also range-sorts here so min/max

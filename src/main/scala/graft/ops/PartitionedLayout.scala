@@ -12,9 +12,10 @@ object PartitionedLayout {
 
   /** One-time ingest: events re-laid-out hive-style by event date. The
     * layout dir is keyed by the SOURCE path so a different scale factor
-    * never reuses a stale fixture. */
+    * never reuses a stale fixture, and [[graft.Warehouse.dir]] refuses to
+    * serve it to a different derivation of the same files. */
   def ensurePartitionedEvents(spark: SparkSession, events: DataFrame): String =
-    graft.Warehouse.dir(spark, s"events_by_day_${graft.Warehouse.srcTag(events)}") {
+    graft.Warehouse.dir(spark, s"events_by_day_${graft.Warehouse.srcTag(events)}", events) {
       events
         .withColumn("event_date", to_date(col("ts")))
         .write.partitionBy("event_date").mode("overwrite").parquet(_)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[SyncTarget.merge]] receives the NEW snapshot — the source cast
   *    to the target's types, which is the old table with the changeset
   *    applied, read back from the diff's own key-partitioned shuffle of
-  *    the source — plus the lazy changeset. A snapshot store keeps the
+  *    the source — plus the changeset by name. A snapshot store keeps the
   *    default, which publishes the new snapshot with its one
   *    [[SyncTarget.truncateLoad]]; a BQ impl would instead translate the
   *    changeset to batched DML or a MERGE statement, as [[JdbcTarget]]
@@ -39,25 +39,30 @@ trait SyncTarget {
   def read(spark: SparkSession): DataFrame
 
   /** Publish `merged` (the new snapshot, in this target's schema) over
-    * the target. `changes` is the lazy keyed changeset from the old table
-    * to `merged`, for connectors that apply deltas (BQ DML) rather than
-    * overwrite snapshots; a connector that replays it materializes it
-    * itself. A snapshot store ignores it and replaces the table. */
-  def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame, key: String): Unit =
+    * the target. `changes` is the keyed changeset from the old table to
+    * `merged`, passed by name: only a connector that applies deltas (BQ
+    * DML, [[JdbcTarget]]) builds it, and materializes it itself. A
+    * snapshot store never evaluates it, so its plan is never even
+    * analysed, and replaces the table. */
+  def merge(spark: SparkSession, merged: DataFrame, changes: => DataFrame, key: String): Unit =
     truncateLoad(merged)
 
   /** R11 truncate-and-load: replace the whole table with `snapshot`. */
   def truncateLoad(snapshot: DataFrame): Unit
 }
 
-/** Parquet snapshot source — the harness stand-in for the Sheets reader. */
+/** Parquet snapshot source — the harness stand-in for the Sheets reader.
+  * Its schema comes from one driver-side footer read ([[graft.Tables.parquet]]),
+  * as the reference's comes from the header row it already fetched
+  * (syncquill.py:64): no schema-inference job. */
 final case class ParquetSource(path: String) extends SyncSource {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = graft.Tables.parquet(spark, path)
 }
 
-/** Parquet snapshot target: one [[Sinks]] write, staged then promoted. */
+/** Parquet snapshot target: read like [[ParquetSource]]; one [[Sinks]]
+  * write, staged then promoted. */
 final case class ParquetTarget(path: String) extends SyncTarget {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = graft.Tables.parquet(spark, path)
 
   def truncateLoad(snapshot: DataFrame): Unit =
     graft.Warehouse.promote(snapshot.sparkSession, path)(Sinks.truncateLoad(snapshot, _))
@@ -196,7 +201,7 @@ final case class JdbcTarget(url: String, table: String,
     *    byte-identical to its pre-merge state. Use when the target
     *    grades consistency over the reference's resume-from-half model.
     */
-  override def merge(spark: SparkSession, merged: DataFrame, changes: DataFrame,
+  override def merge(spark: SparkSession, merged: DataFrame, changes: => DataFrame,
                      key: String): Unit =
     merge(spark, merged, changes, key, atomic = false)
 

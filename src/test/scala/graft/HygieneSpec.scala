@@ -163,6 +163,13 @@ class HygieneSpec extends SparkSpec {
     assert(hits.subsetOf(allowed), s"SparkSession.builder() outside Session.build: ${hits -- allowed}")
   }
 
+  test("no sync verb file infers a parquet schema with spark.read.parquet") {
+    // schema inference is a Spark job per read; the verbs' parquet
+    // connectors read the schema from one footer (Tables.parquet)
+    val hits = sourcesContaining("read.parquet(").filter(_.startsWith("graft/sync/"))
+    assert(hits.isEmpty, s"read.parquet( in the sync engine: $hits")
+  }
+
   test("derived-data locations are decided only in Warehouse") {
     // where a derived dataset or scratch dir lives is Warehouse.dir /
     // Warehouse.scratch's decision; a second reader of either setting

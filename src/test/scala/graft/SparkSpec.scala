@@ -34,6 +34,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select(df.columns.map(c =>
       org.apache.spark.sql.functions.col(c).cast("string").as(c)).toIndexedSeq: _*)
 
+  /** The stage names (call sites) of each job `body` starts. */
+  def jobs(body: => Unit): Seq[Seq[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(e.stageInfos.map(_.name)); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftBus.drain(sc, 30000)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.GraftBus.drain(sc, 30000) } finally sc.removeSparkListener(listener)
+    seen.toArray(Array.empty[Seq[String]]).toSeq
+  }
+
   override def afterAll(): Unit = () // session shared across suites
 }
 

@@ -265,6 +265,30 @@ class SyncHostileSpec extends SparkSpec with TimeLimits {
     check("upsert")(SyncPipeline.upsert(spark, ParquetSource(src), t, "slno"))
   }
 
+  hostile("a changed sync runs 4 jobs, a no-change sync 3 and an upsert 3; no schema read runs one") {
+    // schemas come from one footer read on the driver: no job is called
+    // from the connectors, whose only jobs were schema inference
+    val n = 60000L
+    val (t, Seq(src)) = setup(typed(generated(n).filter(col("slno").cast("long") % 50 =!= 0)),
+      generated(n).coalesce(1))
+    def check(verb: String, want: Int)(run: => Unit): Unit = {
+      val ran = jobs(run)
+      assert(ran.size === want, s"$verb: jobs $ran")
+      assert(!ran.flatten.exists(_.contains("Connectors.scala")), s"$verb: jobs $ran")
+    }
+    check("changed sync", 4)(assert(sync(t, src) === SyncPipeline.SyncResult(1200, 1200, 0, 0)))
+    check("no-change sync", 3)(assert(sync(t, src) === SyncPipeline.SyncResult(0, 0, 0, 0)))
+    check("upsert", 3)(SyncPipeline.upsert(spark, ParquetSource(src), t, "slno"))
+    assert(rows(t.read(spark)) === rows(typed(spark.read.parquet(src))))
+  }
+
+  hostile("a snapshot target publishes without evaluating the changeset") {
+    val neu = base.init :+ (("4", "40", "4.50", "2024-01-04", "d"))
+    val (t, _) = setup(typed(sheet(base: _*)))
+    t.merge(spark, typed(sheet(neu: _*)), sys.error("built"), "slno")
+    assert(rows(t.read(spark)) === rows(typed(sheet(neu: _*))))
+  }
+
   hostile("at 200 shuffle partitions a sync and an upsert write at most 4 files") {
     // the CLI's own session keeps Spark's default of 200 partitions
     withConf("spark.sql.shuffle.partitions", "200") {

@@ -259,24 +259,67 @@ class WarehouseSpec extends SparkSpec {
     new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir") + s"/$name")
 
   test("a layout build that fails leaves nothing to serve: the next call builds it whole") {
-    val src = java.nio.file.Files.createTempDirectory("graft-layout")
-      .resolve("events.parquet").toString
-    (0L until 200L).map(i => (i, i % 11, s"t${i % 3}", i * 0.5,
-        new java.sql.Timestamp(1704067200000L + i * 3600000L)))
-      .toDF("event_id", "user_id", "event_type", "value", "ts")
-      .write.parquet(src)
-    val good = spark.read.parquet(src)
+    val good = spark.read.parquet(eventsFile())
     // same input files (so the same layout dir), but the layout's write
     // job hits raise_error on one row
     val bad = good.withColumn("ts", when(col("event_id") === 117L,
       raise_error(lit("layout build failure")).cast("timestamp")).otherwise(col("ts")))
     intercept[Exception](ops.PartitionedLayout.ensurePartitionedEvents(spark, bad))
     val path = ops.PartitionedLayout.ensurePartitionedEvents(spark, good)
-    try assert(spark.read.parquet(path).count() === 200L)
-    finally {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    try assert(spark.read.parquet(path).count() === 200L) finally deleted(path)
+  }
+
+  /** A 200-row events file of its own, so its layouts are this spec's. */
+  private def eventsFile(): String = {
+    val src = java.nio.file.Files.createTempDirectory("graft-layout")
+      .resolve("events.parquet").toString
+    (0L until 200L).map(i => (i, i % 11, s"t${i % 3}", i * 0.5,
+        new java.sql.Timestamp(1704067200000L + i * 3600000L)))
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+      .write.parquet(src)
+    src
+  }
+
+  private def deleted(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
+
+  test("a Bloom index built over half the index is not served for the whole index") {
+    val corpus = llm.Corpus.docCorpus(Tables.documents(spark, sfDir))
+    val epoch = System.currentTimeMillis() + 2000000000L
+    val bloomDir = warehousePath(s"bloom_idx_${Warehouse.srcTag(corpus)}/epoch=$epoch")
+    try {
+      llm.Dedup.ensureBloomIndex(spark, corpus.filter(col("doc_id") % 2 === 0), epoch)
+      val e = intercept[IllegalStateException](llm.Dedup.ensureBloomIndex(spark, corpus, epoch))
+      assert(e.getMessage.contains("epoch collision"), e.getMessage)
+    } finally deleted(bloomDir.toString)
+  }
+
+  test("a layout built over filtered events is not served for the whole events") {
+    val src = eventsFile()
+    val events = spark.read.parquet(src)
+    val path = ops.PartitionedLayout.ensurePartitionedEvents(spark,
+      events.filter(col("event_id") % 2 === 0))
+    try {
+      val e = intercept[IllegalStateException](
+        ops.PartitionedLayout.ensurePartitionedEvents(spark, events))
+      assert(e.getMessage.contains("epoch collision"), e.getMessage)
+      assert(spark.read.parquet(path).count() === 100L)
+    } finally deleted(path)
+  }
+
+  test("the same derivation is served again from its path, with no job") {
+    val src = eventsFile()
+    val path = ops.PartitionedLayout.ensurePartitionedEvents(spark, spark.read.parquet(src))
+    try {
+      // a frame built apart from the first: the stamp holds no object identity
+      val again = spark.read.parquet(src)
+      assert(jobs(assert(ops.PartitionedLayout.ensurePartitionedEvents(spark, again) === path))
+        === Nil)
+      assert(spark.read.parquet(path).count() === 200L)
+    } finally deleted(path)
   }
 
   test("bucketed tables over a mixed-case source path clear the lowercased orphan dir") {
