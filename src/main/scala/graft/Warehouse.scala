@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,11 +18,11 @@ import org.apache.spark.sql.functions._
   * [[ensure]] is the persisted EPOCH-ARTIFACT resolution every `ensure*`
   * builder shares (band index, IVF/PQ indexes, BPE merge model, DSIR
   * counts, quantile histogram, daily HLL, pagerank epochs, bucketed
-  * tables): if the table is already in the catalog, serve it; otherwise
-  * clear any ORPHANED warehouse directory first (the in-memory catalog
-  * forgets tables across JVMs but the warehouse files survive —
-  * `saveAsTable` would refuse or, worse, append over the corpse) and run
-  * the builder's write.
+  * tables): if the table is in the catalog and stamped, serve it;
+  * otherwise drop the table family and clear its warehouse directory
+  * first (the in-memory catalog forgets tables across JVMs but the
+  * warehouse files survive — `saveAsTable` would refuse or, worse,
+  * append over the corpse) and run the builder's write.
   *
   * Identifier case: `saveAsTable` lowercases the on-disk directory, so
   * the orphan delete must target the LOWERCASED path or a mixed-case
@@ -29,22 +30,23 @@ import org.apache.spark.sql.functions._
   * over the real corpse at write time. `ensure` normalizes the whole
   * name instead, so catalog name and directory always agree.
   *
-  * INTEGRITY (r8): resolve-by-name alone silently serves a STALE
-  * artifact when a caller derives a NEW frame from the SAME files
-  * without bumping the epoch — the srcTag-collision trap the old
-  * scaladoc could only warn about. `ensure` now records a build-time
-  * fingerprint of the SOURCE frame in a `<name>_meta` companion —
-  * (a) the canonicalized logical plan (catches a different DERIVATION
-  * of the same files: filters, column edits, different corpus mix) and
-  * (b) the input files' (path, length, mtime) statuses (catches the
-  * same path REWRITTEN in place) — and re-derives both at serve time,
-  * failing loudly on mismatch. Both fingerprints are metadata-only:
-  * zero data scanned on the serve path, so the check is free at 100 TB.
-  * The meta row also stores a CONTENT fingerprint of the artifact
-  * itself (row count + order-independent decimal-summed xxhash64 —
-  * the clustersFromPairs trick) for [[verifyContent]], the on-demand
-  * deep check a maintenance job runs against bit-rot; it scans the
-  * artifact, so it is not on the serve path by default.
+  * INTEGRITY: resolve-by-name alone silently serves a STALE artifact
+  * when a caller derives a NEW frame from the SAME files without
+  * bumping the epoch. Both resolvers therefore keep one STAMP file,
+  * `_source_fingerprint`, inside the dataset's own directory, holding a
+  * build-time fingerprint of the SOURCE frame — (a) the canonicalized
+  * logical plan (catches a different DERIVATION of the same files:
+  * filters, column edits, different corpus mix) and (b) the input
+  * files' (path, length, mtime) statuses (catches the same path
+  * REWRITTEN in place) — and re-derive both at serve time, failing
+  * loudly on mismatch. A serve reads the stamp and the source's file
+  * statuses on the driver: no Spark job, no data scanned. A dataset
+  * with no stamp did not finish its build here and is rebuilt. An
+  * [[ensure]] stamp also stores a CONTENT fingerprint of the table
+  * itself (row count + order-independent decimal-summed xxhash64 — the
+  * clustersFromPairs trick) for [[verifyContent]], the on-demand deep
+  * check a maintenance job runs against bit-rot; it scans the table,
+  * so it is not on the serve path.
   */
 object Warehouse {
 
@@ -60,48 +62,64 @@ object Warehouse {
 
   /** Resolve-or-build for a derived dataset that is a warehouse PATH,
     * not a catalog table (ingest layouts, the Bloom epoch file): returns
-    * `<spark.sql.warehouse.dir>/<name>`. When that path is absent, `write`
-    * builds it through [[promote]], so a build that fails leaves no
-    * directory for a later call to serve, and the build stamps the
-    * staged directory with `source`'s [[sourceFingerprint]] in a
-    * `_`-prefixed file (which Spark's file listing skips). A later call
-    * serves the path only if `source` derives the same pair again, and
-    * throws [[IllegalStateException]] like [[ensure]] otherwise: a
+    * `<spark.sql.warehouse.dir>/<name>`. When that path holds no stamp,
+    * `write` builds it through [[promote]], so a build that fails leaves
+    * no directory for a later call to serve, and the build stamps the
+    * staged directory with `source`'s [[sourceFingerprint]]. A later
+    * call serves the path only if `source` derives the same pair again,
+    * and throws [[IllegalStateException]] like [[ensure]] otherwise: a
     * different derivation of the same files (same name) is refused, not
-    * answered with the first build's content. Serving is metadata-only.
-    * A directory with no stamp was not built here and is rebuilt. */
+    * answered with the first build's content. Serving reads one small
+    * file on the driver and runs no Spark job. */
   def dir(spark: SparkSession, name: String, source: DataFrame)(write: String => Unit): String = {
-    val path = warehouse(spark).stripPrefix("file:") + s"/$name"
-    val stamp = new org.apache.hadoop.fs.Path(path, StampFile)
-    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = location(spark, name)
     val now = sourceFingerprint(spark, source)
-    if (fs.exists(stamp)) {
-      val in = fs.open(stamp)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-        finally in.close()
-      checkFingerprint(name, (stored.head, stored(1)), now)
-    } else promote(spark, path) { staging =>
-      write(staging)
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, StampFile), true)
-      try out.write(s"${now._1}\n${now._2}\n".getBytes("UTF-8")) finally out.close()
+    readStamp(spark, path) match {
+      case Some(built) => checkFingerprint(name, built, now)
+      case None => promote(spark, path) { staging =>
+        write(staging)
+        writeStamp(spark, staging, Seq(now._1, now._2))
+      }
     }
     path
   }
 
-  /** The file in a [[dir]] build holding its source's fingerprint pair. */
+  /** The file inside a built dataset's directory that holds its stamp:
+    * the source's (plan, files) [[sourceFingerprint]], then, for an
+    * [[ensure]] table, its built row count and [[contentFingerprint]].
+    * Its `_` prefix keeps it out of Spark's file listing. */
   private val StampFile = "_source_fingerprint"
 
+  /** The stamp lines of the dataset at `path`, None when it has none:
+    * a driver-side file read, no Spark job. */
+  private def readStamp(spark: SparkSession, path: String): Option[IndexedSeq[String]] = {
+    val stamp = new Path(path, StampFile)
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(stamp)) None
+    else {
+      val in = fs.open(stamp)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toIndexedSeq)
+      finally in.close()
+    }
+  }
+
+  private def writeStamp(spark: SparkSession, path: String, fields: Seq[Any]): Unit = {
+    val stamp = new Path(path, StampFile)
+    val out = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(stamp, true)
+    try out.write(fields.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+  }
+
   /** Throws naming `name` when the `now` (plan, files) fingerprint of
-    * the caller's source differs from the `built` one. */
-  private def checkFingerprint(name: String, built: (String, String),
+    * the caller's source differs from the stamp's `built` one. */
+  private def checkFingerprint(name: String, built: IndexedSeq[String],
                                now: (String, String)): Unit = {
-    if (built._1 != now._1)
+    if (built(0) != now._1)
       throw new IllegalStateException(
         s"epoch collision on artifact '$name': the caller's source frame " +
         s"is a DIFFERENT derivation than the one that built it " +
-        s"(plan fingerprint ${now._1} != stored ${built._1}). " +
+        s"(plan fingerprint ${now._1} != stored ${built(0)}). " +
         "Bump the epoch for the new derivation, or pass the original frame.")
-    if (built._2 != now._2)
+    if (built(1) != now._2)
       throw new IllegalStateException(
         s"stale artifact '$name': its source files changed on disk since " +
         "the build (length/mtime mismatch). Rebuild under a new epoch.")
@@ -114,10 +132,10 @@ object Warehouse {
   def promote(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     val staging = path + ".next"
     write(staging)
-    val tgt = new org.apache.hadoop.fs.Path(path)
+    val tgt = new Path(path)
     val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tgt, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), tgt),
+    require(fs.rename(new Path(staging), tgt),
       s"failed to promote $staging over $path")
   }
 
@@ -144,7 +162,7 @@ object Warehouse {
       else {
         val conf = spark.sparkContext.hadoopConfiguration
         fp(files.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
+          val p = new Path(f)
           val st = p.getFileSystem(conf).getFileStatus(p)
           s"$f:${st.getLen}:${st.getModificationTime}"
         }.mkString("\n"))
@@ -171,50 +189,39 @@ object Warehouse {
       Option(r.getDecimal(1)).map(_.toBigInteger.toString).getOrElse("0"))
   }
 
-  /** Resolve-or-build: returns the (normalized) table name; `write`
-    * runs only on first resolution and must create `name` (and any
-    * `companions`, e.g. an index's `<name>_model` table). When the
-    * builder passes its `source` frame, first resolution also writes
-    * the `<name>_meta` fingerprint companion, and every LATER
-    * resolution re-derives the source fingerprints and throws
+  /** Resolve-or-build: returns the (normalized) table name. `write`
+    * must create `name` (and any `companions`, e.g. an index's
+    * `<name>_model` table); it runs when the catalog has no `name`, or
+    * has one with no stamp (a build that died after its table write),
+    * after every table of the family and its directory is dropped. The
+    * build then stamps the table's directory with `source`'s
+    * fingerprints and the table's content fingerprint. Every later call
+    * re-derives the source fingerprints and throws
     * [[IllegalStateException]] if they differ from what built the
     * artifact — the loud failure that replaces the silent stale-serve
     * of an epoch collision. */
-  def ensure(spark: SparkSession, rawName: String, companions: Seq[String] = Nil,
-             source: Option[DataFrame] = None)(write: String => Unit): String = {
+  def ensure(spark: SparkSession, rawName: String, source: DataFrame,
+             companions: Seq[String] = Nil)(write: String => Unit): String = {
     val name = rawName.toLowerCase(java.util.Locale.ROOT)
-    val metaName = name + "_meta"
-    if (!spark.catalog.tableExists(name)) {
-      (name +: metaName +: companions.map(_.toLowerCase(java.util.Locale.ROOT)))
-        .foreach(dropOrphanDir(spark, _))
-      write(name)
-      source.foreach { df =>
-        val (planFp, filesFp) = sourceFingerprint(spark, df)
+    val family = name +: companions.map(_.toLowerCase(java.util.Locale.ROOT))
+    val now = sourceFingerprint(spark, source)
+    val stamp =
+      if (spark.catalog.tableExists(name)) readStamp(spark, location(spark, name)) else None
+    stamp match {
+      case Some(built) =>
+        // The session caches each catalog table's file listing, so an
+        // EXTERNAL rewrite of the artifact directory (another JVM
+        // re-running the builder mid-session) poisons every later read
+        // with FAILED_READ_FILE. Refresh the cached listing of the
+        // artifact and every companion before anything reads them; the
+        // refresh drops the cached relation and runs no job.
+        family.foreach(refreshIfExists(spark, _))
+        checkFingerprint(name, built, now)
+      case None =>
+        family.foreach(drop(spark, _))
+        write(name)
         val (rows, contentFp) = contentFingerprint(spark.table(name))
-        import spark.implicits._
-        Seq((planFp, filesFp, rows, contentFp))
-          .toDF("plan_fp", "files_fp", "built_rows", "content_fp")
-          .write.mode("overwrite").saveAsTable(metaName)
-      }
-    } else {
-      // SERVE path (r13 hardening): the session caches each catalog
-      // table's file listing, so an EXTERNAL rewrite of the artifact
-      // directory (another JVM re-running the builder mid-session)
-      // poisons every later read with FAILED_READ_FILE — it took down
-      // 5 driver tests in r13. Refresh the cached listing for the
-      // artifact and every companion before anything reads them; the
-      // refresh is metadata-only (drops the cached relation; the next
-      // read re-lists a handful of local files), so the serve path
-      // stays scan-free.
-      (name +: metaName +: companions.map(_.toLowerCase(java.util.Locale.ROOT)))
-        .foreach(refreshIfExists(spark, _))
-      source.foreach { df =>
-      if (spark.catalog.tableExists(metaName)) {
-        val m = headWithStaleRetry(spark, metaName)
-        checkFingerprint(name, (m.getAs[String]("plan_fp"), m.getAs[String]("files_fp")),
-          sourceFingerprint(spark, df))
-      }
-      }
+        writeStamp(spark, location(spark, name), Seq(now._1, now._2, rows, contentFp))
     }
     name
   }
@@ -225,53 +232,26 @@ object Warehouse {
   private def refreshIfExists(spark: SparkSession, name: String): Unit =
     if (spark.catalog.tableExists(name)) spark.catalog.refreshTable(name)
 
-  /** A stale-listing read failure: the cached file listing named a file
-    * that no longer exists (Spark 4 wraps it as error class
-    * FAILED_READ_FILE.FILE_NOT_EXIST over a FileNotFoundException). */
-  private[graft] def isStaleRead(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).exists { t =>
-      t.isInstanceOf[java.io.FileNotFoundException] ||
-        Option(t.getMessage).exists(m =>
-          m.contains("FAILED_READ_FILE") || m.contains("FileNotFoundException"))
-    }
-
-  /** Serve-path point read with the refresh-and-retry-once contract:
-    * even a just-refreshed listing can go stale between refresh and
-    * read if the artifact is rewritten in that window — retry once
-    * after a second refresh, then fail LOUDLY (never the bare
-    * FAILED_READ_FILE that poisoned the r13 driver session). */
-  private def headWithStaleRetry(spark: SparkSession, name: String) =
-    try spark.table(name).head()
-    catch {
-      case e: Throwable if isStaleRead(e) =>
-        spark.catalog.refreshTable(name)
-        try spark.table(name).head()
-        catch {
-          case e2: Throwable => throw new IllegalStateException(
-            s"artifact '$name' unreadable even after refresh-and-retry: " +
-            "its warehouse directory is being rewritten or is gone. " +
-            "Rebuild the artifact (drop the table and re-run its ensure*).", e2)
-        }
-    }
-
   /** On-demand DEEP integrity check: rescan artifact `name` and compare
-    * row count + content hash against the build-time meta row. Throws
-    * on mismatch; no-op (false) when the artifact has no meta (built
-    * before r8 or without a source). This is the maintenance-job tier —
-    * it reads the artifact, so it is deliberately NOT on the serve
-    * path. */
+    * its row count and content hash with its stamp. False when the
+    * catalog has no `name`; throws on a mismatch, and on a table whose
+    * directory holds no stamp (rewritten after its build, or not built
+    * by [[ensure]]). This is the maintenance-job tier — it reads the
+    * artifact, so it is deliberately NOT on the serve path. */
   def verifyContent(spark: SparkSession, rawName: String): Boolean = {
     val name = rawName.toLowerCase(java.util.Locale.ROOT)
-    val metaName = name + "_meta"
-    if (!spark.catalog.tableExists(metaName)) return false
-    refreshIfExists(spark, name); refreshIfExists(spark, metaName)
-    val m = headWithStaleRetry(spark, metaName)
-    val (rows, contentFp) = contentFingerprint(spark.table(name))
-    if (rows != m.getAs[Long]("built_rows") || contentFp != m.getAs[String]("content_fp"))
-      throw new IllegalStateException(
-        s"artifact '$name' content drift: built (rows=${m.getAs[Long]("built_rows")}, " +
-        s"fp=${m.getAs[String]("content_fp")}) vs now (rows=$rows, fp=$contentFp)")
-    true
+    spark.catalog.tableExists(name) && {
+      val built = readStamp(spark, location(spark, name)).getOrElse(
+        throw new IllegalStateException(s"artifact '$name' content drift: its " +
+          "directory holds no build stamp, so it was rewritten after its build"))
+      spark.catalog.refreshTable(name)
+      val (rows, contentFp) = contentFingerprint(spark.table(name))
+      if (rows.toString != built(2) || contentFp != built(3))
+        throw new IllegalStateException(
+          s"artifact '$name' content drift: built (rows=${built(2)}, fp=${built(3)}) " +
+          s"vs now (rows=$rows, fp=$contentFp)")
+      true
+    }
   }
 
   /** Epoch retention GC: among catalog tables starting with `prefix`,
@@ -282,7 +262,7 @@ object Warehouse {
     * keep-N decisions PER non-epoch name stem (the name with the epoch
     * token removed), keep each stem's `keepN` HIGHEST epochs, and drop
     * every table (and its warehouse directory) from older epochs.
-    * Companions (`_model`, `_meta`) carry the same epoch substring and
+    * Companions (`_model`) carry the same epoch substring and
     * form their own stems with identical epoch sets, so a family's
     * tables live and die together — and one corpus's newer epochs can
     * never doom another corpus's only artifact just because they share
@@ -291,10 +271,7 @@ object Warehouse {
   def retain(spark: SparkSession, prefix: String, keepN: Int): Seq[String] = {
     val doomed = retainPlan(
       spark.catalog.listTables().collect().map(_.name).toSeq, prefix, keepN)
-    doomed.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      dropOrphanDir(spark, t)
-    }
+    doomed.foreach(drop(spark, _))
     doomed
   }
 
@@ -322,12 +299,17 @@ object Warehouse {
     }.toSeq.sorted
   }
 
-  private def warehouse(spark: SparkSession): String =
-    spark.conf.get("spark.sql.warehouse.dir")
+  /** `<spark.sql.warehouse.dir>/<name>`, where `saveAsTable` writes a
+    * managed table and [[dir]] a path. */
+  private def location(spark: SparkSession, name: String): String =
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + s"/$name"
 
-  private def dropOrphanDir(spark: SparkSession, name: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(warehouse(spark) + s"/$name")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
+  /** Drops table `name` if the catalog has it and deletes its warehouse
+    * directory either way, orphaned or not. */
+  private def drop(spark: SparkSession, name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$name`")
+    val loc = new Path(location(spark, name))
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    ()
   }
 }

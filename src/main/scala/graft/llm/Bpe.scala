@@ -142,7 +142,7 @@ object Bpe {
     // the bit-equality contract (review finding r7)
     graft.Warehouse.ensure(spark,
       s"text_bpe_model_${graft.Warehouse.srcTag(documents)}_e${epoch}_m${nMerges}_t$topWords",
-      source = Some(documents)) {
+      source = documents) {
       name => bpeTrain(documents, nMerges, topWords)
         .write.mode("overwrite").saveAsTable(name)
     }

@@ -87,17 +87,19 @@ object Dedup {
     * the three exact-pair keys ~1 s each for a benefit that only exists
     * on replica-heavy data. */
   private val CollapseDupRatio = 0.5
-  /** DELIBERATE exception to the side-effect-free-builder house rule
-    * (cf. Graph.pagerankFrom's nTot comment): the probe executes one
-    * sketch aggregate at PLAN-CONSTRUCTION time, because the collapse
+  /** A DELIBERATE construction-time job of its own, beside the shuffle
+    * stages that every lazy `localCheckpoint` runs under AQE while the
+    * DataFrame is built (graph_ppr runs 26 such jobs): the probe executes
+    * one sketch aggregate at PLAN-CONSTRUCTION time, because the collapse
     * decision changes which plan gets built and a wrong default was a
     * measured 1-2 s/key regression in either direction. Callers that
     * already know their data skip it via the `collapse: Option[Boolean]`
     * hint on the pair cores (orderedDedup passes Some(false) — its
     * stage-2 input is duplicate-free by construction). Plan-only
-    * consumers (PlanDump) pay one sketch scan per dedup key; PREFER the
-    * explicit hint when you know the corpus, since the probe's ~5%-rsd
-    * sketch can flap either way right at the 0.5 threshold. The result
+    * consumers (`PlanCensus --dump`) pay one sketch scan per dedup key;
+    * PREFER the explicit hint when you know the corpus, since the
+    * probe's ~5%-rsd sketch can flap either way right at the 0.5
+    * threshold. The result
     * is memoized per (canonicalized plan, key) per JVM (r8 ADVICE):
     * three dedup keys share one corpus plan, so a census pass probes
     * once, not thrice, and repeat plan construction against the same
@@ -423,9 +425,9 @@ object Dedup {
     //
     // Collapsed mode: ONE exchange keyed on the text digest tags every
     // row with its group's min id and size; memb and reps then derive
-    // map-side from the same lazily-materialized checkpoint (house rule:
-    // multi-consumer frames checkpoint; lazy keeps plan construction
-    // side-effect-free). The earlier groupBy+two-join form shuffled the
+    // map-side from the same checkpoint (house rule: multi-consumer
+    // frames checkpoint; under AQE its exchange runs while the DataFrame
+    // is built). The earlier groupBy+two-join form shuffled the
     // corpus twice more and measured 2× slower on mostly-unique data.
     val (reps, membOpt) =
       if (!collapse.getOrElse(shouldCollapse(corpus, xxhash64(col("text")))))
@@ -531,43 +533,46 @@ object Dedup {
   }
 
   /** MinHash signatures: h_i(doc) = min over shingles of
-    * xxhash64(i ‖ shingle); LSH bands of `rowsPerBand` hashes; candidate
-    * pairs = docs sharing any (band, band-signature) bucket. Seeded,
+    * xxhash64(i ‖ shingle); LSH bands of 4 hashes; candidate pairs =
+    * docs sharing any (band, band-signature) bucket. Seeded,
     * reproducible (xxhash64 with fixed per-row seeds — no randomness).
     * Hash-derived → oracle-exempt; gated by DedupSpec invariants
     * (candidates ⊇ exact+near dup pairs, no false self-pairs). */
-  def minhashCandidates(corpus: DataFrame, numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    // explode shingles once and take the numHashes mins as MAP-SIDE partial
-    // aggregates — one shuffle of (doc, 16 longs). The nested-HOF
-    // alternative (array_min over transform per hash) gets inlined by
-    // CollapseProject and rebuilds the shingle array per hash function —
-    // O(numHashes) recomputation per row; this form is linear.
-    // signatures in ONE compiled pass per doc (graft.functions.MinHashSig,
-    // bit-identical to min-over-xxhash64(lit(i), sh)) — shuffle-free: the
-    // earlier explode + groupBy(min) form shuffled the entire exploded
-    // shingle table just to take per-doc mins.
-    val sig = corpus
-      .select(col("doc_id"),
-        graft.functions.TextExprs.minhashSig(
-          TextOps.shingles(TextOps.tokens(col("text")), 3), numHashes).as("sig"))
-      .filter(col("sig").isNotNull)
-    val banded = sig.select(col("doc_id"),
-      posexplode(array((0 until numBands).map(bnd =>
-        xxhash64((bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-          .map(i => element_at(col("sig"), i + 1)): _*)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
-      // both sides of the bucket self-join reuse the signatures;
-      // localCheckpoint (disk-backed, materialized once, auto-cleaned)
-      // instead of persist — same eviction-recompute + cache-leak
-      // rationale as the shingle table in [[ngramJaccardPairs]]
-      .localCheckpoint()
+  def minhashCandidates(corpus: DataFrame): DataFrame = {
+    // both sides of the bucket self-join reuse the signatures;
+    // localCheckpoint (disk-backed, materialized once, auto-cleaned)
+    // instead of persist — same eviction-recompute + cache-leak
+    // rationale as the shingle table in [[ngramJaccardPairs]]
+    val banded = minhashBands(corpus).localCheckpoint()
     val l = banded.select(col("doc_id").as("a_id"), col("band"), col("band_sig"))
     val r = banded.select(col("doc_id").as("b_id"), col("band"), col("band_sig"))
     l.join(r, Seq("band", "band_sig"))
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
       .orderBy("a_id", "b_id")
+  }
+
+  /** (doc_id, band, band_sig) rows of [[minhashCandidates]]' LSH bands,
+    * map-only: 16 xxhash64 MinHash signatures of each doc's word
+    * 3-shingles, xxhash64 over each run of 4. The streaming near-dup
+    * index (graft.streaming.StreamingNearDup) stores and probes the
+    * same rows. */
+  private[graft] def minhashBands(corpus: DataFrame): DataFrame = {
+    val (numHashes, rowsPerBand) = (16, 4)
+    // signatures in ONE compiled pass per doc (graft.functions.MinHashSig,
+    // bit-identical to min-over-xxhash64(lit(i), sh)) — shuffle-free: the
+    // earlier explode + groupBy(min) form shuffled the entire exploded
+    // shingle table just to take per-doc mins.
+    corpus
+      .select(col("doc_id"),
+        graft.functions.TextExprs.minhashSig(
+          TextOps.shingles(TextOps.tokens(col("text")), 3), numHashes).as("sig"))
+      .filter(col("sig").isNotNull)
+      .select(col("doc_id"),
+        posexplode(array((0 until numHashes / rowsPerBand).map(bnd =>
+          xxhash64((bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
+            .map(i => element_at(col("sig"), i + 1)): _*)): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
   }
 
   /** Affine MinHash constants (a_i, b_i): splitmix64(i) reduced mod P —
@@ -694,7 +699,7 @@ object Dedup {
   def ensureBandIndex(spark: SparkSession, index: DataFrame,
                       epoch: Long = 0L, buckets: Int = 8): String =
     graft.Warehouse.ensure(spark, s"dedup_band_idx_${graft.Warehouse.srcTag(index)}_e$epoch",
-        source = Some(index)) {
+        source = index) {
       name => minhashBandTable(index)
         .write.bucketBy(buckets, "band", "bs").sortBy("band", "bs")
         .mode("overwrite").saveAsTable(name)

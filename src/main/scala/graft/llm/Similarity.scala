@@ -291,7 +291,7 @@ object Similarity {
     // assignment table to a 64-cluster caller — wrong buckets, silently
     val base = s"sim_ivf_idx_${graft.Warehouse.srcTag(embeddings)}_e${epoch}_n${nClusters}_i$iters"
     graft.Warehouse.ensure(spark, base, companions = Seq(base + "_model"),
-        source = Some(embeddings)) { name =>
+        source = embeddings) { name =>
       val vs = doubled(embeddings).localCheckpoint()
       val cents = trainIvfCentroids(vs, nClusters, iters)
       import spark.implicits._
@@ -484,7 +484,7 @@ object Similarity {
     // wrong subDim in pqTopkPersisted — wrong neighbors, silently
     val base = s"sim_pq_idx_${graft.Warehouse.srcTag(embeddings)}_e${epoch}_s${subspaces}_c${codebookSize}_i$iters"
     graft.Warehouse.ensure(spark, base, companions = Seq(base + "_model"),
-        source = Some(embeddings)) { name =>
+        source = embeddings) { name =>
       val vs = doubled(embeddings).localCheckpoint()
       val cb = trainPqCodebooks(vs, subspaces, codebookSize, iters)
       import spark.implicits._

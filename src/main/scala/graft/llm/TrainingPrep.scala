@@ -627,7 +627,7 @@ object TrainingPrep {
     // from sharing a model (the r7 quantile-hist finding)
     graft.Warehouse.ensure(spark,
       s"dsir_counts_${graft.Warehouse.srcTag(base)}_e${epoch}_$targetLang",
-      source = Some(base)) {
+      source = base) {
       name => dsirCounts(base, targetLang).write.mode("overwrite").saveAsTable(name)
     }
 

@@ -173,7 +173,7 @@ object Aggregates {
                      epoch: Long = 0L): String =
     graft.Warehouse.ensure(spark,
       s"agg_hll_daily_${graft.Warehouse.srcTag(events)}_e$epoch",
-      source = Some(events)) {
+      source = events) {
       name => dailySketches(events).write.mode("overwrite").saveAsTable(name)
     }
 
@@ -410,7 +410,7 @@ object Aggregates {
     // must use distinct epochs (Warehouse.srcTag scaladoc)
     graft.Warehouse.ensure(spark,
       s"agg_quantile_hist_${graft.Warehouse.srcTag(base)}_e${epoch}_w$widthCents",
-      source = Some(base)) {
+      source = base) {
       name => centsHist(base, widthCents).write.mode("overwrite").saveAsTable(name)
     }
 
@@ -930,7 +930,7 @@ object Aggregates {
                      width: Int = 512, epoch: Long = 0L): String =
     graft.Warehouse.ensure(spark,
       s"agg_cm_sketch_${graft.Warehouse.srcTag(documents)}_w${width}_e$epoch",
-      source = Some(documents)) { name =>
+      source = documents) { name =>
       cmSketch(documents, width).write.mode("overwrite").saveAsTable(name)
     }
 

@@ -309,10 +309,10 @@ object Analytics {
         .as("total_dec"))
       // supplier-cardinality frame feeding both the row set and the
       // 1-row max — same two-consumer recompute class as q2/q11/q20.
-      // LAZY checkpoint: construction stays side-effect-free (plan-dump
-      // callers get a plan without running the fact aggregate); the
-      // first ACTION materializes it once and both consumers share the
-      // blocks. Caveat (all q2/q11/q15/q20/retention sites): local
+      // Checkpoint: both consumers share one materialization. It is not
+      // lazy under AQE: building the DataFrame runs every shuffle stage
+      // below it (the fact aggregate), so a plan-dump caller pays that
+      // aggregate. Caveat (all q2/q11/q15/q20/retention sites): local
       // checkpoints truncate lineage, so on a real cluster an executor
       // loss after materialization fails the job instead of recomputing
       // — at 100 TB prefer a persisted-table boundary for this frame.
@@ -611,8 +611,8 @@ object Analytics {
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("qty_sp"))
       // (part, supplier)-cardinality frame with two consumers (the
-      // dominance rows and the per-part total) — materialized once at
-      // first action (lazy: construction is side-effect-free, see q15)
+      // dominance rows and the per-part total) — materialized once; under
+      // AQE its shuffle stages run while the DataFrame is built (see q15)
       .localCheckpoint(eager = false)
     val ptot = shipped.groupBy(col("l_partkey").as("tp_partkey"))
       .agg(sum(col("qty_sp")).as("qty_p"))

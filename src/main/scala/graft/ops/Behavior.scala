@@ -74,9 +74,9 @@ object Behavior {
         floor(datediff(col("week"), col("cohort_week")) / 7).cast("long").as("weeks_since"))
       .agg(countDistinct(col("user_id")).as("active_users"))
       // (cohort × offset)-sized frame feeding both the week-0 base and
-      // the join — materialized once at first action instead of
-      // re-scanning the fact per consumer (lazy: construction stays
-      // side-effect-free; see Analytics.q15 for the executor-loss caveat)
+      // the join — materialized once instead of re-scanning the fact per
+      // consumer; under AQE its shuffle stages run while the DataFrame is
+      // built (see Analytics.q15, also for the executor-loss caveat)
       .localCheckpoint(eager = false)
     val base = matrix.filter(col("weeks_since") === 0)
       .select(col("cohort_week").as("b_week"), col("active_users").as("cohort_size"))

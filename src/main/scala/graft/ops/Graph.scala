@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over the corpus's synthesized host graph.
@@ -106,16 +106,17 @@ object Graph {
   def pagerankFrom(documents: DataFrame, iters: Int, nNodes: Int,
       init: Option[DataFrame], nDst: Int = -1,
       redistribute: Boolean = false): DataFrame = {
-    val scale = 1000000000000L // 1e12 rank units
     val (edges, nodes) = linkGraph(documents, nNodes, if (nDst > 0) nDst else nNodes)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // N stays a 1-row FRAME (no driver-side count(): operator builders
-    // are side-effect-free, house rule) broadcast into each update
+    // N stays a 1-row FRAME broadcast into each update, not a driver-side
+    // count(). Construction still runs jobs: under AQE each lazy
+    // checkpoint below runs every shuffle stage beneath it while the
+    // DataFrame is built (graph_pagerank: 26 construction jobs)
     val nTot = nodes.agg(count(lit(1)).as("n"))
 
     var ranks = init.map(_.select(col("node"), col("rank_units").as("rank")))
       .getOrElse(nodes.crossJoin(broadcast(nTot))
-        .select(col("node"), expr(s"$scale div n").as("rank")))
+        .select(col("node"), expr(s"$RankScale div n").as("rank")))
     for (_ <- 1 to iters) {
       // lazy checkpoint per iteration: lineage stays flat (iters chain
       // multiplicatively otherwise) and the next iteration's broadcast
@@ -139,30 +140,20 @@ object Graph {
     * would broadcast identically). Non-seeds can reach rank 0 exactly
     * (nothing teleports to them and floor division truncates) — the
     * spec pins that seeds strictly dominate the uniform prior and
-    * that some non-seed ranks differ from plain pagerank. Plan shape
-    * per iteration: identical to [[pagerank]] (broadcast dims onto
-    * the edge scan, one dst-keyed node-bounded aggregate). */
+    * that some non-seed ranks differ from plain pagerank. Each
+    * iteration is [[pagerank]]'s [[step]] with |S| as its totals and
+    * the seed share as its teleport. */
   def personalizedPagerank(documents: DataFrame, iters: Int = 3,
       nNodes: Int = 200, seedMod: Int = 17): DataFrame = {
-    val scale = 1000000000000L
     val (edges, nodes) = linkGraph(documents, nNodes)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val isSeed = col("node") % seedMod === 0
     val sTot = nodes.filter(isSeed).agg(count(lit(1)).as("ns"))
+    def seedShare(units: Long) = when(isSeed, expr(s"$units div ns")).otherwise(lit(0L))
     var ranks = nodes.crossJoin(broadcast(sTot))
-      .select(col("node"),
-        when(isSeed, expr(s"$scale div ns")).otherwise(lit(0L)).as("rank"))
+      .select(col("node"), seedShare(RankScale).as("rank"))
     for (_ <- 1 to iters) {
-      val contrib = edges
-        .join(broadcast(deg), "src")
-        .join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div deg").as("c"))
-      val incoming = contrib.groupBy("node").agg(sum(col("c")).as("inc"))
-      ranks = nodes.crossJoin(broadcast(sTot))
-        .join(incoming, Seq("node"), "left_outer")
-        .select(col("node"),
-          (when(isSeed, expr(s"${scale * 15 / 100} div ns")).otherwise(lit(0L))
-            + expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")).as("rank"))
+      ranks = step(edges, deg, nodes, sTot, ranks, teleport = seedShare(RankScale * 15 / 100))
         .localCheckpoint(eager = false)
     }
     ranks.select(col("node"), col("rank").as("rank_units"))
@@ -461,7 +452,7 @@ object Graph {
     // one (iters, nNodes) setting's — to every caller at that epoch
     graft.Warehouse.ensure(spark,
       s"graph_ranks_${graft.Warehouse.srcTag(documents)}_e${epoch}_i${iters}_n$nNodes",
-      source = Some(documents)) {
+      source = documents) {
       name => pagerank(documents, iters, nNodes)
         .write.bucketBy(buckets, "node").sortBy("node")
         .mode("overwrite").saveAsTable(name)
@@ -499,36 +490,42 @@ object Graph {
       .orderBy("direction", "degree")
   }
 
+  /** Fixed-point rank units of [[pagerank]] and its variants: 1e12. */
+  private val RankScale = 1000000000000L
+
   /** One un-checkpointed power iteration — split out so PlanAuditSpec
     * can audit the per-iteration physical shape (broadcast dims onto
     * edges, map-side partial contribution sum), which the checkpoint
     * boundary would otherwise hide from the final executed plan.
+    * `totals` is the 1-row frame crossed onto every node for `teleport`,
+    * each node's share of the 15% teleport mass: by default the uniform
+    * `15%·scale div n` over [[pagerankFrom]]'s node count, a seed-only
+    * share in [[personalizedPagerank]].
     * `redistribute` adds the damped dangling-mass share `D div n` to
     * every node's incoming sum (D = Σ rank over nodes with no
     * out-edge — an exact integer aggregate, 1-row broadcast; 0 on a
-    * dangling-free graph, making the flag a bit-exact no-op there). */
+    * dangling-free graph, making the flag a bit-exact no-op there);
+    * it reads `n` from `totals`. */
   private[graft] def step(edges: DataFrame, deg: DataFrame, nodes: DataFrame,
-      nTot: DataFrame, ranks: DataFrame,
-      redistribute: Boolean = false): DataFrame = {
-    val scale = 1000000000000L
+      totals: DataFrame, ranks: DataFrame, redistribute: Boolean = false,
+      teleport: Column = expr(s"${RankScale * 15 / 100} div n")): DataFrame = {
     val contrib = edges
       .join(broadcast(deg), "src")
       .join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
       .select(col("dst").as("node"), expr("rank div deg").as("c"))
     val incoming = contrib.groupBy("node").agg(sum(col("c")).as("inc"))
-    val base = nodes.crossJoin(broadcast(nTot))
+    val base = nodes.crossJoin(broadcast(totals))
       .join(incoming, Seq("node"), "left_outer")
     if (!redistribute)
       base.select(col("node"),
-        (expr(s"${scale * 15 / 100} div n")
-          + expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")).as("rank"))
+        (teleport + expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")).as("rank"))
     else {
       val dangling = ranks
         .join(deg.select(col("src").as("node")), Seq("node"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
       base.crossJoin(broadcast(dangling))
         .select(col("node"),
-          (expr(s"${scale * 15 / 100} div n")
+          (teleport
             + expr("(85 * (coalesce(inc, cast(0 as bigint)) + (dm div n))) div 100")).as("rank"))
     }
   }

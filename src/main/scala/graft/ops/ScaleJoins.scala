@@ -17,11 +17,12 @@ object ScaleJoins {
     * exchange entirely. Table names are keyed by the SOURCE path
     * ([[graft.Warehouse.srcTag]]) so different scale factors (or a
     * concurrently-running Verify) never collide on one warehouse
-    * directory; [[graft.Warehouse.ensure]] builds each side once. */
+    * directory; [[graft.Warehouse.ensure]] builds each side once and
+    * refuses to serve it to a different derivation of the same files. */
   def ensureBucketed(spark: SparkSession, orders: DataFrame, lineitem: DataFrame,
                      buckets: Int = 8): (String, String) = {
     def bucketed(prefix: String, df: DataFrame, key: String): String =
-      graft.Warehouse.ensure(spark, s"${prefix}_b_${graft.Warehouse.srcTag(df)}") {
+      graft.Warehouse.ensure(spark, s"${prefix}_b_${graft.Warehouse.srcTag(df)}", source = df) {
         df.write.bucketBy(buckets, key).sortBy(key).mode("overwrite").saveAsTable(_)
       }
     (bucketed("orders", orders, "o_orderkey"), bucketed("lineitem", lineitem, "l_orderkey"))

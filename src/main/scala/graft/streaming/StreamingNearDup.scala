@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.llm.TextOps
-
 /** Dedup-on-ingest: a streaming near-duplicate detector that maintains a
   * persistent MinHash band index and checks every incoming micro-batch
   * against it — the streaming form of `dedup_near_minhash`, and the shape
@@ -14,7 +12,8 @@ import graft.llm.TextOps
   * Per micro-batch (one `foreachBatch` job):
   *   1. signatures for the batch in a map-only pass (`minhash_sig` — no
   *      shuffle, see graft.functions.MinHashSig), banded into
-  *      (band, band_sig) bucket keys;
+  *      (band, band_sig) bucket keys by `Dedup.minhashBands`, the banding
+  *      of `dedup_near_minhash`;
   *   2. equi-join batch bands against the persisted index AND against
   *      the batch itself (earlier doc_id plays the index side) →
   *      candidate near-dups (within-bucket work only, the LSH
@@ -43,25 +42,6 @@ import graft.llm.TextOps
   */
 object StreamingNearDup {
 
-  val NumHashes = 16
-  val RowsPerBand = 4
-
-  /** (doc_id, band, band_sig) band rows for a static batch of documents —
-    * the same banding as Dedup.minhashCandidates, map-only. */
-  def bandRows(docs: DataFrame): DataFrame = {
-    val numBands = NumHashes / RowsPerBand
-    docs
-      .select(col("doc_id"),
-        graft.functions.TextExprs.minhashSig(
-          TextOps.shingles(TextOps.tokens(col("text")), 3), NumHashes).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"),
-        posexplode(array((0 until numBands).map(bnd =>
-          xxhash64((bnd * RowsPerBand until (bnd + 1) * RowsPerBand)
-            .map(i => element_at(col("sig"), i + 1)): _*)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
-  }
-
   /** Streaming writer: maintain the band index at `indexPath`, publish
     * candidate matches to `matchesPath` (both partitioned by batch_id,
     * replay-idempotent — see the object doc). */
@@ -69,7 +49,7 @@ object StreamingNearDup {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val bands = bandRows(batch).persist()
+      val bands = graft.llm.Dedup.minhashBands(batch).persist()
       try {
         // within-batch pairs: probe the batch against itself, the larger
         // doc_id probing the smaller (rename-based self-join — alias

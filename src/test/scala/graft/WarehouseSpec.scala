@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   *   3. in-place source-file rewrite fails the serve via the
   *      (path, length, mtime) half of the fingerprint;
   *   4. verifyContent catches artifact content drift against the
-  *      build-time (rows, Σxxhash64) meta;
+  *      build-time (rows, Σxxhash64) in the artifact's stamp;
   *   5. retain(prefix, keepN) drops all tables of older epochs —
-  *      companions included — and keeps the newest keepN serving. */
+  *      companions included — and keeps the newest keepN serving;
+  *   6. a serve reads the stamp on the driver and runs no Spark job, and
+  *      a table left without a stamp by a dead build is rebuilt. */
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,7 +56,7 @@ class WarehouseSpec extends SparkSpec {
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .write.mode("overwrite").parquet(path)
     val name = Warehouse.ensure(spark, "wh_spec_rewrite_e1",
-        source = Some(spark.read.parquet(path))) { n =>
+        source = spark.read.parquet(path)) { n =>
       spark.read.parquet(path).groupBy(col("v")).count()
         .write.mode("overwrite").saveAsTable(n)
     }
@@ -65,7 +67,7 @@ class WarehouseSpec extends SparkSpec {
       .write.mode("overwrite").parquet(path)
     spark.catalog.refreshByPath(path)
     val e = intercept[IllegalStateException] {
-      Warehouse.ensure(spark, name, source = Some(spark.read.parquet(path))) { n =>
+      Warehouse.ensure(spark, name, source = spark.read.parquet(path)) { n =>
         fail(s"builder must not run on an existing table $n")
       }
     }
@@ -74,12 +76,15 @@ class WarehouseSpec extends SparkSpec {
 
   test("verifyContent: green after build, loud after artifact content drift") {
     val docs = Tables.documents(spark, sfDir)
-    val name = Warehouse.ensure(spark, "wh_spec_content_e1", source = Some(docs)) { n =>
+    val name = Warehouse.ensure(spark, "wh_spec_content_e1", source = docs) { n =>
       docs.groupBy(col("lang")).count().write.mode("overwrite").saveAsTable(n)
     }
     assert(Warehouse.verifyContent(spark, name))
-    // corrupt the artifact in place (meta untouched) — the deep check
-    // must see the (rows, content hash) drift
+    // an append keeps the stamp: the (rows, content hash) compare sees it
+    Seq(("xx", 999L)).toDF("lang", "count").write.mode("append").saveAsTable(name)
+    val appended = intercept[IllegalStateException] { Warehouse.verifyContent(spark, name) }
+    assert(appended.getMessage.contains("content drift: built"), appended.getMessage)
+    // an overwrite replaces the directory, stamp included — still loud
     Seq(("xx", 999L)).toDF("lang", "count")
       .write.mode("overwrite").saveAsTable(name)
     val e = intercept[IllegalStateException] { Warehouse.verifyContent(spark, name) }
@@ -87,15 +92,15 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("serve path survives an external artifact rewrite behind a live session (r14)") {
-    // The r13 driver failure: another JVM rewrote the persisted BPE
-    // model's `_meta` directory mid-session; this session's catalog
+    // The r13 driver failure: another JVM rewrote a persisted BPE
+    // model's directory mid-session; this session's catalog
     // still held the OLD file listing, so every later read failed
     // FAILED_READ_FILE.FILE_NOT_EXIST for the rest of the session.
     // Simulate the rewrite at the FS level (same bytes, new paths —
     // invisible to this session's cache) and require the serve path to
     // refresh-and-serve instead of dying on the stale listing.
     val docs = Tables.documents(spark, sfDir)
-    val name = Warehouse.ensure(spark, "wh_spec_extrewrite_e1", source = Some(docs)) { n =>
+    val name = Warehouse.ensure(spark, "wh_spec_extrewrite_e1", source = docs) { n =>
       docs.groupBy(col("lang")).count().write.mode("overwrite").saveAsTable(n)
     }
     // read once so the session caches the artifact's file listing
@@ -104,45 +109,65 @@ class WarehouseSpec extends SparkSpec {
     // which is exactly the behavior under test below
     assert(spark.table(name).count() > 0)
     val conf = spark.sparkContext.hadoopConfiguration
-    Seq(name, name + "_meta").foreach { t =>
-      val dir = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = dir.getFileSystem(conf)
-      fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-")).foreach { s =>
-        fs.rename(s.getPath,
-          new org.apache.hadoop.fs.Path(dir, "rewrite-" + s.getPath.getName))
-      }
+    val dir = warehousePath(name)
+    val fs = dir.getFileSystem(conf)
+    fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-")).foreach { s =>
+      fs.rename(s.getPath, new org.apache.hadoop.fs.Path(dir, "rewrite-" + s.getPath.getName))
     }
     // precondition: the stale cached listing really does poison a raw
     // read (the r13 signature) — if Spark ever stops caching listings
     // this assert flags that the scenario no longer exercises anything
     val raw = intercept[Throwable] { spark.table(name).count() }
-    assert(Warehouse.isStaleRead(raw), s"expected stale-read failure, got $raw")
+    assert(isStaleRead(raw), s"expected stale-read failure, got $raw")
     // the hardened serve path refreshes before reading: same source,
-    // same content — it must serve cleanly, and the artifact and its
-    // meta must both be readable afterwards
-    val served = Warehouse.ensure(spark, name, source = Some(docs)) { _ =>
+    // same content — it must serve cleanly and pass the deep check
+    val served = Warehouse.ensure(spark, name, source = docs) { _ =>
       fail("rebuild must not run: the artifact exists and is intact")
     }
     assert(spark.table(served).count() > 0)
     assert(Warehouse.verifyContent(spark, served))
   }
 
+  test("an ensure serve reads its stamp and runs no job") {
+    val name = ops.Aggregates.ensureQuantileHist(spark, Tables.orders(spark, sfDir), epoch = 8103L)
+    // a frame built apart from the first: the stamp holds no object identity
+    val again = Tables.orders(spark, sfDir)
+    assert(jobs(assert(ops.Aggregates.ensureQuantileHist(spark, again, epoch = 8103L) === name))
+      === Nil)
+  }
+
+  test("a build that dies after its table write is rebuilt, not served to another derivation") {
+    val events = spark.read.parquet(eventsFile())
+    val even = events.filter(col("event_id") % 2 === 0)
+    def perUser(df: org.apache.spark.sql.DataFrame, n: String): Unit =
+      df.groupBy(col("user_id")).count().write.mode("overwrite").saveAsTable(n)
+    val name = "wh_spec_killed_e1"
+    try {
+      intercept[RuntimeException](Warehouse.ensure(spark, name, source = events) { n =>
+        perUser(events, n)
+        throw new RuntimeException("build killed after its table write")
+      })
+      var rebuilt = false
+      Warehouse.ensure(spark, name, source = even) { n => rebuilt = true; perUser(even, n) }
+      assert(rebuilt, "the unstamped table was served instead of rebuilt")
+      assert(spark.table(name).agg(sum(col("count"))).head().getLong(0) === 100L)
+      assert(Warehouse.verifyContent(spark, name))
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
+  }
+
   test("retain: older epochs dropped with their companions, newest keepN keep serving") {
     val src = Tables.nation(spark, sfDir)
     def build(epoch: Long): String =
       Warehouse.ensure(spark, s"wh_spec_gc_e$epoch",
-          companions = Seq(s"wh_spec_gc_e${epoch}_model"), source = Some(src)) { n =>
+          companions = Seq(s"wh_spec_gc_e${epoch}_model"), source = src) { n =>
         src.groupBy(col("n_regionkey")).count().write.mode("overwrite").saveAsTable(n)
         src.limit(1).write.mode("overwrite").saveAsTable(n + "_model")
       }
     val names = Seq(21L, 22L, 23L).map(build)
     val dropped = Warehouse.retain(spark, "wh_spec_gc", keepN = 2)
-    assert(dropped === Seq("wh_spec_gc_e21", "wh_spec_gc_e21_meta", "wh_spec_gc_e21_model"),
-      s"dropped $dropped")
+    assert(dropped === Seq("wh_spec_gc_e21", "wh_spec_gc_e21_model"), s"dropped $dropped")
     assert(!spark.catalog.tableExists("wh_spec_gc_e21"))
     assert(!spark.catalog.tableExists("wh_spec_gc_e21_model"))
-    assert(!spark.catalog.tableExists("wh_spec_gc_e21_meta"))
     // the kept epochs still serve — table readable AND fingerprint-clean
     Seq(names(1), names(2)).foreach { n =>
       assert(spark.table(n).count() > 0)
@@ -322,14 +347,21 @@ class WarehouseSpec extends SparkSpec {
     } finally deleted(path)
   }
 
-  test("bucketed tables over a mixed-case source path clear the lowercased orphan dir") {
+  /** 50 orders and their lineitems in files of their own, under a
+    * mixed-case path, so their bucketed tables are this spec's. */
+  private def bucketSources(): (String, String) = {
     val root = java.nio.file.Files.createTempDirectory("graft-bucketed").resolve("Data")
     val (o, l) = (root.resolve("Orders.parquet").toString, root.resolve("Lineitem.parquet").toString)
     Tables.orders(spark, sfDir).orderBy("o_orderkey").limit(50).coalesce(1).write.parquet(o)
-    val orders = spark.read.parquet(o)
     Tables.lineitem(spark, sfDir)
-      .join(orders, col("l_orderkey") === col("o_orderkey"), "left_semi")
+      .join(spark.read.parquet(o), col("l_orderkey") === col("o_orderkey"), "left_semi")
       .coalesce(1).write.parquet(l)
+    (o, l)
+  }
+
+  test("bucketed tables over a mixed-case source path clear the lowercased orphan dir") {
+    val (o, l) = bucketSources()
+    val orders = spark.read.parquet(o)
     val lineitem = spark.read.parquet(l)
     // what a previous JVM leaves behind: saveAsTable wrote the LOWERCASED
     // directory, and the in-memory catalog forgot the table
@@ -342,4 +374,28 @@ class WarehouseSpec extends SparkSpec {
       assert(spark.table(ln).count() === lineitem.count())
     } finally Seq(on, ln).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
+
+  test("bucketed tables are served job-free, and not to a filtered frame of the same files") {
+    val (o, l) = bucketSources()
+    val (on, ln) = ops.ScaleJoins.ensureBucketed(spark, spark.read.parquet(o), spark.read.parquet(l))
+    try {
+      // frames built apart from the first (their schema reads run jobs of their own)
+      val (orders, lineitem) = (spark.read.parquet(o), spark.read.parquet(l))
+      assert(jobs(assert(ops.ScaleJoins.ensureBucketed(spark, orders, lineitem) === ((on, ln))))
+        === Nil)
+      val e = intercept[IllegalStateException](ops.ScaleJoins.ensureBucketed(spark,
+        spark.read.parquet(o).filter(col("o_orderkey") % 2 === 0), spark.read.parquet(l)))
+      assert(e.getMessage.contains("epoch collision"), e.getMessage)
+    } finally Seq(on, ln).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+  }
+
+  /** A stale-listing read failure: the cached file listing named a file
+    * that no longer exists (Spark 4 wraps it as error class
+    * FAILED_READ_FILE.FILE_NOT_EXIST over a FileNotFoundException). */
+  private def isStaleRead(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).exists { t =>
+      t.isInstanceOf[java.io.FileNotFoundException] ||
+        Option(t.getMessage).exists(m =>
+          m.contains("FAILED_READ_FILE") || m.contains("FileNotFoundException"))
+    }
 }
